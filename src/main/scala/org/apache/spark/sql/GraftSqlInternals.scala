@@ -8,8 +8,10 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
   * (`Dataset.ofRows`). Spark exposes extension POINTS publicly
   * (`SparkSessionExtensions`, `experimental.extraStrategies` /
   * `extraOptimizations`) but not plan CONSTRUCTION, so every
-  * out-of-tree plan library ships exactly this shim. Nothing else in
-  * graft reaches into `private[sql]` space.
+  * out-of-tree plan library ships exactly this shim. The only other
+  * graft code in `private[sql]` space is [[GraftSqlBridge]] and the two
+  * `internalCreateDataFrame` wrappers in `org.apache.spark.sql.graft`:
+  * `StreamingFrame` and `DeferredFrame`.
   */
 object GraftSqlInternals {
 

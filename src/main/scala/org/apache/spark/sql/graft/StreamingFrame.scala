@@ -7,8 +7,9 @@ package org.apache.spark.sql.graft
   * which is `private[sql]`. This object therefore lives under the
   * `org.apache.spark.sql` namespace — the exact move the reference
   * connectors make (Delta's source code is homed in
-  * `org.apache.spark.sql.delta` for the same reason). Nothing else in
-  * the repo reaches into Spark internals this way; keep it that way.
+  * `org.apache.spark.sql.delta` for the same reason). The only other
+  * caller of that constructor is [[DeferredFrame]], next to this object;
+  * keep it that way.
   */
 object StreamingFrame {
 
