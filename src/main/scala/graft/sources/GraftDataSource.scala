@@ -362,7 +362,7 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
       location = new GraftHiddenPartitionedIndex(spark, path, groups, dirVers),
       partitionSchema = new StructType(),
       dataSchema = dataSchema,
-      bucketSpec = composedBucketSpec(HiddenPartitions.bucketOf(path),
+      bucketSpec = composedBucketSpec(PartitionedSnapshots.bucketOf(path),
         dirs.map { case (_, d) => (d, dirVers(d)) }, dataSchema),
       fileFormat = new ParquetFileFormat(),
       options = parameters)(spark)

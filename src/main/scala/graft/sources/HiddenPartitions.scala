@@ -2,8 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Or}
@@ -26,8 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * snapshot log; the transform spec lives in one root-level
   * `_graft_part_spec` file, so every reader and writer derives the
   * same routing. Partition values are pure integer/prefix forms
-  * (epoch DAY number, modulus, prefix) — timezone-free and
-  * URL-encoded by the shared dir naming.
+  * (epoch DAY number, modulus, prefix) — timezone-free. Init and the
+  * merge's routing pass run through the ONE router A26 shares
+  * ([[PartitionedSnapshots.initRouted]] / [[PartitionedSnapshots.route]],
+  * routing value = the current transform's `valueExpr`), which names
+  * every dir by one rule: `<epoch prefix><URL-encoded value>`.
   *
   * At 100 TB: directory pruning is O(|partitions|) driver arithmetic
   * before any file listing; a time-range query over a day-partitioned
@@ -360,26 +361,15 @@ object HiddenPartitions {
   // unchanged); epoch e ≥ 1 lands under `part.e<e>=` — a prefix the
   // plain A26 listing never matches, and one no URL-encoded VALUE can
   // collide with (the value is encoded after the '=')
-  private def enc(v: String) = java.net.URLEncoder.encode(v, "UTF-8")
-  private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
   private def epochPrefix(epoch: Int): String =
     if (epoch == 0) "part=" else s"part.e$epoch="
 
   private[graft] def epochDir(path: String, epoch: Int, value: String): String =
-    Paths.get(path, epochPrefix(epoch) + enc(value)).toString
+    PartitionedSnapshots.valueDir(path, epochPrefix(epoch), value)
 
   /** Committed partition values of one epoch (root dir listing). */
-  private[graft] def epochValues(path: String, epoch: Int): Seq[String] = {
-    val root = Paths.get(path)
-    if (!Files.isDirectory(root)) return Seq.empty
-    val s = Files.list(root)
-    val names = try s.iterator.asScala.map(_.getFileName.toString).toList
-      finally s.close()
-    val pfx = epochPrefix(epoch)
-    names.filter(n => n.startsWith(pfx) &&
-        (epoch > 0 || !n.startsWith("part.e")))
-      .map(n => dec(n.stripPrefix(pfx))).sorted
-  }
+  private[graft] def epochValues(path: String, epoch: Int): Seq[String] =
+    PartitionedSnapshots.valuesUnder(path, epochPrefix(epoch))
 
   /** Every epoch's (transform, (value, dir) list), epoch-ordered —
     * the unit the connector, the DML router, and the merge walk. */
@@ -446,22 +436,6 @@ object HiddenPartitions {
       s"graft: hidden-partition source column '$c' must be non-null " +
         "(a null row has no partition home)")
 
-  // bucket-under-partition composition (A50 under A49): one root-level
-  // sidecar; every partition's per-dir snapshot table is created with
-  // this bucket spec, and the per-table spec then self-preserves
-  // through every later write (stageData routes by it)
-  private def bucketPath(path: String) = Paths.get(path, "_graft_part_bucket")
-
-  /** The root's bucket-under-partition spec, if composed at init. */
-  def bucketOf(path: String): Option[(String, Int)] = {
-    val p = bucketPath(path)
-    if (!Files.exists(p)) None
-    else new String(Files.readAllBytes(p), "UTF-8").trim.split("\t") match {
-      case Array(c, n) => Some((c, n.toInt))
-      case _ => None
-    }
-  }
-
   /** Initialize a hidden-partitioned table: route `df` by the
     * transform, KEEPING the source column in the data files, open a
     * snapshot log per partition, and record the spec at the root.
@@ -479,38 +453,11 @@ object HiddenPartitions {
       s"graft: transform column '${transform.col}' not in ${df.columns.mkString(", ")}")
     require(!df.columns.contains("part"),
       "graft: a column named 'part' collides with the partition dirs")
-    bucketBy.foreach { case (c, _) => require(df.columns.contains(c),
-      s"graft: bucket column '$c' not in ${df.columns.mkString(", ")}") }
     requireNoNulls(df, transform.col)
-    bucketBy match {
-      case None =>
-        df.withColumn("part", transform.valueExpr)
-          .write.partitionBy("part").parquet(path)
-        Files.write(specPath(path), transform.encode.getBytes("UTF-8"))
-        val vals = PartitionedSnapshots.partitions(path)
-        // per-dir log bootstraps are independent — overlap them (Par)
-        Par.foreach(spark, vals)(v => Snapshots.init(spark,
-          PartitionedSnapshots.partitionDir(path, v)))
-        vals
-      case Some((c, n)) =>
-        // one bucketed bootstrap per partition value: the value list is
-        // bounded by the partition count (the same driver-side bound
-        // the A26 layout already lives with), and each bootstrap routes
-        // its slice through the shared bucketed staging
-        Files.createDirectories(Paths.get(path))
-        val vals = df.select(transform.valueExpr.as("__part"))
-          .distinct().collect().map(_.getString(0)).sorted.toIndexedSeq
-        // per-value bucketed bootstraps write DISJOINT dirs — overlap
-        Par.foreach(spark, vals) { v =>
-          Snapshots.writeBucketedVersioned(spark,
-            epochDir(path, 0, v),
-            df.filter(transform.valueExpr === v), c, n)
-          ()
-        }
-        Files.write(bucketPath(path), s"$c\t$n".getBytes("UTF-8"))
-        Files.write(specPath(path), transform.encode.getBytes("UTF-8"))
-        vals
-    }
+    val vals = PartitionedSnapshots.initRouted(spark, path, df,
+      transform.valueExpr, epochDir(path, 0, _), None, bucketBy)
+    Files.write(specPath(path), transform.encode.getBytes("UTF-8"))
+    vals
   }
 
   /** r15 (the r14 verdict's item 4) — lay down the hidden layout
@@ -528,7 +475,7 @@ object HiddenPartitions {
       s"graft: bucket column '$c' IS the transform column") }
     Files.createDirectories(Paths.get(path))
     bucketBy.foreach { case (c, n) =>
-      Files.write(bucketPath(path), s"$c\t$n".getBytes("UTF-8")) }
+      PartitionedSnapshots.recordBucketSpec(path, c, n) }
     // the declared schema lets a read (incl. a MERGE target resolution)
     // answer BEFORE any directory exists; inert once dirs bootstrap
     schema.foreach(sc =>
@@ -788,60 +735,13 @@ object HiddenPartitions {
         }
       }
     }
-    // PASS 2 — genuinely new (or moved) keys: route by the current transform
-    val existing = epochValues(path, currentEpoch).toSet
-    // one aggregate yields the touched values WITH their row counts —
-    // the per-new-value `slice.isEmpty` probe was an action per dir
-    val touchedCounts = remaining.withColumn("__part", current.valueExpr)
-      .groupBy("__part").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val touched = touchedCounts.keys.toArray
-    // per-value slices bootstrap/merge into DISJOINT dirs — overlap
-    Par.foreach(spark, touched.sorted.toIndexedSeq) { v =>
-      val slice = remaining.filter(current.valueExpr === v)
-      val dir = epochDir(path, currentEpoch, v)
-      if (!existing.contains(v)) {
-        // r16 (r15 advice): groupBy-count groups are always ≥ 1 — a
-        // value with no remaining rows never enters touchedCounts, so
-        // no zero-count guard is needed here
-        bucketOf(path) match {
-          // composed layout: a NEW partition bootstraps bucketed too,
-          // so the whole table keeps the exchange-free join property
-          case Some((c, n)) =>
-            require(txn.isEmpty, s"graft: a txn-marked merge cannot " +
-              s"bootstrap NEW bucketed partition '$v' — create it " +
-              "first (merge without the mark), then merge idempotently")
-            val r = (dir, Snapshots.writeBucketedVersioned(spark, dir, slice, c, n))
-            results.synchronized { results(v) = r }
-          case None if txn.nonEmpty =>
-            // bootstrap WITH the mark — crash-idempotent (a replay of
-            // a half-bootstrapped attempt adopts or replaces its own
-            // staged files, never doubles them)
-            val (app, ver) = txn.get
-            val r = (dir, Snapshots.appendVersionedIdempotent(
-              spark, dir, slice, app, ver))
-            results.synchronized { results(v) = r }
-          case None =>
-            Files.createDirectories(Paths.get(dir))
-            val stage = dir + "/init"
-            slice.write.parquet(stage)
-            val st = Files.list(Paths.get(stage))
-            try st.iterator.asScala.filter(_.toString.endsWith(".parquet"))
-              .foreach(p => Files.move(p,
-                Paths.get(dir, p.getFileName.toString)))
-            finally st.close()
-            val walk = Files.walk(Paths.get(stage))
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => Files.deleteIfExists(p))
-            finally walk.close()
-            val r = (dir, Snapshots.init(spark, dir))
-            results.synchronized { results(v) = r }
-        }
-      } else if (touchedCounts(v) > 0L) {
-        val r = (dir, upsert(dir, slice))
-        results.synchronized { results(v) = r }
-      }
-    }
+    // PASS 2 — genuinely new (or moved) keys route by the current
+    // transform through the shared router (one aggregate for the
+    // touched values and every dir's key summary)
+    PartitionedSnapshots.route(spark, remaining, current.valueExpr,
+      epochDir(path, currentEpoch, _), None,
+      PartitionedSnapshots.bucketOf(path), keyCols, mor, txn)
+      .foreach { case (v, r) => results(v) = r }
     results.toMap
   }
 
@@ -997,12 +897,8 @@ class GraftHiddenPartitionedIndex(spark: SparkSession, path: String,
     // the ROOT (no partition routing) — check there too, or the rows
     // silently vanish from every read (defense for sessions without
     // the extensions, whose DML rule refuses the insert up front)
-    val rootStrays = {
-      val s = Files.list(Paths.get(path))
-      try s.iterator.asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toList
-      finally s.close()
-    }
+    val rootStrays = Snapshots.listDir(Paths.get(path)).map(_.toString)
+      .filter(_.endsWith(".parquet"))
     val strays = rootStrays ++
       partitionDirs.flatMap { case (_, d) => Snapshots.strayFiles(d) }
     if (strays.nonEmpty) throw new IllegalStateException(

@@ -1,9 +1,9 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
 import org.apache.spark.sql.functions._
 
 /** A26 — HIVE-PARTITIONED versioned tables: the partition column routes
@@ -29,40 +29,47 @@ import org.apache.spark.sql.functions._
   * The partition column itself is stored in the DIRECTORY NAME (hive
   * layout), not in the data files; reads restore it as a literal.
   * Demonstration contract: a STRING partition column of bounded
-  * cardinality (the hive-partitioning assumption), values URL-encoded
-  * into directory names.
+  * cardinality (the hive-partitioning assumption).
+  *
+  * This object also holds the ONE partition router both layouts share
+  * ([[HiddenPartitions]] routes by a transform's value instead of a
+  * column): [[initRouted]] and [[route]] take a routing-value column and
+  * a value → dir function, and every writer and reader names a dir by
+  * one rule — `<prefix><URL-encoded value>` ([[valueDir]] /
+  * [[valuesUnder]]). A NULL routing value has no dir and is refused.
   */
 object PartitionedSnapshots {
 
-  private def enc(v: String): String =
-    java.net.URLEncoder.encode(v, "UTF-8")
-  private def dec(s: String): String =
-    java.net.URLDecoder.decode(s, "UTF-8")
+  /** The one value → dir naming rule of every partitioned root:
+    * `<prefix><URL-encoded value>` — `part=` for hive dirs and
+    * epoch-0 hidden dirs, `part.e<k>=` for later hidden epochs. */
+  private[graft] def valueDir(path: String, prefix: String,
+      value: String): String =
+    Paths.get(path, prefix + java.net.URLEncoder.encode(value, "UTF-8")).toString
 
-  private def partDir(path: String, value: String) =
-    Paths.get(path, s"part=${enc(value)}")
+  /** The decoded values of the `<prefix>…` dirs under `path` — a
+    * listing of the table root, never of data files. */
+  private[graft] def valuesUnder(path: String, prefix: String): Seq[String] =
+    if (!Files.isDirectory(Paths.get(path))) Seq.empty
+    else Snapshots.listDir(Paths.get(path)).map(_.getFileName.toString)
+      .filter(_.startsWith(prefix))
+      .map(n => java.net.URLDecoder.decode(n.stripPrefix(prefix), "UTF-8"))
+      .sorted
 
   /** A partition's table directory (for the connector's file index). */
   private[graft] def partitionDir(path: String, value: String): String =
-    partDir(path, value).toString
+    valueDir(path, "part=", value)
 
-  /** Committed partition values, decoded from the directory names —
-    * a directory listing of the table root, never of data files. */
-  def partitions(path: String): Seq[String] = {
-    val root = Paths.get(path)
-    if (!Files.isDirectory(root)) return Seq.empty
-    val s = Files.list(root)
-    try s.iterator.asScala.toList finally s.close()
-  }.map(_.getFileName.toString).filter(_.startsWith("part="))
-    .map(n => dec(n.stripPrefix("part="))).sorted
+  /** Committed partition values, decoded from the directory names. */
+  def partitions(path: String): Seq[String] = valuesUnder(path, "part=")
 
-  // bucket-under-partition composition (A50 under A26, r14 — the same
-  // root-level sidecar the hidden layout carries): every partition's
-  // per-dir snapshot table is created with this bucket spec, and the
-  // per-table `#bucketspec` manifest line then self-preserves through
-  // every later write (Snapshots.stageData routes by it). This is the
-  // 100 TB design point — date-partitioned + join-key-bucketed facts —
-  // so the A50 exchange elimination reaches the flagship layout.
+  // bucket-under-partition composition (A50 under A26 and A49, r14):
+  // every partition's per-dir snapshot table is created with this
+  // root-level bucket spec, and the per-table `#bucketspec` manifest
+  // line then self-preserves through every later write
+  // (Snapshots.stageData routes by it). This is the 100 TB design point
+  // — date-partitioned + join-key-bucketed facts — so the A50 exchange
+  // elimination reaches the flagship layout.
   private def bucketPath(path: String) = Paths.get(path, "_graft_part_bucket")
 
   /** The root's bucket-under-partition spec, if composed at init. */
@@ -75,56 +82,78 @@ object PartitionedSnapshots {
     }
   }
 
-  /** Initialize: route `df` into per-partition directories (one
-    * distributed partitioned write — the partition column leaves the
-    * data files and becomes the directory name) and open a snapshot
-    * log in each. Returns the partition values created.
-    * `bucketBy` composes A50 UNDER the partitions: every partition's
-    * own snapshot table is hash-bucketed on the given column, the spec
-    * recorded at the root, so a partition-pruned co-bucketed join
-    * plans with ZERO exchange (the date-then-key fact layout).
+  /** Initialize: route `df` into per-partition directories (the
+    * partition column leaves the data files and becomes the directory
+    * name) and open a snapshot log in each. Returns the partition
+    * values created. `bucketBy` composes A50 UNDER the partitions:
+    * every partition's own snapshot table is hash-bucketed on the given
+    * column, the spec recorded at the root, so a partition-pruned
+    * co-bucketed join plans with ZERO exchange (the date-then-key fact
+    * layout). NULL partition values refuse (see [[initRouted]]).
     */
   def init(spark: SparkSession, path: String, df: DataFrame,
       partCol: String, bucketBy: Option[(String, Int)] = None): Seq[String] = {
     require(partitions(path).isEmpty, s"$path already initialized")
+    bucketBy.foreach { case (c, _) => require(c != partCol,
+      s"graft: bucket column '$c' IS the partition column") }
+    initRouted(spark, path, df, col(s"`$partCol`").cast("string"),
+      partitionDir(path, _), Some(partCol), bucketBy)
+  }
+
+  private def refuseNull(value: Column): Nothing =
+    throw new IllegalArgumentException(s"graft: NULL '$value' values " +
+      "cannot route to a partition dir — filter them out or use a " +
+      "default value")
+
+  /** The router's init, shared by both layouts: route `df` by `value`
+    * into the dirs `dirOf` names (`dropCol` leaves the data files) and
+    * open a snapshot log in each. A NULL value refuses before any
+    * partition dir is written. Returns the values created, sorted.
+    *  - plain root: ONE distributed partitioned write into a staging
+    *    dir, then each written dir MOVES to its router name (Spark's own
+    *    path escaping never names a table dir) — no extra job;
+    *  - bucketed root: one bucketed bootstrap per value (the value list
+    *    is bounded by partition cardinality), the spec recorded first.
+    */
+  private[sources] def initRouted(spark: SparkSession, path: String,
+      df: DataFrame, value: Column, dirOf: String => String,
+      dropCol: Option[String], bucketBy: Option[(String, Int)]): Seq[String] = {
     bucketBy match {
-      case None =>
-        // one distributed write; spark's own hive layout (part=value dirs)
-        df.withColumn(partCol, col(partCol).cast("string"))
-          .withColumnRenamed(partCol, "part")
-          .write.partitionBy("part").parquet(path)
-        val vals = partitions(path)
-        // per-dir log bootstraps are independent — overlap them (Par)
-        Par.foreach(spark, vals)(v =>
-          Snapshots.init(spark, partDir(path, v).toString))
-        vals
       case Some((c, n)) =>
-        require(c != partCol,
-          s"graft: bucket column '$c' IS the partition column")
         require(df.columns.contains(c),
           s"graft: bucket column '$c' not in ${df.columns.mkString(", ")}")
-        // one bucketed bootstrap per partition value: the value list is
-        // bounded by partition cardinality (the hive assumption), and
-        // each bootstrap routes its slice through the shared bucketed
-        // staging, which tags every file with its `_NNNNN` bucket id
-        Files.createDirectories(Paths.get(path))
-        val routed = df.withColumn(partCol, col(partCol).cast("string"))
-        // r15 (advice): the per-value equality slices below silently
-        // DROP null-partition rows (and a null NPEs the sort) — refuse
-        // loudly, exactly like HiddenPartitions.requireNoNulls; the
-        // non-bucketed branch keeps Spark's __HIVE_DEFAULT_PARTITION__
-        require(routed.filter(col(partCol).isNull).isEmpty,
-          s"graft: NULL '$partCol' values cannot route to a bucketed " +
-            "partition dir — filter them out or use a default value")
-        val vals = routed.select(col(partCol)).distinct()
-          .collect().map(_.getString(0)).sorted.toIndexedSeq
+        // one collect answers both the value list and the NULL refusal
+        val vals = df.select(value).distinct().collect()
+          .map(_.getString(0)).toIndexedSeq
+        if (vals.contains(null)) refuseNull(value)
+        recordBucketSpec(path, c, n)
         // per-value bucketed bootstraps write DISJOINT dirs — overlap
         Par.foreach(spark, vals) { v =>
-          Snapshots.writeBucketedVersioned(spark, partDir(path, v).toString,
-            routed.filter(col(partCol) === v).drop(partCol), c, n)
+          Snapshots.writeBucketedVersioned(spark, dirOf(v),
+            df.filter(value === v).drop(dropCol.toSeq: _*), c, n)
           ()
         }
-        Files.write(bucketPath(path), s"$c\t$n".getBytes("UTF-8"))
+        vals.sorted
+      case None =>
+        // staged names are "v" + the URL-encoded value: ASCII only, and
+        // NULL is the one value Spark writes as its default-partition
+        // dir (it writes "" there too)
+        val stage = Paths.get(path, "_graft_init_stage")
+        val vals = try {
+          df.withColumn("__v", concat(lit("v"), url_encode(value)))
+            .drop(dropCol.toSeq: _*)
+            .write.partitionBy("__v").parquet(stage.toString)
+          val written = Snapshots.listDir(stage).filter(Files.isDirectory(_))
+            .map(p => p -> unescapePathName(p.getFileName.toString.stripPrefix("__v=")))
+          if (written.exists(!_._2.startsWith("v"))) refuseNull(value)
+          written.map { case (p, n) =>
+            val v = java.net.URLDecoder.decode(n.tail, "UTF-8")
+            Files.move(p, Paths.get(dirOf(v)))
+            v
+          }.sorted
+        } finally org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+        // per-dir log bootstraps are independent — overlap them (Par)
+        Par.foreach(spark, vals)(v => Snapshots.init(spark, dirOf(v)))
         vals
     }
   }
@@ -146,7 +175,7 @@ object PartitionedSnapshots {
     * partition column restored as a literal. */
   def readPartition(spark: SparkSession, path: String, partCol: String,
       value: String, version: Int = -1): DataFrame =
-    Snapshots.read(spark, partDir(path, value).toString, version)
+    Snapshots.read(spark, partitionDir(path, value), version)
       .withColumn(partCol, lit(value))
 
   /** Read the partitions whose VALUE passes `keep` — partition pruning
@@ -164,10 +193,12 @@ object PartitionedSnapshots {
     * (A16 index-pruned copy-on-write + A25 CAS per partition).
     * Partitions the batch does not touch keep their version — and
     * concurrent merges into DIFFERENT partitions never contend.
-    * The touched-value list is one distinct over the batch, bounded by
-    * partition cardinality (the hive assumption). Rows may MOVE
-    * between partitions only via delete+insert, as in hive-partitioned
-    * Delta: a batch row's partition value decides where it lands.
+    * The touched-value list rides the router's one aggregate over the
+    * batch, bounded by partition cardinality (the hive assumption); a
+    * NULL partition value refuses before any partition commits. Rows
+    * may MOVE between partitions only via delete+insert, as in
+    * hive-partitioned Delta: a batch row's partition value decides
+    * where it lands.
     * Returns (value → new version) for the touched partitions.
     */
   def mergePartitioned(spark: SparkSession, path: String, updates: DataFrame,
@@ -236,58 +267,53 @@ object PartitionedSnapshots {
       txn: Option[(String, Long)]): Map[String, Int] = {
     require(!keyCols.contains(partCol),
       s"graft: the partition column '$partCol' cannot be a merge key")
-    val existing = partitions(path).toSet
-    // r16: ONE aggregate over the batch yields the touched values AND
-    // every slice's key summary (dup verdict + distinct lead keys for
-    // driver-side file discovery) — the old shape paid a distinct
-    // collect here plus a dup probe and a stats semi-join per dir
-    val keyType = updates.schema(keyCols.head).dataType
-    val summaries =
-      Snapshots.partitionedKeySummaries(updates, partCol, keyCols, keyType)
-    val touched = summaries.keySet
-    // each value's slice commits into ITS OWN partition log — the
-    // per-dir merges are independent, so overlap them (guide §2.6:
-    // actions are only sequential because the driver calls them
-    // sequentially); a batch's wall tracks the largest slice, not the
-    // touched-partition count
-    Par.map(spark, touched.toSeq.sorted.toIndexedSeq) { v =>
-      val slice = updates.filter(col(partCol).cast("string") === v).drop(partCol)
-      val dir = partDir(path, v).toString
-      if (!existing.contains(v) && bucketOf(path).nonEmpty) {
-        require(txn.isEmpty, s"graft: a txn-marked merge cannot " +
-          s"bootstrap NEW bucketed partition '$v' — create it first " +
-          "(init/mergePartitioned), then merge idempotently")
-        // composed layout: a NEW partition bootstraps bucketed too, so
-        // the whole table keeps the exchange-free join property
-        val (c, n) = bucketOf(path).get
-        v -> Snapshots.writeBucketedVersioned(spark, dir, slice, c, n)
-      } else if (!existing.contains(v)) txn match {
-        case Some((app, ver)) =>
-          // bootstrap WITH the mark — crash-idempotent (a replay of a
-          // half-bootstrapped attempt adopts or replaces its own
-          // staged files, never doubles them)
-          v -> Snapshots.appendVersionedIdempotent(spark, dir, slice,
-            app, ver)
-        case None =>
-          // a brand-new partition value: open its log with the slice
-          Files.createDirectories(partDir(path, v))
-          slice.write.parquet(dir + "/init")
-          // move staged files up into the partition dir
-          val st = Files.list(Paths.get(dir + "/init"))
-          try st.iterator.asScala.filter(_.toString.endsWith(".parquet"))
-            .foreach(p => Files.move(p, Paths.get(dir, p.getFileName.toString)))
-          finally st.close()
-          val walk = Files.walk(Paths.get(dir + "/init"))
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
-          finally walk.close()
-          v -> Snapshots.init(spark, dir)
-      } else if (mor)
-        v -> Snapshots.mergeVersionedDVPre(spark, dir, slice, keyCols, txn,
-          summaries.get(v))
-      else
-        v -> Snapshots.mergeVersionedPre(spark, dir, slice, keyCols, txn,
-          summaries.get(v))
+    route(spark, updates, col(s"`$partCol`").cast("string"),
+      partitionDir(path, _), Some(partCol), bucketOf(path), keyCols, mor, txn)
+      .map { case (v, (_, ver)) => v -> ver }
+  }
+
+  /** The router's merge, shared by both layouts. ONE aggregate over the
+    * batch yields the touched values AND every slice's key summary
+    * ([[Snapshots.partitionedKeySummaries]]); a NULL value, or a
+    * txn-marked bootstrap under a bucketed root, refuses before any dir
+    * commits. Each value's slice (minus `dropCol`) then commits into the
+    * dir `dirOf` names: merged in place (copy-on-write, or merge-on-read
+    * with `mor`) when that dir has a log, else bootstrapped — bucketed
+    * under a bucketed root, WITH the `txn` mark when one is given
+    * (crash-idempotent: a replay of a half-bootstrapped attempt adopts
+    * or replaces its own staged files, never doubles them). The per-value commits write DISJOINT dirs, so they overlap
+    * (guide §2.6): a batch's wall tracks its largest slice, not the
+    * touched-dir count. Returns value → (dir, new version).
+    */
+  private[sources] def route(spark: SparkSession, updates: DataFrame,
+      value: Column, dirOf: String => String, dropCol: Option[String],
+      bucket: Option[(String, Int)], keyCols: Seq[String], mor: Boolean,
+      txn: Option[(String, Long)]): Map[String, (String, Int)] = {
+    val summaries = Snapshots.partitionedKeySummaries(updates, value,
+      keyCols, updates.schema(keyCols.head).dataType)
+    if (summaries.contains(null)) refuseNull(value)
+    val fresh = summaries.keySet.filter(v => Snapshots.currentVersion(dirOf(v)) < 0)
+    require(txn.isEmpty || bucket.isEmpty || fresh.isEmpty,
+      "graft: a txn-marked merge cannot bootstrap NEW bucketed partition(s) " +
+        s"${fresh.toSeq.sorted.mkString(", ")} — create them first (merge " +
+        "without the mark), then merge idempotently")
+    Par.map(spark, summaries.keys.toIndexedSeq.sorted) { v =>
+      val slice = updates.filter(value === v).drop(dropCol.toSeq: _*)
+      val dir = dirOf(v)
+      val version =
+        if (!fresh.contains(v)) {
+          if (mor) Snapshots.mergeVersionedDVPre(spark, dir, slice, keyCols,
+            txn, summaries.get(v))
+          else Snapshots.mergeVersionedPre(spark, dir, slice, keyCols, txn,
+            summaries.get(v))
+        } else (bucket, txn) match {
+          case (Some((c, n)), _) =>
+            Snapshots.writeBucketedVersioned(spark, dir, slice, c, n)
+          case (None, Some((app, ver))) =>
+            Snapshots.appendVersionedIdempotent(spark, dir, slice, app, ver)
+          case (None, None) => Snapshots.appendVersioned(spark, dir, slice)
+        }
+      v -> (dir, version)
     }.toMap
   }
 
@@ -295,28 +321,28 @@ object PartitionedSnapshots {
     * maintenance unit of merge-on-read partitioned ingest. */
   def reconcilePartition(spark: SparkSession, path: String,
       value: String): Int =
-    Snapshots.reconcileDV(spark, partDir(path, value).toString)
+    Snapshots.reconcileDV(spark, partitionDir(path, value))
 
   /** Per-partition OPTIMIZE (bin-packing) — the unit of maintenance. */
   def compactPartition(spark: SparkSession, path: String, value: String,
       targetBytes: Long = 128L << 20): Int =
-    Snapshots.compact(spark, partDir(path, value).toString, targetBytes)
+    Snapshots.compact(spark, partitionDir(path, value), targetBytes)
 
   /** Per-partition OPTIMIZE ZORDER — re-cluster ONE partition. */
   def zorderPartition(spark: SparkSession, path: String, value: String,
       c1: String, c2: String, numFiles: Int): Int =
-    Snapshots.compactZOrder(spark, partDir(path, value).toString, c1, c2, numFiles)
+    Snapshots.compactZOrder(spark, partitionDir(path, value), c1, c2, numFiles)
 
   /** A39 per partition: re-cluster only ONE partition's unclustered
     * tail — the day-partition maintenance loop at 100 TB (each
     * partition carries its own clustering state in its own log). */
   def zorderIncrementalPartition(spark: SparkSession, path: String,
       value: String, targetBytes: Long = 128L << 20): Int =
-    Snapshots.compactZOrderIncremental(spark, partDir(path, value).toString,
+    Snapshots.compactZOrderIncremental(spark, partitionDir(path, value),
       targetBytes)
 
   /** Current version per partition (the table's version VECTOR). */
   def versions(path: String): Map[String, Int] =
     partitions(path).map(v =>
-      v -> Snapshots.currentVersion(partDir(path, v).toString)).toMap
+      v -> Snapshots.currentVersion(partitionDir(path, v))).toMap
 }

@@ -148,7 +148,7 @@ object Snapshots {
   /** Directory listing, strict and with the stream closed — Files.list
     * holds an open file descriptor until closed; a long-lived driver
     * doing log maintenance in a loop must not leak one per call. */
-  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+  private[graft] def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
     val s = Files.list(dir)
     try s.iterator.asScala.toList finally s.close()
   }
@@ -1661,19 +1661,22 @@ object Snapshots {
     }
   }
 
-  /** r16 — the partitioned router's ONE action: per routed partition
-    * value, the batch key summary (dup verdict + lead keys) — so the
-    * touched-value discovery AND every per-dir merge's own summary ride
-    * a single aggregate over the batch instead of 1 + 2·|dirs| actions.
-    * Collected size = Σ per-partition distinct lead keys, exactly the
-    * rows the per-dir collects would have fetched anyway. */
+  /** r16 — the shared partition router's ONE action
+    * ([[PartitionedSnapshots.route]], hive and hidden layouts alike):
+    * per routing `value` (a string column — the hive partition column or
+    * a hidden transform's value), the batch key summary (dup verdict +
+    * lead keys) — so the touched-value discovery AND every per-dir
+    * merge's own summary ride a single aggregate over the batch instead
+    * of 1 + 2·|dirs| actions. Collected size = Σ per-value distinct lead
+    * keys, exactly the rows the per-dir collects would have fetched
+    * anyway. A NULL value is a NULL key of the result. */
   private[sources] def partitionedKeySummaries(updates: DataFrame,
-      partCol: String, keyCols: Seq[String],
+      value: org.apache.spark.sql.Column, keyCols: Seq[String],
       keyType: org.apache.spark.sql.types.DataType)
       : Map[String, BatchKeySummary] = {
     val leadKey = keyCols.head
     val (leadInternal, judgeable) = leadInternalOf(leadKey, keyType)
-    val part = col(s"`$partCol`").cast("string").as("__p")
+    val part = value.as("__p")
     val rows =
       if (keyCols.size == 1) {
         val g = if (judgeable) leadInternal else col(s"`$leadKey`")

@@ -368,7 +368,7 @@ class HiddenPartitionSpec extends GraftSuite {
       (d * 100 + i.toLong, ts(f"2024-03-0${d + 5}T01:00:00Z"), s"p$d-$i")
     HiddenPartitions.init(spark, root, rows.toDF("k", "tt", "payload"),
       DayTransform("tt"), bucketBy = Some(("k", 4)))
-    assert(HiddenPartitions.bucketOf(root).contains(("k", 4)))
+    assert(graft.sources.PartitionedSnapshots.bucketOf(root).contains(("k", 4)))
     // every partition dir carries the bucket spec
     val dirs = graft.sources.PartitionedSnapshots.partitions(root)
       .map(v => graft.sources.PartitionedSnapshots.partitionDir(root, v))

@@ -1581,7 +1581,7 @@ class LakeSqlSpec extends GraftSuite {
       try {
         import graft.sources.{HiddenPartitions, ModTransform}
         assert(HiddenPartitions.specOf(dir).contains(ModTransform("k", 4)))
-        assert(HiddenPartitions.bucketOf(dir).contains(("c", 4)))
+        assert(PartitionedSnapshots.bucketOf(dir).contains(("c", 4)))
         // first contact bootstraps the dirs — bucketed
         val data = (1L to 200L).map(k => (k, k % 7, k * 1.0))
           .toDF("k", "c", "x")
