@@ -1036,7 +1036,7 @@ object Similarity {
           .split("\t")(0).toInt
       else -1
     def assign(df: DataFrame): DataFrame = {
-      val centroids = s.read.parquet(centDir)
+      val centroids = Snapshots.readParquetDir(s, centDir)
       df.crossJoin(broadcast(centroids))
         .withColumn("csim", vec_cosine(col("embedding"), col("cvec")))
         .groupBy("vec_id")
@@ -1154,7 +1154,8 @@ object Similarity {
       .select("vec_id", "embedding")
     val postings = // vec_id, cid — pinned to the marker's index version
       graft.sources.Snapshots.read(s, indexDir, idxV)
-    val centroids = s.read.parquet(indexDir + "_centroids")
+    val centroids =
+      graft.sources.Snapshots.readParquetDir(s, indexDir + "_centroids")
     val queries = corpus.filter(col("vec_id").isin(keys: _*))
     val wq = Window.partitionBy("vec_id")
       .orderBy(col("csim").desc, col("cid").asc)

@@ -194,8 +194,7 @@ class GraftDvScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
         val withPos = base.select(logical :+
           col("_metadata.file_path").as("__file") :+
           col("_metadata.row_index").as("__pos"): _*)
-        val dv = spark.read.parquet(dvs: _*)
-          .select(col("__dv_file"), col("__dv_pos"))
+        val dv = Snapshots.readDv(spark, dvs)
         withPos.join(dv,
             withPos("__file") === dv("__dv_file") &&
               withPos("__pos") === dv("__dv_pos"),
@@ -255,8 +254,7 @@ class GraftDvScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
       val withPos = base.select(logical :+
         col("_metadata.file_path").as("__file") :+
         col("_metadata.row_index").as("__pos"): _*)
-      val dv = spark.read.parquet(dvs: _*)
-        .select(col("__dv_file"), col("__dv_pos"))
+      val dv = Snapshots.readDv(spark, dvs)
       withPos.join(dv,
           withPos("__file") === dv("__dv_file") &&
             withPos("__pos") === dv("__dv_pos"),

@@ -723,9 +723,9 @@ object MaterializedView {
     full.write.mode("append").parquet(mvRoot)
     val parquets = scala.collection.mutable.ListBuffer.empty[String]
     parquets ++= listParquet()
-    val v = Snapshots.commit(mvRoot, parquets.toSeq,
-      Some(spark.read.parquet(parquets.toSeq: _*).schema),
-      Snapshots.statsLines(spark, parquets.toSeq),
+    val schema = spark.read.parquet(parquets.toSeq: _*).schema
+    val v = Snapshots.commit(mvRoot, parquets.toSeq, Some(schema),
+      Snapshots.statsLines(spark, parquets.toSeq, schema),
       txnSetMulti = Seq(appL(left) -> vL.toLong, appR(right) -> vR.toLong))
     Refs.moveTag(left, leaseName(mvRoot), vL)
     Refs.moveTag(right, leaseName(mvRoot), vR)

@@ -337,6 +337,13 @@ object Snapshots {
     df.select(schema.fields.toIndexedSeq.map(f =>
       col(f.name).as(physicalName(f))): _*)
 
+  /** `df` as it is staged to disk under `outSchema` (physical names when
+    * a mapping is in force); its `.schema` is the staged files' schema,
+    * which [[statsLines]] reads them under. */
+  private def stagedFrame(df: DataFrame,
+      outSchema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+    outSchema.fold(df)(stagedAsPhysical(df, _))
+
   /** Read `files` under version `v`'s recorded schema when present. */
   private def readUnder(spark: SparkSession, path: String, v: Int,
       files: Seq[String]): DataFrame =
@@ -644,10 +651,13 @@ object Snapshots {
     * (the G1 multimodal shape, a 100 TB media table's main filter)
     * prunes files exactly like a top-level column — as manifest
     * lines. The collect is |files| × columns — bounded by the
-    * commit. */
-  private[sources] def statsLines(spark: SparkSession, files: Seq[String]): Seq[String] = {
+    * commit. `schema` is the files' own schema (the caller just wrote
+    * them, or inferred it once for files it did not write): reading
+    * under it spares the footer-inference job. */
+  private[sources] def statsLines(spark: SparkSession, files: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): Seq[String] = {
     if (files.isEmpty) return Seq.empty
-    val df = spark.read.parquet(files: _*)
+    val df = spark.read.schema(schema).parquet(files: _*)
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
     // every stats-bearing column: (dotted path, accessor, dataType) —
     // top-level atomics plus struct leaves (arrays/maps carry no range)
@@ -833,7 +843,7 @@ object Snapshots {
       if (dvs.isEmpty) 0L
       else {
         val liveSet = live.toSet
-        spark.read.parquet(dvs: _*).groupBy("__dv_file")
+        readDv(spark, dvs).groupBy("__dv_file")
           .agg(count(lit(1)).as("__n")).collect()
           .filter(r => liveSet.contains(canonical(r.getString(0))))
           .map(_.getLong(1)).sum
@@ -855,6 +865,21 @@ object Snapshots {
   // garbage that reconcile/OPTIMIZE ZORDER clears. Positions come from
   // parquet's `_metadata.row_index`, which is stable per file.
   private val DvHeader = "#dv="
+
+  /** A DV sidecar's position columns. Sidecars may also carry the dead
+    * rows' keys and pre-images (the change feed's), but every DV reader
+    * uses only these two, so sidecars are read under this fixed schema:
+    * a schema-less `spark.read.parquet` would run a Spark job just to
+    * read a footer. */
+  private val DvSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("__dv_file",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("__dv_pos",
+      org.apache.spark.sql.types.LongType)))
+
+  /** The (__dv_file, __dv_pos) rows of the DV files `dvs`. */
+  private[sources] def readDv(spark: SparkSession, dvs: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(dvs: _*)
 
   /** DV parquet files in force at version `v` (accumulated). */
   private[graft] def dvFiles(path: String, v: Int): Seq[String] =
@@ -1194,7 +1219,7 @@ object Snapshots {
         df.repartition(n, col(s"`$c`")).sortWithinPartitions(col(s"`$c`"))
       case None => df
     }
-    val prepared = outSchema.fold(routed)(stagedAsPhysical(routed, _))
+    val prepared = stagedFrame(routed, outSchema)
     val stage = Files.createTempDirectory(tmpPrefix).toString
     prepared.write.mode(SaveMode.Overwrite).parquet(stage)
     val dst = Paths.get(path)
@@ -1232,7 +1257,7 @@ object Snapshots {
       s"graft: numBuckets $numBuckets out of range (1..100000)")
     Files.createDirectories(Paths.get(path))
     val staged = stageData(df, None, path, 0, Some((bucketCol, numBuckets)))
-    commit(path, staged, Some(df.schema), statsLines(spark, staged),
+    commit(path, staged, Some(df.schema), statsLines(spark, staged, df.schema),
       cdfFlag = changeDataFeed,
       bucketOverride = Some((bucketCol, numBuckets)))
   }
@@ -1514,7 +1539,7 @@ object Snapshots {
     * case on its own. */
   private def applyDv(spark: SparkSession, withPos: DataFrame,
       dvs: Seq[String]): DataFrame = {
-    val dv = spark.read.parquet(dvs: _*)
+    val dv = readDv(spark, dvs)
     withPos.join(dv,
         withPos("__file") === dv("__dv_file") && withPos("__pos") === dv("__dv_pos"),
         "left_anti")
@@ -2197,7 +2222,8 @@ object Snapshots {
       else Some(spark.read.parquet(files: _*).schema)
     // the bootstrap pays one full stats scan; every later commit scans
     // only its staged files
-    commit(path, files, schema, statsLines(spark, files),
+    commit(path, files, schema,
+      schema.fold(Seq.empty[String])(statsLines(spark, files, _)),
       cdfFlag = changeDataFeed)
   }
 
@@ -2353,7 +2379,7 @@ object Snapshots {
       else {
         val spark = org.apache.spark.sql.SparkSession.active
         val liveSet = live.toSet
-        spark.read.parquet(dvs: _*).select("__dv_file").distinct()
+        readDv(spark, dvs).select("__dv_file").distinct()
           .collect().map(r => canonical(r.getString(0)))
           .filter(liveSet.contains).toSet
       }
@@ -2391,8 +2417,8 @@ object Snapshots {
         val spark = org.apache.spark.sql.SparkSession.active
         val keptRows = readLive(spark, src, v, touched.toIndexedSeq)
         val stage = Files.createTempDirectory("graft_clone_mat").toString
-        tableSchema(src, v).fold(keptRows)(stagedAsPhysical(keptRows, _))
-          .write.mode(SaveMode.Overwrite).parquet(stage)
+        val out = stagedFrame(keptRows, tableSchema(src, v))
+        out.write.mode(SaveMode.Overwrite).parquet(stage)
         val moved = listDir(Paths.get(stage))
           .filter(_.getFileName.toString.endsWith(".parquet"))
           .map { p =>
@@ -2404,7 +2430,7 @@ object Snapshots {
             Files.move(p, dstP)
             dstP.toString
           }
-        (moved, statsLines(spark, moved))
+        (moved, statsLines(spark, moved, out.schema))
       }
     commit(dst, linked.map(renames) ++ matFiles, tableSchema(src, v),
       remappedStats(src, v, linked, renames) ++ matStats,
@@ -3045,7 +3071,7 @@ object Snapshots {
       val winnerNew = liveW.filterNot(f => liveFiles(path, base).map(canonical)
         .toSet.contains(canonical(f)))
       if (winnerNew.nonEmpty) {
-        val clash = !spark.read.parquet(winnerNew: _*)
+        val clash = !readFilesAs(spark, tableSchema(path, w), winnerNew)
           .select(keyCols.map(c => col(s"`$c`")): _*)
           .join(broadcast(updates.select(keyCols.map(c =>
             col(s"`$c`")): _*)), keyCols, "left_semi")
@@ -3061,7 +3087,7 @@ object Snapshots {
       // resurrect the freshly deleted rows. Conflict, not commute.
       val newDvs = dvFiles(path, w).toSet -- dvFiles(path, v).toSet
       if (newDvs.nonEmpty) {
-        val dvClash = spark.read.parquet(newDvs.toSeq: _*)
+        val dvClash = readDv(spark, newDvs.toSeq)
           .select("__dv_file").distinct()
           .collect().map(r => canonical(r.getString(0)))
           .exists(touchedSet.contains)
@@ -3196,19 +3222,21 @@ object Snapshots {
       outSchema: Option[org.apache.spark.sql.types.StructType],
       path: String, v: Int, bucket: Option[(String, Int)],
       tmpPrefix: String, cdfRows: Option[DataFrame])
-      : (Seq[String], Seq[String], Option[Seq[String]]) = cdfRows match {
-    case None =>
+      : (Seq[String], Seq[String], Option[Seq[String]]) = {
+    def dataWithStats(): (Seq[String], Seq[String]) = {
       val staged = stageData(data, outSchema, path, v + 1, bucket, tmpPrefix)
-      (staged, statsLines(spark, staged), None)
-    case Some(rows) =>
-      val r = Par.map(spark, Seq[() => (Seq[String], Seq[String])](
-        () => {
-          val staged =
-            stageData(data, outSchema, path, v + 1, bucket, tmpPrefix)
-          (staged, statsLines(spark, staged))
-        },
-        () => (stageCdf(path, v, rows), Seq.empty)))(_())
-      (r(0)._1, r(0)._2, Some(r(1)._1))
+      (staged, statsLines(spark, staged, stagedFrame(data, outSchema).schema))
+    }
+    cdfRows match {
+      case None =>
+        val (staged, stats) = dataWithStats()
+        (staged, stats, None)
+      case Some(rows) =>
+        val r = Par.map(spark, Seq[() => (Seq[String], Seq[String])](
+          () => dataWithStats(),
+          () => (stageCdf(path, v, rows), Seq.empty)))(_())
+        (r(0)._1, r(0)._2, Some(r(1)._1))
+    }
   }
 
   /** Versioned DELETE BY KEY SET: [[deleteVersioned]] where the doomed
@@ -3390,7 +3418,7 @@ object Snapshots {
     bspec.foreach { case (c, _) => require(df.columns.contains(c),
       s"graft: $path is bucketed by '$c' — an overwrite batch must carry it") }
     val staged = stageData(df, None, path, v + 1, bspec, "graft_snap_ow")
-    commitNext(path, v, staged, Some(df.schema), statsLines(spark, staged),
+    commitNext(path, v, staged, Some(df.schema), statsLines(spark, staged, df.schema),
       bloomExtra = maybeBloom(spark, path, v, staged))
   }
 
@@ -3452,7 +3480,8 @@ object Snapshots {
           val schema =
             if (files.isEmpty) None
             else Some(spark.read.parquet(files: _*).schema)
-          return commit(path, files, schema, statsLines(spark, files),
+          return commit(path, files, schema,
+            schema.fold(Seq.empty[String])(statsLines(spark, files, _)),
             txnSet = txn)
       }
     }
@@ -3543,14 +3572,46 @@ object Snapshots {
     }
   }
 
-  /** Total row count of a local parquet file from its FOOTER — pure
-    * driver-side metadata I/O, no Spark job. */
-  private[sources] def parquetRowCount(file: String): Long = {
+  /** The FOOTER of a local parquet file — pure driver-side metadata
+    * I/O, no Spark job. */
+  private def parquetFooter(file: String)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file),
       new org.apache.hadoop.conf.Configuration())
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+    try r.getFooter finally r.close()
+  }
+
+  /** Total row count of a local parquet file from its footer. */
+  private[sources] def parquetRowCount(file: String): Long =
+    parquetFooter(file).getBlocks.asScala.map(_.getRowCount).sum
+
+  /** The Spark schema of a parquet file from its footer, resolved
+    * exactly as a schema-less `spark.read.parquet` infers it (the
+    * writer's stored Spark schema, else the converted parquet schema)
+    * but without the Spark job that inference runs. */
+  private def footerSchema(file: String,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(
+        new org.apache.hadoop.fs.Path(file), footer),
+      new ParquetToSparkSchemaConverter(
+        org.apache.spark.sql.internal.SQLConf.get))
+  }
+
+  /** `spark.read.parquet(dir)` for a directory graft itself wrote with
+    * Spark (a side artifact, not a versioned table), under the schema of
+    * one part file's footer instead of an inference job. */
+  private[graft] def readParquetDir(spark: SparkSession, dir: String): DataFrame = {
+    val d = Paths.get(dir)
+    val part = if (!Files.isDirectory(d)) None
+      else listDir(d).map(_.toString).filter(_.endsWith(".parquet")).sorted.headOption
+    part.fold(spark.read.parquet(dir))(f =>
+      spark.read.schema(footerSchema(f, parquetFooter(f))).parquet(dir))
   }
 
   /** Stage `rows` as a commit's stored change-data files (A31);
@@ -3780,7 +3841,8 @@ object Snapshots {
       () => {
         val st = stageData(post, Some(schemaNow), path, v + 1,
           bucketSpecOf(path, v), "graft_snap_updmor")
-        (st, statsLines(spark, st)) // stats scan rides the data thunk
+        // stats scan rides the data thunk
+        (st, statsLines(spark, st, stagedFrame(post, Some(schemaNow)).schema))
       }
     val dvThunk: () => Seq[String] = () => {
       val doomed = pairs.select(
@@ -4011,7 +4073,9 @@ object Snapshots {
       () => {
         val st = stageData(norm(appended), Some(outSchema), path, v + 1,
           bucketSpecOf(path, v), "graft_snap_mergemor")
-        (st, statsLines(spark, st)) // stats scan rides the data thunk
+        // stats scan rides the data thunk
+        (st, statsLines(spark, st,
+          stagedFrame(norm(appended), Some(outSchema)).schema))
       }
     val dvThunk: Option[() => Seq[String]] =
       if (nChg == 0) None
@@ -4084,7 +4148,7 @@ object Snapshots {
     val dvs = dvFiles(path, v)
     if (dvs.isEmpty) withPos
     else {
-      val dv = spark.read.parquet(dvs: _*)
+      val dv = readDv(spark, dvs)
       withPos.join(dv,
         withPos("__file") === dv("__dv_file") && withPos("__pos") === dv("__dv_pos"),
         "left_anti")
@@ -4115,7 +4179,7 @@ object Snapshots {
     val touched =
       (if (cached.forall(_.isDefined))
         cached.flatMap(_.get).distinct.map(canonical)
-      else spark.read.parquet(dvs: _*).select("__dv_file").distinct()
+      else readDv(spark, dvs).select("__dv_file").distinct()
         .collect().map(r => canonical(r.getString(0))).toSeq)
         .filter(liveSet.contains).toIndexedSeq
     if (touched.isEmpty) // all entries inert: drop the refs, move on
@@ -4131,7 +4195,8 @@ object Snapshots {
     val touchedSet = touched.toSet
     val retained = live.filterNot(f => touchedSet.contains(canonical(f)))
     commitNext(path, v, retained ++ staged, tableSchema(path, v),
-      carriedStats(path, v, retained) ++ statsLines(spark, staged),
+      carriedStats(path, v, retained) ++ statsLines(spark, staged,
+        stagedFrame(keptRows, tableSchema(path, v)).schema),
       cdf = Some(Seq.empty))
   }
 
@@ -4180,14 +4245,14 @@ object Snapshots {
     // not silently drop the widened column from pre-widening files
     val sch = tableSchema(path, v)
     val packed = readLive(spark, path, v, small)
+    val out = stagedFrame(packed, sch)
     val staged = bspec match {
       case Some(b) =>
         stageData(packed, sch, path, v + 1, Some(b), "graft_compact",
           "compact_")
       case None =>
         val stage = Files.createTempDirectory("graft_compact").toString
-        sch.fold(packed)(stagedAsPhysical(packed, _)).coalesce(bins)
-          .write.mode(SaveMode.Overwrite).parquet(stage)
+        out.coalesce(bins).write.mode(SaveMode.Overwrite).parquet(stage)
         val dst = Paths.get(path)
         listDir(Paths.get(stage))
           .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -4198,7 +4263,7 @@ object Snapshots {
           }
     }
     commitNext(path, v, big ++ staged, tableSchema(path, v),
-      carriedStats(path, v, big) ++ statsLines(spark, staged),
+      carriedStats(path, v, big) ++ statsLines(spark, staged, out.schema),
       dvFiles(path, v), cdf = Some(Seq.empty))
   }
 
@@ -4278,8 +4343,8 @@ object Snapshots {
     val clustered = Sources.zClusteredCols(
       readLive(spark, path, v, live), cols, numFiles)
     val stage = Files.createTempDirectory("graft_zorder").toString
-    tableSchema(path, v).fold(clustered)(stagedAsPhysical(clustered, _))
-      .write.mode(SaveMode.Overwrite).parquet(stage)
+    val out = stagedFrame(clustered, tableSchema(path, v))
+    out.write.mode(SaveMode.Overwrite).parquet(stage)
     val dst = Paths.get(path)
     val staged = listDir(Paths.get(stage))
       .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -4289,7 +4354,7 @@ object Snapshots {
         dst.resolve(name).toString
       }
     commitNext(path, v, staged, tableSchema(path, v),
-      statsLines(spark, staged), cdf = Some(Seq.empty),
+      statsLines(spark, staged, out.schema), cdf = Some(Seq.empty),
       clusterOverride = Some((cols, staged)))
   }
 
@@ -4321,8 +4386,8 @@ object Snapshots {
     val reclustered = Sources.zClusteredCols(
       readLive(spark, path, v, tail), cols, bins)
     val stage = Files.createTempDirectory("graft_zorder_inc").toString
-    tableSchema(path, v).fold(reclustered)(stagedAsPhysical(reclustered, _))
-      .write.mode(SaveMode.Overwrite).parquet(stage)
+    val out = stagedFrame(reclustered, tableSchema(path, v))
+    out.write.mode(SaveMode.Overwrite).parquet(stage)
     val dst = Paths.get(path)
     val staged = listDir(Paths.get(stage))
       .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -4333,7 +4398,7 @@ object Snapshots {
       }
     val retained = live.filter(f => clustered.contains(canonical(f)))
     commitNext(path, v, retained ++ staged, tableSchema(path, v),
-      carriedStats(path, v, retained) ++ statsLines(spark, staged),
+      carriedStats(path, v, retained) ++ statsLines(spark, staged, out.schema),
       dvFiles(path, v), cdf = Some(Seq.empty),
       clusterOverride = Some((cols, retained ++ staged)))
   }
@@ -4451,7 +4516,7 @@ object Snapshots {
       hint: Option[org.apache.spark.sql.types.StructType],
       shared: Set[String], diffDvs: Seq[String]): Option[DataFrame] = {
     if (diffDvs.isEmpty || shared.isEmpty) return None
-    val dv = spark.read.parquet(diffDvs: _*)
+    val dv = readDv(spark, diffDvs)
     val hit = dv.select("__dv_file").distinct().collect()
       .map(r => canonical(r.getString(0))).filter(shared.contains).toIndexedSeq
     if (hit.isEmpty) return None
@@ -4483,23 +4548,35 @@ object Snapshots {
           StructField("change_type", StringType),
           StructField("__pre", payloadType),
           StructField("__post", payloadType)))))
-    val rows = spark.read.parquet(fs: _*)
-    if (!rows.columns.contains(keyCol) || !rows.columns.contains("change_type") ||
-        !payload.forall(rows.columns.contains)) return None
-    // stored rows: post-image for inserts/updates, pre-image for
-    // deletes, plus (r9+) 'update_preimage' companion rows. __pre is
-    // reconstructed from the companions (updates) or the stored
-    // payload itself (deletes); the __post contract is unchanged
-    // (nulled for deletes).
-    val pres = rows.filter(col("change_type") === "update_preimage")
-      .select(col(s"`$keyCol`").as("__pk"),
-        struct(payload.map(c => col(s"`$c`")): _*).as("__upre"))
+    // the stored files' OWN columns, from one footer: a file that lacks
+    // an expected column must still send the caller to the fallback
+    val footers = (if (needUpdatePre) fs else fs.take(1)).map(parquetFooter)
+    val fileSchema = footerSchema(fs.head, footers.head)
+    if (!fileSchema.fieldNames.contains(keyCol) ||
+        !fileSchema.fieldNames.contains("change_type") ||
+        !payload.forall(fileSchema.fieldNames.contains)) return None
+    val rows = spark.read.schema(fileSchema).parquet(fs: _*)
     if (needUpdatePre) {
       // legacy commits (pre-r9) stored no update pre-images: a CDF-
       // style consumer falls back to the manifest diff for them
-      val hasUpd = !rows.filter(col("change_type") === "update").isEmpty
-      if (hasUpd && pres.isEmpty) return None
+      // (when the footers cannot tell, one shuffle-free job collects
+      // the update kinds each partition holds)
+      val legacy = updatesWithoutPreimages(footers).getOrElse {
+        val kinds = rows
+          .filter(col("change_type").isin("update", "update_preimage"))
+          .select(col("change_type")).as(Encoders.STRING)
+          .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+          .collect().toSet
+        kinds.contains("update") && !kinds.contains("update_preimage")
+      }
+      if (legacy) return None
     }
+    // stored rows: post-image for inserts/updates, pre-image for
+    // deletes, plus (r9+) 'update_preimage' companion rows. __pre is
+    // the stored payload itself for deletes; for updates it is
+    // reconstructed from the companions only when the caller asked for
+    // update pre-images (the post-image feeds drop __pre, so they skip
+    // the join). The __post contract is unchanged (nulled for deletes).
     val baseRows = rows.filter(col("change_type") =!= "update_preimage")
       .select(col(s"`$keyCol`").as("__k"), col("change_type"),
         when(col("change_type") === "delete",
@@ -4507,10 +4584,38 @@ object Snapshots {
           .as("__dpre"),
         when(col("change_type") === "delete", lit(null).cast(payloadType))
           .otherwise(struct(payload.map(c => col(s"`$c`")): _*)).as("__post"))
+    if (!needUpdatePre) return Some(baseRows.withColumnRenamed("__dpre", "__pre"))
+    val pres = rows.filter(col("change_type") === "update_preimage")
+      .select(col(s"`$keyCol`").as("__pk"),
+        struct(payload.map(c => col(s"`$c`")): _*).as("__upre"))
     Some(baseRows.join(pres, baseRows("__k") === pres("__pk"), "left_outer")
       .select(col("__k"), col("change_type"),
         coalesce(col("__upre"), col("__dpre")).cast(payloadType).as("__pre"),
         col("__post")))
+  }
+
+  /** Whether stored change files hold 'update' rows but no
+    * 'update_preimage' companions (a legacy commit), answered from the
+    * row groups' max statistic on `change_type`. Exact: 'update_preimage'
+    * sorts after every other change type, so a row group holds one iff
+    * its max is that value; without any, a row group holds an 'update'
+    * iff its max is 'update'. None when a non-empty row group carries no
+    * usable statistics. */
+  private def updatesWithoutPreimages(
+      footers: Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata])
+      : Option[Boolean] = {
+    val maxes = footers.flatMap(_.getBlocks.asScala).filter(_.getRowCount > 0)
+      .map(b => b.getColumns.asScala.find(_.getPath.toDotString == "change_type")
+        .map(_.getStatistics).filter(st => st != null && st.hasNonNullValue)
+        .map(_.genericGetMax match {
+          case bin: org.apache.parquet.io.api.Binary => bin.toStringUsingUTF8
+          case other => String.valueOf(other)
+        }))
+    if (maxes.exists(_.isEmpty)) None
+    else {
+      val ms = maxes.flatten.toSet
+      Some(ms.contains("update") && !ms.contains("update_preimage"))
+    }
   }
 
   private def changeFrame(spark: SparkSession, path: String, fromV: Int, toV: Int,

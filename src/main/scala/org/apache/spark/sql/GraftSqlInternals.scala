@@ -9,9 +9,11 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
   * (`SparkSessionExtensions`, `experimental.extraStrategies` /
   * `extraOptimizations`) but not plan CONSTRUCTION, so every
   * out-of-tree plan library ships exactly this shim. The only other
-  * graft code in `private[sql]` space is [[GraftSqlBridge]] and the two
-  * `internalCreateDataFrame` wrappers in `org.apache.spark.sql.graft`:
-  * `StreamingFrame` and `DeferredFrame`.
+  * graft code in `private[sql]` space is [[GraftSqlBridge]] and the
+  * `internalCreateDataFrame` callers in `org.apache.spark.sql.graft`:
+  * `DeferredFrame`, the one lazy RDD wrapper behind both deferred batch
+  * frames and `StreamingFrame`'s streaming ones, and
+  * `StreamingFrame.toBatch`.
   */
 object GraftSqlInternals {
 

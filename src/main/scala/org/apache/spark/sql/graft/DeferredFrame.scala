@@ -6,20 +6,23 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.Dataset
 
-/** A batch DataFrame whose plan is executed at most once, however many
-  * actions run on it or on DataFrames derived from it. Built with the
-  * same `private[sql]` constructor as [[StreamingFrame.toBatch]], over an
-  * RDD whose only parent is the wrapped plan's `queryExecution.toRdd`.
+/** A DataFrame whose plan is executed at most once, however many
+  * actions run on it or on DataFrames derived from it, and never while
+  * the frame is built. This is the one lazy wrapper graft uses for both
+  * batch frames ([[apply]]) and the frames a streaming source hands back
+  * from `getBatch` ([[StreamingFrame.apply]]). Both are built with the
+  * `private[sql]` `internalCreateDataFrame` over an RDD whose only parent
+  * is the wrapped plan's `queryExecution.toRdd`.
   *
-  * With AQE, `toRdd` materializes the plan's shuffle map stages as it is
-  * resolved. Resolution therefore waits for `getPartitions`, which
-  * Spark calls on the thread that submits the first consumer's job
-  * (before the job reaches the DAGScheduler event loop), so the map stage
-  * runs inside that consumer's action and never at construction
-  * (without AQE, the first consumer's own job runs the map stage).
-  * Later jobs reuse the resolved RDD: its `ShuffleDependency` already
-  * has map outputs, so the DAGScheduler skips the map stage. The parent
-  * is `@transient` — tasks reach it through `dependencies`, never
+  * With AQE, `toRdd` materializes the plan's shuffle map and broadcast
+  * stages as it is resolved. Resolution therefore waits for
+  * `getPartitions`, which Spark calls on the thread that submits the
+  * first consumer's job (before the job reaches the DAGScheduler event
+  * loop), so those stages run inside that consumer's action and never
+  * at construction (without AQE, the first consumer's own job runs the
+  * map stage). Later jobs reuse the resolved RDD: its `ShuffleDependency`
+  * already has map outputs, so the DAGScheduler skips the map stage. The
+  * parent is `@transient` — tasks reach it through `dependencies`, never
   * through this field. The shuffle files are removed by the
   * `ContextCleaner` once the frame is garbage-collected.
   *
@@ -28,10 +31,12 @@ import org.apache.spark.sql.classic.Dataset
   */
 object DeferredFrame {
 
-  def apply(df: DataFrame): DataFrame = {
+  def apply(df: DataFrame): DataFrame = wrap(df, isStreaming = false)
+
+  private[graft] def wrap(df: DataFrame, isStreaming: Boolean): DataFrame = {
     val classic = df.asInstanceOf[Dataset[Row]]
     classic.sparkSession.internalCreateDataFrame(
-      new OnceRDD(classic), df.schema, isStreaming = false)
+      new OnceRDD(classic), df.schema, isStreaming)
   }
 
   private final class OnceRDD(@transient plan: Dataset[Row])
