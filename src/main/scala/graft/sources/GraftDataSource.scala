@@ -416,20 +416,16 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
       case SaveMode.Append =>
         (exists, txnOpt) match {
           case (false, None) => bootstrap()
-          case (false, Some((a, n))) =>
+          case (false, Some(_)) =>
             require(bucketOpt.isEmpty, "graft: a bucketed bootstrap " +
               "under a txn mark is not supported — create the table " +
               "first, then append idempotently")
-            Snapshots.appendVersionedIdempotent(spark, path, data, a, n)
-          case (true, txn) =>
+            Snapshots.appendVersioned(spark, path, data, txnOpt)
+          case (true, _) =>
             val keyCol = parameters.getOrElse("keyCol",
               throw new IllegalArgumentException(
                 "graft: append is a keyed merge — set .option(\"keyCol\", <column>)"))
-            txn match {
-              case Some((a, n)) => Snapshots.mergeVersionedIdempotent(
-                spark, path, data, keyCol, a, n)
-              case None => Snapshots.mergeVersioned(spark, path, data, keyCol)
-            }
+            Snapshots.mergeVersioned(spark, path, data, Seq(keyCol), txnOpt)
         }
       case SaveMode.ErrorIfExists =>
         if (exists) throw new IllegalArgumentException(

@@ -583,11 +583,7 @@ object HiddenPartitions {
     val txnDel = txn.map { case (app, ver) => (app + "#del", ver) }
     def upsert(dir: String, rows: DataFrame): Int =
       if (mor) Snapshots.mergeVersionedDV(spark, dir, rows, keyCols, txn)
-      else txn match {
-        case Some((app, ver)) => Snapshots.mergeVersionedIdempotent(
-          spark, dir, rows, keyCols, app, ver)
-        case None => Snapshots.mergeVersioned(spark, dir, rows, keyCols)
-      }
+      else Snapshots.mergeVersioned(spark, dir, rows, keyCols, txn)
     def removeKeys(dir: String, keys: DataFrame): Int =
       if (mor) Snapshots.deleteVersionedKeysDV(spark, dir, keys, keyCols,
         txnDel)

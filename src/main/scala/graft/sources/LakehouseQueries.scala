@@ -2297,10 +2297,10 @@ object LakehouseQueries {
     Snapshots.deleteVersionedKeysDV(se, dir,
       o.filter(col("k") % 23 === 2).select("k1", "k2"), keys, None) // v4
     val idem = wave(6, col("price") + 7.0)
-    val v5 = Snapshots.mergeVersionedIdempotent(se, dir, idem,
-      keys, "ck_app", 1L) // v5
-    val vReplay = Snapshots.mergeVersionedIdempotent(se, dir, idem,
-      keys, "ck_app", 1L) // replay: MUST no-op at v5
+    val v5 = Snapshots.mergeVersioned(se, dir, idem,
+      keys, Some(("ck_app", 1L))) // v5
+    val vReplay = Snapshots.mergeVersioned(se, dir, idem,
+      keys, Some(("ck_app", 1L))) // replay: MUST no-op at v5
     val orders = s"$d/orders.parquet"
     se.sql(s"""MERGE INTO graft.`$dir` t
               |USING (SELECT o_orderkey div 100 AS k1,

@@ -186,8 +186,8 @@ object MaterializedView {
         s"minmax=${minMaxCols.mkString(",")}\n" +
         s"distinct=${distinctCols.mkString(",")}\n" +
         filter.fold("")(f => s"filter=$f\n"))
-    val v = Snapshots.appendVersionedIdempotent(spark, mvRoot, full,
-      appId(base), bv.toLong)
+    val v = Snapshots.appendVersioned(spark, mvRoot, full,
+      Some((appId(base), bv.toLong)))
     Refs.moveTag(base, leaseName(mvRoot), bv)
     v
   }
@@ -653,7 +653,7 @@ object MaterializedView {
   // per-group Δcnt/Δsum/Δnn — so the aggregate stays EXACT under
   // updates that move join keys, deletes that kill fan-outs, and
   // inserts on either or both sides in one window. The two consumed
-  // base versions ride ONE commit as two A51 marks (txnSetMulti), so
+  // base versions ride ONE commit as two A51 marks (one `txn` list), so
   // the (leftVersion, rightVersion) watermark pair is atomic with the
   // data — a crashed refresh can never record one side's progress
   // without the other's.
@@ -726,7 +726,7 @@ object MaterializedView {
     val schema = spark.read.parquet(parquets.toSeq: _*).schema
     val v = Snapshots.commit(mvRoot, parquets.toSeq, Some(schema),
       Snapshots.statsLines(spark, parquets.toSeq, schema),
-      txnSetMulti = Seq(appL(left) -> vL.toLong, appR(right) -> vR.toLong))
+      txn = Seq(appL(left) -> vL.toLong, appR(right) -> vR.toLong))
     Refs.moveTag(left, leaseName(mvRoot), vL)
     Refs.moveTag(right, leaseName(mvRoot), vR)
     v

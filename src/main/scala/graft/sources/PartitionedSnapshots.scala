@@ -229,7 +229,7 @@ object PartitionedSnapshots {
     * sink's lastCommittedBatch guard forbids that; bare-API callers
     * who need general replay safety should route through the
     * checkpoint-scoped marker ([[graft.streaming.UpsertSink]]) or
-    * [[Snapshots.mergeVersionedDVIdempotent]] per partition. Fold
+    * [[Snapshots.mergeVersionedDV]] with a txn mark per partition. Fold
     * with [[reconcilePartition]] / [[compactPartition]] per partition.
     */
   def mergePartitioned(spark: SparkSession, path: String, updates: DataFrame,
@@ -244,7 +244,7 @@ object PartitionedSnapshots {
     * missing ones. Bare-API callers get exactly-once without the
     * streaming sink's checkpoint-scoped batch guard. New partition
     * values bootstrap WITH the mark (crash-idempotent, the
-    * appendVersionedIdempotent shape); a bucketed root refuses a
+    * txn-marked appendVersioned shape); a bucketed root refuses a
     * txn-marked bootstrap of a NEW value (pre-create it), matching the
     * connector's refusal. */
   def mergePartitionedIdempotent(spark: SparkSession, path: String,
@@ -301,17 +301,12 @@ object PartitionedSnapshots {
       val slice = updates.filter(value === v).drop(dropCol.toSeq: _*)
       val dir = dirOf(v)
       val version =
-        if (!fresh.contains(v)) {
-          if (mor) Snapshots.mergeVersionedDVPre(spark, dir, slice, keyCols,
-            txn, summaries.get(v))
-          else Snapshots.mergeVersionedPre(spark, dir, slice, keyCols, txn,
-            summaries.get(v))
-        } else (bucket, txn) match {
-          case (Some((c, n)), _) =>
-            Snapshots.writeBucketedVersioned(spark, dir, slice, c, n)
-          case (None, Some((app, ver))) =>
-            Snapshots.appendVersionedIdempotent(spark, dir, slice, app, ver)
-          case (None, None) => Snapshots.appendVersioned(spark, dir, slice)
+        if (!fresh.contains(v))
+          Snapshots.mergeVersionedOCC(spark, dir, slice, keyCols, maxRetries = 5,
+            beforeCommit = () => (), txn, summaries.get(v), mor)
+        else bucket match {
+          case Some((c, n)) => Snapshots.writeBucketedVersioned(spark, dir, slice, c, n)
+          case None => Snapshots.appendVersioned(spark, dir, slice, txn)
         }
       v -> (dir, version)
     }.toMap

@@ -219,7 +219,7 @@ object Refs {
         if (b.nonEmpty) b else Snapshots.bloomColsOf(path, headMain)
       },
       bloomExtra = bloomExtra,
-      txnSet = txnSet)
+      txn = txnSet.toSeq)
   }
 
   /** Delete branch `name`'s whole tree and release its base tag.

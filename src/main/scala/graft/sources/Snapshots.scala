@@ -3,8 +3,9 @@ package graft.sources
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A18 — snapshot versioning with time travel (the Delta/Iceberg log
   * pattern over a plain parquet directory): the MANIFEST, not the
@@ -528,8 +529,7 @@ object Snapshots {
       histogram: Boolean = false, histogramBins: Int = 64): Int = {
     require(histogramBins >= 2 && histogramBins <= 1000,
       s"histogramBins in [2, 1000] (got $histogramBins)")
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     val df = read(spark, path, v)
     import org.apache.spark.sql.types._
     val cols = df.schema.fields.collect {
@@ -843,10 +843,7 @@ object Snapshots {
       if (dvs.isEmpty) 0L
       else {
         val liveSet = live.toSet
-        readDv(spark, dvs).groupBy("__dv_file")
-          .agg(count(lit(1)).as("__n")).collect()
-          .filter(r => liveSet.contains(canonical(r.getString(0))))
-          .map(_.getLong(1)).sum
+        dvMarks(spark, dvs).collect { case (f, n) if liveSet.contains(f) => n }.sum
       }
     Some(base - dead)
   }
@@ -919,8 +916,7 @@ object Snapshots {
     * Returns the new version.
     */
   def enableChangeDataFeed(path: String): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     val live = liveFiles(path, v)
     commitNext(path, v, live, tableSchema(path, v),
       carriedStats(path, v, live), dvFiles(path, v),
@@ -956,10 +952,7 @@ object Snapshots {
     val cons = constraintsOf(path, v)
     if (cons.isEmpty) return
     val frame = tableSchema(path, v) match {
-      case Some(s) => batch.select(
-        (s.fields.toIndexedSeq.map(f =>
-          (if (batch.columns.contains(f.name)) col(s"`${f.name}`")
-           else lit(null).cast(f.dataType)).as(f.name)) ++
+      case Some(s) => batch.select((filledTo(batch, s) ++
           batch.columns.toIndexedSeq.filterNot(s.fieldNames.contains)
             .map(c => col(s"`$c`"))): _*)
       case None => batch
@@ -982,8 +975,7 @@ object Snapshots {
     require(!name.contains('\t') && !name.contains('\n') &&
       !exprText.contains('\t') && !exprText.contains('\n'),
       "constraint name/expression must not contain tabs or newlines")
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     require(!constraintsOf(path, v).exists(_._1 == name),
       s"constraint '$name' already exists")
     val live = liveFiles(path, v)
@@ -1001,8 +993,7 @@ object Snapshots {
   /** Drop a named constraint (metadata commit). Returns the new
     * version. */
   def dropConstraint(path: String, name: String): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     val cons = constraintsOf(path, v)
     require(cons.exists(_._1 == name), s"no constraint '$name'")
     val live = liveFiles(path, v)
@@ -1201,8 +1192,8 @@ object Snapshots {
   }
 
   /** Stage `df`'s rows as `v{vNext}_…` data files under `path` and
-    * return their paths — the one staging body every write path
-    * shares. When `bucket` is set, rows are hash-routed into exactly
+    * return their paths and stat lines — the one data-staging body every
+    * write path shares. When `bucket` is set, rows are hash-routed into exactly
     * `n` writer partitions with Spark's bucket-id expression
     * (`repartition(n, col)` plans HashPartitioning, whose
     * partitionIdExpression is the same pmod(murmur3(col), n) the
@@ -1210,35 +1201,28 @@ object Snapshots {
     * file is renamed to carry Spark's `_NNNNN` bucket tag (inserted
     * before the first extension dot, the bucketed-write file-name
     * convention) derived from its writer task's partition index. */
-  private def stageData(df: DataFrame,
-      outSchema: Option[org.apache.spark.sql.types.StructType],
-      path: String, vNext: Int, bucket: Option[(String, Int)],
-      tmpPrefix: String = "graft_snap", namePart: String = ""): Seq[String] = {
+  private def stageData(spark: SparkSession, df: DataFrame,
+      outSchema: Option[StructType], path: String, vNext: Int,
+      bucket: Option[(String, Int)], namePart: String = "")
+      : (Seq[String], Seq[String]) = {
     val routed = bucket match {
       case Some((c, n)) =>
         df.repartition(n, col(s"`$c`")).sortWithinPartitions(col(s"`$c`"))
       case None => df
     }
     val prepared = stagedFrame(routed, outSchema)
-    val stage = Files.createTempDirectory(tmpPrefix).toString
-    prepared.write.mode(SaveMode.Overwrite).parquet(stage)
-    val dst = Paths.get(path)
-    listDir(Paths.get(stage))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val base = p.getFileName.toString
-        val tagged = bucket match {
-          case Some(_) =>
-            val tag = org.apache.spark.sql.GraftSqlBridge
-              .bucketIdToString(partFileIndex(base))
-            val dot = base.indexOf('.')
-            base.substring(0, dot) + tag + base.substring(dot)
-          case None => base
-        }
-        val name = s"v${vNext}_$namePart$tagged"
-        Files.move(p, dst.resolve(name))
-        dst.resolve(name).toString
+    val staged = stageFiles(prepared, path) { base =>
+      val tagged = bucket match {
+        case Some(_) =>
+          val tag = org.apache.spark.sql.GraftSqlBridge
+            .bucketIdToString(partFileIndex(base))
+          val dot = base.indexOf('.')
+          base.substring(0, dot) + tag + base.substring(dot)
+        case None => base
       }
+      s"v${vNext}_$namePart$tagged"
+    }
+    (staged, statsLines(spark, staged, prepared.schema))
   }
 
   /** A50 — create a BUCKETED versioned table: the bootstrap routes
@@ -1256,8 +1240,9 @@ object Snapshots {
     require(numBuckets > 0 && numBuckets <= 100000,
       s"graft: numBuckets $numBuckets out of range (1..100000)")
     Files.createDirectories(Paths.get(path))
-    val staged = stageData(df, None, path, 0, Some((bucketCol, numBuckets)))
-    commit(path, staged, Some(df.schema), statsLines(spark, staged, df.schema),
+    val (staged, stats) =
+      stageData(spark, df, None, path, 0, Some((bucketCol, numBuckets)))
+    commit(path, staged, Some(df.schema), stats,
       cdfFlag = changeDataFeed,
       bucketOverride = Some((bucketCol, numBuckets)))
   }
@@ -1345,16 +1330,7 @@ object Snapshots {
       }
       .toDF("file", "bits")
       .select(col("file"), lit(column).as("col"), col("bits"))
-    val stage = Files.createTempDirectory("graft_bloom").toString
-    sidecar.write.mode(SaveMode.Overwrite).parquet(stage)
-    val dst = Paths.get(path)
-    listDir(Paths.get(stage))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val name = s"v${vNext}_bloom_${p.getFileName.toString}"
-        Files.move(p, dst.resolve(name))
-        dst.resolve(name).toString
-      }
+    stageFiles(sidecar, path)(n => s"v${vNext}_bloom_$n")
   }
 
   /** Sidecar refs for `staged` when the table's bloom property is on —
@@ -1373,8 +1349,7 @@ object Snapshots {
     */
   def addBloomIndex(spark: SparkSession, path: String, column: String,
       bitsPerRow: Int = 10): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     require(!bloomColsOf(path, v).exists(_._1 == column),
       s"bloom index already on '$column'")
     require(bitsPerRow >= 2 && bitsPerRow <= 64, "bitsPerRow in [2, 64]")
@@ -1410,8 +1385,7 @@ object Snapshots {
     * restored without touching already-indexed files. Returns the new
     * version (current if nothing to do). */
   def reindexBloom(spark: SparkSession, path: String): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     val cols = bloomColsOf(path, v)
     require(cols.nonEmpty, s"$path has no bloom index")
     val live = liveFiles(path, v).map(canonical)
@@ -1428,9 +1402,7 @@ object Snapshots {
       else stageBloomSidecar(spark, path, v + 1, missing, column, bpr)
     }
     if (extra.isEmpty) return v
-    commitNext(path, v, liveFiles(path, v), tableSchema(path, v),
-      carriedStats(path, v, liveFiles(path, v)), dvFiles(path, v),
-      cdf = Some(Seq.empty), bloomExtra = extra)
+    commitDml(path, v)(bloom = extra)
   }
 
   /** A41 — POINT LOOKUP with bloom file skipping: read exactly the
@@ -1781,14 +1753,9 @@ object Snapshots {
     * action, then fall back to `recompute` — one plain aggregate over
     * the already-materialized frame; never wrong, at worst one extra
     * cheap job on a listener hiccup. */
-  private[graft] def observedCounts(obs: org.apache.spark.sql.Observation,
+  private[graft] def observedCounts(obs: Observation,
       names: Seq[String], recompute: () => Seq[Long]): Seq[Long] = {
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    var m = org.apache.spark.sql.GraftSqlBridge.observedOrEmpty(obs)
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(2)
-      m = org.apache.spark.sql.GraftSqlBridge.observedOrEmpty(obs)
-    }
+    val m = awaitObserved(obs)
     if (m.nonEmpty) names.map(n => m(n).asInstanceOf[Long]) else recompute()
   }
 
@@ -1870,16 +1837,7 @@ object Snapshots {
       .toDF("file", "col", "bits")
       .localCheckpoint()
     if (rows.isEmpty) return Seq.empty
-    val stage = Files.createTempDirectory("graft_bloom_pub").toString
-    rows.write.mode(SaveMode.Overwrite).parquet(stage)
-    val dst = Paths.get(mainPath)
-    listDir(Paths.get(stage))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val name = s"v${vNext}_bloom_${p.getFileName.toString}"
-        Files.move(p, dst.resolve(name))
-        dst.resolve(name).toString
-      }
+    stageFiles(rows, mainPath)(n => s"v${vNext}_bloom_$n")
   }
 
   private def parseCluster(lines: Seq[String]): Option[Seq[String]] =
@@ -1923,8 +1881,7 @@ object Snapshots {
       bloomColsOverride: Option[Seq[(String, Int)]] = None,
       bloomExtra: Seq[String] = Seq.empty,
       bucketOverride: Option[(String, Int)] = None,
-      txnSet: Option[(String, Long)] = None,
-      txnSetMulti: Seq[(String, Long)] = Seq.empty): Boolean = {
+      txn: Seq[(String, Long)] = Seq.empty): Boolean = {
     Files.createDirectories(logDir(path))
     // any v0 commit is a table BIRTH (init, clone bootstrap, branch
     // re-creation after dropBranch): purge the path's cached
@@ -1940,8 +1897,7 @@ object Snapshots {
     // expire (an abandoned begin frees the table); post-COMMIT fences
     // are hardened until the redo completes — GraftTxn.recover().
     fenceOwner(path).foreach { case (owner, expiry) =>
-      if (expiry > System.currentTimeMillis() &&
-          !(txnSet.toSeq ++ txnSetMulti).exists(_._1 == owner))
+      if (expiry > System.currentTimeMillis() && !txn.exists(_._1 == owner))
         throw new java.util.ConcurrentModificationException(
           s"$path is fenced by multi-table transaction '$owner' until " +
             "its publish completes (GraftTxn.recover() finishes a " +
@@ -1998,7 +1954,7 @@ object Snapshots {
       // A51: per-app txn marks self-carry; a commit tagging (app, ver)
       // replaces that app's line with max(prev, ver) — monotonic even
       // if a caller's pre-check raced a concurrent same-app writer
-      val txnLines = (txnSet.toSeq ++ txnSetMulti) match {
+      val txnLines = txn match {
         case Seq() => prev.filter(_.startsWith(TxnHeader))
         case marks => // several apps may mark ONE commit (A57 join MVs
           // consume two bases atomically); each app keeps its max
@@ -2066,8 +2022,7 @@ object Snapshots {
       // moved or a moved base it refuses on — never a silently lost
       // fast-forward.
       if (won) fenceOwner(path).foreach { case (owner, expiry) =>
-        if (expiry > System.currentTimeMillis() &&
-            !(txnSet.toSeq ++ txnSetMulti).exists(_._1 == owner)) {
+        if (expiry > System.currentTimeMillis() && !txn.exists(_._1 == owner)) {
           Files.deleteIfExists(target)
           manifestCache.keySet.removeIf(
             _._1 == target.toAbsolutePath.toString)
@@ -2092,12 +2047,11 @@ object Snapshots {
       bloomColsOverride: Option[Seq[(String, Int)]] = None,
       bloomExtra: Seq[String] = Seq.empty,
       bucketOverride: Option[(String, Int)] = None,
-      txnSet: Option[(String, Long)] = None,
-      txnSetMulti: Seq[(String, Long)] = Seq.empty): Int = {
+      txn: Seq[(String, Long)] = Seq.empty): Int = {
     val v = currentVersion(path) + 1
     if (!commitAt(path, v, files, schema, stats, dv, cdf, cdfFlag,
         constraintsOverride, clusterOverride, bloomColsOverride, bloomExtra,
-        bucketOverride, txnSet, txnSetMulti))
+        bucketOverride, txn))
       throw new java.nio.file.FileAlreadyExistsException(
         manifestPath(path, v).toString)
     v
@@ -2122,15 +2076,267 @@ object Snapshots {
       clusterOverride: Option[(Seq[String], Seq[String])] = None,
       bloomColsOverride: Option[Seq[(String, Int)]] = None,
       bloomExtra: Seq[String] = Seq.empty,
-      txnSet: Option[(String, Long)] = None,
-      txnSetMulti: Seq[(String, Long)] = Seq.empty): Int = {
+      txn: Seq[(String, Long)] = Seq.empty): Int = {
     if (!commitAt(path, base + 1, files, schema, stats, dv, cdf, cdfFlag,
         constraintsOverride, clusterOverride, bloomColsOverride, bloomExtra,
-        txnSet = txnSet, txnSetMulti = txnSetMulti))
+        txn = txn))
       throw new java.nio.file.FileAlreadyExistsException(
         manifestPath(path, base + 1).toString +
           " (concurrent commit won this version; re-read and retry)")
     base + 1
+  }
+
+  // ── The steps of a DML commit, each written once ───────────────────
+  // Every keyed and predicate DML verb reads the head (validating its
+  // txn marks first), pins its batch, finds its candidate files, stages
+  // data / DV / change rows through one staging helper and commits
+  // through [[commitDml]] (or, for CoW merge and append, the rebasing
+  // [[commitRebasing]]).
+
+  /** The head version a DML commit reads. Txn marks are validated here,
+    * before anything is staged: `commitAt` writes an app id raw into
+    * `#txn=<app>\t<ver>`, so a tab would hide the mark from
+    * [[txnVersionOf]] and a newline would add a bogus live-file line. */
+  private def headOf(path: String, marks: Seq[(String, Long)] = Nil): Int = {
+    marks.foreach(m => requireTxnApp(m._1))
+    val v = currentVersion(path)
+    require(v >= 0, s"$path not initialized (call init)")
+    v
+  }
+
+  /** A51: every mark is already recorded at `v` — the write is a replay
+    * and commits nothing. */
+  private def replayed(path: String, v: Int, marks: Seq[(String, Long)]): Boolean =
+    marks.nonEmpty && marks.forall { case (app, ver) =>
+      txnVersionOf(path, v, app).exists(_ >= ver) }
+
+  /** `df` for a commit that derives several artifacts from it: one
+    * evaluation must feed them all, or a non-deterministic plan could
+    * commit mutually inconsistent pieces. Pinned and stable-snapshot
+    * frames already evaluate identically per action (see
+    * [[isStableSnapshot]]); anything else is checkpointed. */
+  private def pinned(df: DataFrame): DataFrame =
+    if (isPinned(df) || isStableSnapshot(df)) df else df.localCheckpoint()
+
+  /** The recorded schema of `v`, or the live files' inferred one. */
+  private def schemaAt(spark: SparkSession, path: String, v: Int,
+      live: Seq[String]): StructType =
+    tableSchema(path, v).getOrElse(readUnder(spark, path, v, live).schema)
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  /** `df`'s columns laid out as `schema`, NULL where `df` lacks one. */
+  private def filledTo(df: DataFrame, schema: StructType): IndexedSeq[Column] =
+    schema.fields.toIndexedSeq.map(f =>
+      (if (df.columns.contains(f.name)) col(s"`${f.name}`")
+       else lit(null).cast(f.dataType)).as(f.name))
+
+  /** The keyed-merge checks: a non-empty, duplicate-free key list that
+    * the table holds, and one batch row per key tuple (MERGE
+    * cardinality). Returns the batch key summary — one action, or none
+    * when the partition router computed it already. */
+  private def mergeKeys(batch: DataFrame, keyCols: Seq[String],
+      schemaNow: StructType, pre: Option[BatchKeySummary],
+      verb: String): BatchKeySummary = {
+    require(keyCols.nonEmpty, "merge: empty key column list")
+    require(keyCols.distinct.size == keyCols.size,
+      s"merge: duplicate key column in ${keyCols.mkString(", ")}")
+    keyCols.foreach(k => require(schemaNow.fieldNames.contains(k),
+      s"$verb: no key column '$k' in ${schemaNow.fieldNames.mkString(", ")}"))
+    val summary = pre.getOrElse(
+      batchKeySummary(batch, keyCols, schemaNow(keyCols.head).dataType))
+    require(!summary.hasDupTuples,
+      s"merge: duplicate '${keyCols.mkString(", ")}' keys in the source " +
+        "violate MERGE cardinality on a keyed table")
+    summary
+  }
+
+  /** Live files of `v` whose lead-key range may hold a key of `keys`.
+    * With the batch's key summary in hand, a driver-side walk of the
+    * manifest ranges (no job); past the compare budget, or without a
+    * summary, the stats semi-join against the broadcast keys. Composite
+    * keys prune on the leading column only — trailing columns refine
+    * membership, never discovery. A manifest without complete ranges
+    * scans the live files for them, or, with `scanLegacy = false`
+    * (callers that read every candidate anyway), takes every file. */
+  private def filesByKey(spark: SparkSession, path: String, v: Int,
+      live: Seq[String], leadKey: String,
+      keyType: org.apache.spark.sql.types.DataType, keys: DataFrame,
+      summary: Option[BatchKeySummary],
+      scanLegacy: Boolean = true): IndexedSeq[String] = {
+    val ranges = manifestRanges(path, v, live, leadKey)
+    if (ranges.isEmpty && !scanLegacy) return live.toIndexedSeq
+    ranges.flatMap(r => summary.flatMap(
+      touchedByRanges(r, keyType, _, plannerTouchedMaxCompares(spark))))
+      .getOrElse {
+        val stats = ranges match {
+          case Some(rows) => keyRangeFrame(spark, rows, keyType)
+          case None => readUnder(spark, path, v, live)
+            .withColumn("file", input_file_name())
+            .groupBy("file")
+            .agg(min(col(s"`$leadKey`")).as("kmin"),
+              max(col(s"`$leadKey`")).as("kmax"))
+        }
+        stats.join(broadcast(keys.select(col(s"`$leadKey`").as("__k")).distinct()),
+            keyRangeCond(col("__k")), "left_semi")
+          .select("file").collect().map(r => canonical(r.getString(0)))
+          .toIndexedSeq
+      }
+  }
+
+  /** Per distinct value of `df`'s one string column, its row count:
+    * per-partition counts summed on the driver — one shuffle-free job,
+    * where a `distinct`/`groupBy` probe submits two under AQE. */
+  private def valueCounts(df: DataFrame): Map[String, Long] = {
+    val counts = df.as(Encoders.STRING).mapPartitions { it =>
+      val m = scala.collection.mutable.HashMap.empty[String, Long]
+      it.foreach(f => m(f) = m.getOrElse(f, 0L) + 1L)
+      m.iterator
+    }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong)).collect()
+    counts.groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
+  /** Which data files the DV sidecars `dvs` mark, with their dead-row
+    * counts (canonical paths). Sidecar positions are disjoint, so the
+    * counts are exact. */
+  private def dvMarks(spark: SparkSession, dvs: Seq[String]): Map[String, Long] =
+    valueCounts(readDv(spark, dvs).select("__dv_file"))
+      .groupMapReduce(e => canonical(e._1))(_._2)(_ + _)
+
+  /** The files among `cands` holding a row where `hit` is true. */
+  private def filesMatching(spark: SparkSession, path: String, v: Int,
+      cands: Seq[String], hit: Column): Seq[String] =
+    if (cands.isEmpty) Seq.empty
+    else valueCounts(readUnder(spark, path, v, cands).filter(hit)
+      .select(input_file_name())).keys.map(canonical).toSeq.distinct
+
+  /** Metrics `obs` collected on an action that already ran. The
+    * listener publishing them is async: poll briefly; empty if none
+    * arrived within 10 s. */
+  private def awaitObserved(obs: Observation): Map[String, Any] = {
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    var m = org.apache.spark.sql.GraftSqlBridge.observedOrEmpty(obs)
+    while (m.isEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(2)
+      m = org.apache.spark.sql.GraftSqlBridge.observedOrEmpty(obs)
+    }
+    m
+  }
+
+  private def deleteTree(dir: java.nio.file.Path): Unit = {
+    val walk = Files.walk(dir)
+    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach { p => Files.deleteIfExists(p); () }
+    finally walk.close()
+  }
+
+  /** The one staging step: write `df` to a fresh temp dir and move its
+    * parquet parts into `dst` under `name(part file name)`. The temp dir
+    * — with the writer's `_SUCCESS` and `.crc` files — is removed
+    * whether the write succeeds or not. With `skipEmpty`, an all-empty
+    * write stages nothing (the emptiness answer comes from the written
+    * footers, driver-side, instead of a probe job). */
+  private def stageFiles(df: DataFrame, dst: String, skipEmpty: Boolean = false)(
+      name: String => String): Seq[String] = {
+    val stage = Files.createTempDirectory("graft_stage")
+    try {
+      df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      val parts = listDir(stage).filter(_.getFileName.toString.endsWith(".parquet"))
+      if (skipEmpty && parts.forall(p => parquetRowCount(p.toString) == 0L)) Seq.empty
+      else parts.map { p =>
+        val to = Paths.get(dst).resolve(name(p.getFileName.toString))
+        Files.move(p, to)
+        to.toString
+      }
+    } finally deleteTree(stage)
+  }
+
+  /** Stage `doomed` (`__dv_file`, `__dv_pos` and the dead rows'
+    * pre-images) as version `v + 1`'s DV sidecars; an empty set stages
+    * nothing. Which files the sidecars mark is observed on the write
+    * itself and memoized in [[dvMarkCache]]. */
+  private def stageDv(path: String, v: Int, doomed: DataFrame): Seq[String] = {
+    val obs = Observation()
+    val staged = stageFiles(
+      doomed.observe(obs, collect_set(col("__dv_file")).as("__dvf")), path,
+      skipEmpty = true)(n => s"v${v + 1}_dv_$n")
+    if (staged.nonEmpty) awaitObserved(obs).get("__dvf").foreach { fs =>
+      val files = fs.asInstanceOf[scala.collection.Seq[String]].map(canonical).toSet
+      staged.foreach(f => dvMarkCache.put(canonical(f), files))
+    }
+    staged
+  }
+
+  /** Version `v + 1`'s artifacts, staged overlapped (guide §2.6): the
+    * data rows (their stats scan rides the same thunk), the DV marks
+    * and the change rows are independent writes over one evaluation.
+    * Returns (data files, their stat lines, DV refs, change-data refs —
+    * None when `cdf` is None, i.e. the table records no change data). */
+  private def stageArtifacts(spark: SparkSession, path: String, v: Int,
+      data: DataFrame, outSchema: Option[StructType],
+      dv: Option[DataFrame] = None, cdf: Option[DataFrame] = None)
+      : (Seq[String], Seq[String], Seq[String], Option[Seq[String]]) = {
+    val thunks: Seq[(String, () => (Seq[String], Seq[String]))] =
+      Seq("data" -> (() => stageData(spark, data, outSchema, path, v + 1,
+        bucketSpecOf(path, v)))) ++
+        dv.map(d => "dv" -> (() => (stageDv(path, v, d), Seq.empty[String]))) ++
+        cdf.map(c => "cdf" -> (() => (stageCdf(path, v, c), Seq.empty[String])))
+    val arts = Par.map(spark, thunks)(t => t._1 -> t._2()).toMap
+    (arts("data")._1, arts("data")._2, arts.get("dv").fold(Seq.empty[String])(_._1),
+      arts.get("cdf").map(_._1))
+  }
+
+  /** Commit `v + 1` as `v`'s live set minus `touched` plus `staged`: the
+    * retained files' stats carry, `stagedStats` describe the new ones,
+    * and `v`'s schema and DVs hold unless given. With nothing touched
+    * or staged it commits the same table — a DML that found nothing to
+    * change, or a metadata-only change. A lost race refuses loudly
+    * ([[commitNext]]). */
+  private def commitDml(path: String, v: Int)(touched: Seq[String] = Nil,
+      staged: Seq[String] = Nil, stagedStats: Seq[String] = Nil,
+      schema: Option[StructType] = tableSchema(path, v),
+      dv: Seq[String] = dvFiles(path, v),
+      cdf: Option[Seq[String]] = Some(Seq.empty),
+      bloom: Seq[String] = Nil, marks: Seq[(String, Long)] = Nil): Int = {
+    val gone = touched.map(canonical).toSet
+    val retained = liveFiles(path, v).filterNot(f => gone.contains(canonical(f)))
+    commitNext(path, v, retained ++ staged, schema,
+      carriedStats(path, v, retained) ++ stagedStats, dv, cdf,
+      bloomExtra = bloom, txn = marks)
+  }
+
+  /** The rebasing commit of CoW merge and append: land on `v + 1`, and
+    * on a lost race land on the winner instead — unless the winner
+    * recorded `marks` (a concurrent run of the same txn lineage already
+    * applied the batch: no-op) or `conflict(base, winner)` refuses.
+    * The winner's schema is widened by the batch's new columns. */
+  private def commitRebasing(path: String, v: Int, verb: String,
+      maxRetries: Int, touched: Set[String], staged: Seq[String],
+      stagedStats: Seq[String], outSchema: StructType,
+      cdf: Option[Seq[String]], bloom: Seq[String],
+      marks: Seq[(String, Long)])(conflict: (Int, Int) => Unit): Int = {
+    var base = v
+    var attempt = 0
+    while (true) {
+      val retained = liveFiles(path, base).filterNot(f => touched.contains(canonical(f)))
+      val schema =
+        if (base == v) outSchema
+        else tableSchema(path, base).fold(outSchema)(w => StructType(w.fields ++
+          outSchema.fields.filterNot(f => w.fieldNames.contains(f.name))))
+      if (commitAt(path, base + 1, retained ++ staged, Some(schema),
+          carriedStats(path, base, retained) ++ stagedStats, dvFiles(path, base),
+          cdf = cdf, bloomExtra = bloom, txn = marks)) return base + 1
+      attempt += 1
+      if (attempt > maxRetries)
+        throw new java.util.ConcurrentModificationException(
+          s"$verb on $path lost $attempt commit races")
+      val w = currentVersion(path)
+      if (replayed(path, w, marks)) return w
+      conflict(base, w)
+      base = w
+    }
+    -1 // unreachable
   }
 
   // ── A59: TYPE WIDENING (the Delta type-widening pattern) ───────────
@@ -2161,8 +2367,7 @@ object Snapshots {
     * the schema is recorded per version like any other evolution. */
   def widenColumn(spark: SparkSession, path: String, column: String,
       to: org.apache.spark.sql.types.DataType): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     val schemaNow = tableSchema(path, v).getOrElse(read(spark, path, v).schema)
     require(schemaNow.fieldNames.contains(column),
       s"widen: no column '$column' in ${schemaNow.fieldNames.mkString(", ")}")
@@ -2174,9 +2379,7 @@ object Snapshots {
     // survives the type change
     val widened = org.apache.spark.sql.types.StructType(schemaNow.fields.map(
       f => if (f.name == column) f.copy(dataType = to) else f))
-    val live = liveFiles(path, v)
-    commitNext(path, v, live, Some(widened), carriedStats(path, v, live),
-      dvFiles(path, v),
+    commitDml(path, v)(schema = Some(widened),
       cdf = if (cdfEnabled(path, v)) Some(Seq.empty) else None)
   }
 
@@ -2191,8 +2394,7 @@ object Snapshots {
     * NULLABLE (existing rows have no value for it). */
   def addColumn(spark: SparkSession, path: String, column: String,
       dataType: org.apache.spark.sql.types.DataType): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     val schemaNow = tableSchema(path, v).getOrElse(read(spark, path, v).schema)
     require(!schemaNow.fieldNames.contains(column),
       s"add column: '$column' already exists in " +
@@ -2200,9 +2402,7 @@ object Snapshots {
     val extended = org.apache.spark.sql.types.StructType(
       schemaNow.fields :+ org.apache.spark.sql.types.StructField(
         column, dataType, nullable = true))
-    val live = liveFiles(path, v)
-    commitNext(path, v, live, Some(extended), carriedStats(path, v, live),
-      dvFiles(path, v),
+    commitDml(path, v)(schema = Some(extended),
       cdf = if (cdfEnabled(path, v)) Some(Seq.empty) else None)
   }
 
@@ -2247,8 +2447,7 @@ object Snapshots {
     */
   def renameColumn(spark: SparkSession, path: String,
       from: String, to: String): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     val live = liveFiles(path, v)
     val schema = tableSchema(path, v).getOrElse(
       spark.read.parquet(live: _*).schema)
@@ -2262,8 +2461,7 @@ object Snapshots {
             .build())
       else f
     }
-    commitNext(path, v, live, Some(org.apache.spark.sql.types.StructType(fields)),
-      carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty))
+    commitDml(path, v)(schema = Some(StructType(fields)))
   }
 
   /** A24 — DROP COLUMN as a metadata-only commit: the field leaves the
@@ -2271,16 +2469,14 @@ object Snapshots {
     * prior version still time-travels to it. Returns the new version.
     */
   def dropColumn(spark: SparkSession, path: String, name: String): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     val live = liveFiles(path, v)
     val schema = tableSchema(path, v).getOrElse(
       spark.read.parquet(live: _*).schema)
     require(schema.fieldNames.contains(name), s"dropColumn: no column '$name'")
     val fields = schema.fields.filterNot(_.name == name)
     require(fields.nonEmpty, "dropColumn: cannot drop the last column")
-    commitNext(path, v, live, Some(org.apache.spark.sql.types.StructType(fields)),
-      carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty))
+    commitDml(path, v)(schema = Some(StructType(fields)))
   }
 
   /** A28 — RESTORE TABLE TO VERSION (the Delta RESTORE pattern): roll
@@ -2295,8 +2491,7 @@ object Snapshots {
     * the retention horizon is impossible, by design).
     */
   def restore(path: String, toV: Int): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     require(Files.exists(manifestPath(path, toV)),
       s"restore: no version $toV at $path (vacuumed or never committed)")
     val live = liveFiles(path, toV)
@@ -2376,13 +2571,7 @@ object Snapshots {
     // with the source; everything else links as before
     val touched: Set[String] =
       if (dvs.isEmpty) Set.empty
-      else {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val liveSet = live.toSet
-        readDv(spark, dvs).select("__dv_file").distinct()
-          .collect().map(r => canonical(r.getString(0)))
-          .filter(liveSet.contains).toSet
-      }
+      else dvMarks(SparkSession.active, dvs).keySet.intersect(live.toSet)
     val taken = scala.collection.mutable.Set.empty[String]
     def copyIn(f: String): String = {
       val srcP = Paths.get(f)
@@ -2415,21 +2604,14 @@ object Snapshots {
       if (touched.isEmpty) (Seq.empty, Seq.empty)
       else {
         val spark = org.apache.spark.sql.SparkSession.active
-        val keptRows = readLive(spark, src, v, touched.toIndexedSeq)
-        val stage = Files.createTempDirectory("graft_clone_mat").toString
-        val out = stagedFrame(keptRows, tableSchema(src, v))
-        out.write.mode(SaveMode.Overwrite).parquet(stage)
-        val moved = listDir(Paths.get(stage))
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map { p =>
-            var name = s"mat_${p.getFileName.toString}"
-            var i = 0
-            while (!taken.add(name)) { i += 1
-              name = s"mat${i}_${p.getFileName.toString}" }
-            val dstP = Paths.get(dst, name)
-            Files.move(p, dstP)
-            dstP.toString
-          }
+        val out = stagedFrame(readLive(spark, src, v, touched.toIndexedSeq),
+          tableSchema(src, v))
+        val moved = stageFiles(out, dst) { n =>
+          var name = s"mat_$n"
+          var i = 0
+          while (!taken.add(name)) { i += 1; name = s"mat${i}_$n" }
+          name
+        }
         (moved, statsLines(spark, moved, out.schema))
       }
     commit(dst, linked.map(renames) ++ matFiles, tableSchema(src, v),
@@ -2460,45 +2642,21 @@ object Snapshots {
     * the LEADING key column's per-file [min,max] ranges (A27), so a
     * batch clustered on the first key still touches only its own
     * files — users no longer pre-concat a synthetic key and lose
-    * pruning on the real columns. */
-  def mergeVersioned(spark: SparkSession, path: String,
-      updates: DataFrame, keyCols: Seq[String]): Int =
-    mergeVersionedOCC(spark, path, updates, keyCols, maxRetries = 5,
-      beforeCommit = () => ())
-
-  /** A51 — [[mergeVersioned]] under a transaction mark (Delta's
-    * `txnAppId`/`txnVersion` idempotent-write contract): a replay of
-    * an already-recorded (appId, version) returns the current version
+    * pruning on the real columns.
+    *
+    * A51 — `txn = Some((appId, version))` is Delta's
+    * `txnAppId`/`txnVersion` idempotent-write contract: a replay of an
+    * already-recorded (appId, version) returns the current version
     * without staging a byte, and the mark rides the same manifest CAS
     * as the merge itself — exactly-once versions even if the caller
     * crashes between commit and its own bookkeeping, and even against
     * a concurrent instance of the same lineage (the OCC retry
     * re-checks the winner's mark instead of rebasing). */
-  def mergeVersionedIdempotent(spark: SparkSession, path: String,
-      updates: DataFrame, keyCol: String, txnAppId: String,
-      txnVersion: Long): Int =
-    mergeVersionedIdempotent(spark, path, updates, Seq(keyCol), txnAppId,
-      txnVersion)
-
-  /** Composite-key form of [[mergeVersionedIdempotent]] (r15). */
-  def mergeVersionedIdempotent(spark: SparkSession, path: String,
-      updates: DataFrame, keyCols: Seq[String], txnAppId: String,
-      txnVersion: Long): Int = {
-    requireTxnApp(txnAppId)
-    mergeVersionedOCC(spark, path, updates, keyCols, maxRetries = 5,
-      beforeCommit = () => (), txn = Some((txnAppId, txnVersion)))
-  }
-
-  /** r16 — [[mergeVersioned]]/[[mergeVersionedIdempotent]] with a
-    * router-precomputed key summary (see [[partitionedKeySummaries]]). */
-  private[sources] def mergeVersionedPre(spark: SparkSession, path: String,
+  def mergeVersioned(spark: SparkSession, path: String,
       updates: DataFrame, keyCols: Seq[String],
-      txn: Option[(String, Long)],
-      preSummary: Option[BatchKeySummary]): Int = {
-    txn.foreach(m => requireTxnApp(m._1))
+      txn: Option[(String, Long)] = None): Int =
     mergeVersionedOCC(spark, path, updates, keyCols, maxRetries = 5,
-      beforeCommit = () => (), txn = txn, preSummary = preSummary)
-  }
+      beforeCommit = () => (), txn = txn)
 
   /** A52 — the FULL conditional MERGE (see [[MergeWhen]]): ordered
     * WHEN clauses applied first-match-wins per row, ANSI/Delta
@@ -2560,42 +2718,22 @@ object Snapshots {
       txn: Option[(String, Long)],
       txnMulti: Seq[(String, Long)]): Int = {
     import MergeWhen._
-    require(keyCols.nonEmpty, "merge: empty key column list")
-    require(keyCols.distinct.size == keyCols.size,
-      s"merge: duplicate key column in ${keyCols.mkString(", ")}")
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
-    // A51: already-recorded marks make the whole statement a replay —
-    // return without staging a byte. Multi-mark commits (A57) record
-    // all marks atomically, so any ONE recorded ⇒ all recorded; the
-    // forall is belt-and-braces against a hand-built mark state.
-    val allMarks = txn.toSeq ++ txnMulti
-    if (allMarks.nonEmpty) {
-      allMarks.foreach(m => requireTxnApp(m._1))
-      if (allMarks.forall { case (app, ver) =>
-        txnVersionOf(path, v, app).exists(_ >= ver) }) return v
-    }
+    val marks = txn.toSeq ++ txnMulti
+    val v = headOf(path, marks)
+    // A51: already-recorded marks make the whole statement a replay.
+    // Multi-mark commits (A57) record all marks atomically, so any ONE
+    // recorded ⇒ all recorded; checking all is belt-and-braces against
+    // a hand-built mark state.
+    if (replayed(path, v, marks)) return v
     require(clauses.nonEmpty, "mergeVersionedClauses: no WHEN clauses")
     // one evaluation of the source feeds the cardinality check, the
     // touched-file discovery, the clause cascade and the change rows
-    // (r15 — the shared merge discipline); an MV refresh's source is a
-    // whole change-feed delta aggregate, re-computed per action before.
-    // r16: a stable-snapshot source (deterministic project/filter over
-    // immutable files) skips the pin — re-evaluation is one cheap pass
-    // each consumer pays inside its own job, and the unconditional pin
-    // was the r15 merge-verb regression.
-    val source =
-      if (isPinned(sourceIn) || isStableSnapshot(sourceIn)) sourceIn
-      else sourceIn.localCheckpoint()
+    // (an MV refresh's source is a whole change-feed delta aggregate)
+    val source = pinned(sourceIn)
     val live = liveFiles(path, v)
-    lazy val target = readUnder(spark, path, v, live)
-    val schemaNow = tableSchema(path, v).getOrElse(target.schema)
-    keyCols.foreach { k =>
-      require(schemaNow.fieldNames.contains(k),
-        s"merge: no key column '$k' in ${schemaNow.fieldNames.mkString(", ")}")
-      require(source.columns.contains(k),
-        s"merge: source lacks the key column '$k'")
-    }
+    val schemaNow = schemaAt(spark, path, v, live)
+    keyCols.foreach(k => require(source.columns.contains(k),
+      s"merge: source lacks the key column '$k'"))
 
     val matchedCs: Seq[MergeWhen] = clauses.filter {
       case _: MatchedUpdate | _: MatchedDelete => true; case _ => false }
@@ -2639,43 +2777,18 @@ object Snapshots {
           s"merge: INSERT must provide the key column '$k'"))
       case _ =>
     }
-    // r16: one action answers the cardinality refusal and (when the
-    // manifest ranges are complete) candidate-file discovery runs
-    // driver-side from the collected lead keys — two actions before
-    val leadKey = keyCols.head
-    val keyType = schemaNow(leadKey).dataType
-    val summary = batchKeySummary(source, keyCols, keyType)
-    require(!summary.hasDupTuples,
-      s"merge: duplicate '${keyCols.mkString(", ")}' keys in the source " +
-        "violate MERGE cardinality on a keyed table")
-
+    // one action answers the cardinality refusal, and candidate-file
+    // discovery runs driver-side from the collected lead keys
+    val summary = mergeKeys(source, keyCols, schemaNow, None, "merge")
     val touched: Seq[String] =
       if (bySourceCs.nonEmpty) live.map(canonical)
-      else manifestRanges(path, v, live, leadKey)
-        .flatMap(touchedByRanges(_, keyType, summary,
-          plannerTouchedMaxCompares(spark)))
-        .getOrElse {
-          val stats = manifestRanges(path, v, live, leadKey) match {
-            case Some(rows) => keyRangeFrame(spark, rows, keyType)
-            case None => target
-              .withColumn("file", input_file_name())
-              .groupBy("file")
-              .agg(min(col(s"`$leadKey`")).as("kmin"),
-                max(col(s"`$leadKey`")).as("kmax"))
-          }
-          val keys = source.select(col(s"`$leadKey`").as("__k")).distinct()
-          stats.join(broadcast(keys), keyRangeCond(col("__k")), "left_semi")
-            .select("file").collect().map(r => canonical(r.getString(0)))
-            .toIndexedSeq
-        }
+      else filesByKey(spark, path, v, live, keyCols.head,
+        schemaNow(keyCols.head).dataType, source, Some(summary))
     if (touched.isEmpty && insertCs.isEmpty) // nothing can fire
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), dvFiles(path, v),
-        cdf = Some(Seq.empty), txnSet = txn, txnSetMulti = txnMulti)
+      return commitDml(path, v)(marks = marks)
 
     val oldTouched =
-      if (touched.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaNow)
+      if (touched.isEmpty) emptyFrame(spark, schemaNow)
       else readLive(spark, path, v, touched.toIndexedSeq)
     val srcP = source.select(source.columns.toIndexedSeq.map(c =>
       col(s"`$c`").as(srcName(c))) :+ lit(true).as("__src_present"): _*)
@@ -2840,113 +2953,58 @@ object Snapshots {
               "__pre", lit("update_preimage"))))
       }
 
-    // r16: the rewrite write, its stats scan, and the stored-change
-    // write are independent — overlapped (guide §2.6)
-    val (staged, stagedStats, cdfStaged) = stageDataAndCdf(spark,
-      rewritten, Some(outSchema), path, v, bucketSpecOf(path, v),
-      "graft_snap", cdfRows)
-    val touchedSet = touched.map(canonical).toSet
-    val retained = live.filterNot(f => touchedSet.contains(canonical(f)))
-    commitNext(path, v, retained ++ staged,
-      if (newCols.isEmpty && widenedNow == schemaNow) tableSchema(path, v)
-      else Some(outSchema),
-      carriedStats(path, v, retained) ++ stagedStats,
-      dvFiles(path, v), cdf = cdfStaged,
-      bloomExtra = maybeBloom(spark, path, v, staged), txnSet = txn,
-      txnSetMulti = txnMulti)
+    val (staged, stagedStats, _, cdfStaged) = stageArtifacts(spark, path, v,
+      rewritten, Some(outSchema), cdf = cdfRows)
+    commitDml(path, v)(touched, staged, stagedStats,
+      schema = if (newCols.isEmpty && widenedNow == schemaNow) tableSchema(path, v)
+        else Some(outSchema),
+      cdf = cdfStaged, bloom = maybeBloom(spark, path, v, staged), marks = marks)
   }
 
-  /** [[mergeVersioned]] with the OCC machinery exposed: `maxRetries`
-    * bounds the rebase loop, `beforeCommit` is a test seam that runs
-    * after staging and before the first commit attempt (where a
-    * concurrent winner lands deterministically in the spec). */
+  /** The one keyed-merge body: [[mergeVersioned]]'s copy-on-write
+    * commit with the OCC machinery exposed (`maxRetries` bounds the
+    * rebase loop, `beforeCommit` is a test seam that runs after staging
+    * and before the first commit attempt, where a concurrent winner
+    * lands deterministically in the spec), or, with `mor`,
+    * [[mergeVersionedDV]]'s merge-on-read commit. `preSummary` is the
+    * partition router's key summary for this slice (see
+    * [[partitionedKeySummaries]]): the merge then runs no summary
+    * action of its own. */
   private[graft] def mergeVersionedOCC(spark: SparkSession, path: String,
       updatesIn: DataFrame, keyCols: Seq[String], maxRetries: Int,
       beforeCommit: () => Unit,
       txn: Option[(String, Long)] = None,
-      preSummary: Option[BatchKeySummary] = None): Int = {
-    require(keyCols.nonEmpty, "merge: empty key column list")
-    require(keyCols.distinct.size == keyCols.size,
-      s"merge: duplicate key column in ${keyCols.mkString(", ")}")
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+      preSummary: Option[BatchKeySummary] = None,
+      mor: Boolean = false): Int = {
+    val marks = txn.toSeq
+    val v = headOf(path, marks)
     // A51: a replayed transaction no-ops BEFORE constraints, staging,
     // anything — the whole point is that retries cost nothing
-    txn.foreach { case (app, ver) =>
-      if (txnVersionOf(path, v, app).exists(_ >= ver)) return v
-    }
-    // Materialize the batch ONCE (r15 — the mergeVersionedDV discipline
-    // applied to the CoW path): the key-count check, the rewrite write
-    // and the stored-change write each re-evaluated the caller's plan
-    // per action; one evaluation also closes the same consistency hole
-    // the DV merge's checkpoint closes (a non-deterministic source
-    // re-evaluated per artifact could commit mutually inconsistent
-    // data vs change rows). Already-pinned batches skip the redundant
-    // re-checkpoint; r16: so do STABLE-SNAPSHOT batches (deterministic
-    // projections/filters over immutable file snapshots — same
-    // multiset per evaluation, so the pin bought no consistency and
-    // cost a materialization job per commit: the r15 driver bench's
-    // merge-verb regression).
-    val updates =
-      if (isPinned(updatesIn) || isStableSnapshot(updatesIn)) updatesIn
-      else updatesIn.localCheckpoint()
+    if (replayed(path, v, marks)) return v
+    val updates = pinned(updatesIn)
     // A34: a batch violating a CHECK constraint refuses HERE — before
     // any staging, so a rejected merge leaves zero orphan files
     enforceConstraints(path, v, updates)
     val live = liveFiles(path, v)
-    // the full-table frame is constructed ONLY when needed: with a
-    // recorded schema and complete A27 manifest stats (the steady
-    // state), a merge never lists — let alone scans — untouched files
-    lazy val target = readUnder(spark, path, v, live)
-    val schemaNow = tableSchema(path, v).getOrElse(target.schema)
-    keyCols.foreach(k => require(schemaNow.fieldNames.contains(k),
-      s"merge: no key column '$k' in ${schemaNow.fieldNames.mkString(", ")}"))
-    // file discovery: A27 manifest stats when complete — NO table scan,
-    // merge cost tracks the batch — else the legacy one-column scan.
-    // Composite keys prune on the LEADING key column's ranges: on a
-    // leading-key-clustered layout that is the same file set the
-    // single-key path touches; trailing columns only refine membership,
-    // never file discovery (conservative, never skips a match).
-    val leadKey = keyCols.head
-    val keyType = schemaNow(leadKey).dataType
-    // r16: ONE action — the key summary answers the r13 duplicate-key
-    // refusal (the union below would otherwise land both rows and
-    // break the one-live-row-per-key invariant) AND hands the distinct
-    // lead keys to driver-side file discovery over the manifest ranges
-    // (which were already in driver hands); the r15 shape spent two
-    // actions here (groupBy-count probe + stats semi-join collect).
-    // A partitioned router hands in its slice's summary (ZERO actions
-    // here — the router computed all slices' summaries in one).
-    val summary = preSummary.getOrElse(batchKeySummary(updates, keyCols, keyType))
-    require(!summary.hasDupTuples,
-      s"merge: duplicate '${keyCols.mkString(", ")}' keys in the source " +
-        "violate MERGE cardinality on a keyed table")
-    val touched: Seq[String] = manifestRanges(path, v, live, leadKey)
-      .flatMap(touchedByRanges(_, keyType, summary,
-        plannerTouchedMaxCompares(spark)))
-      .getOrElse {
-        // legacy manifests without complete ranges (scan rebuild), or a
-        // batch×live product past the driver budget: the distributed
-        // semi-join, exactly the pre-r16 shape
-        val stats = manifestRanges(path, v, live, leadKey) match {
-          case Some(rows) => keyRangeFrame(spark, rows, keyType)
-          case None => target
-            .withColumn("file", input_file_name())
-            .groupBy("file")
-            .agg(min(col(s"`$leadKey`")).as("kmin"),
-              max(col(s"`$leadKey`")).as("kmax"))
-        }
-        val keys = updates.select(col(s"`$leadKey`").as("__k")).distinct()
-        stats.join(broadcast(keys), keyRangeCond(col("__k")), "left_semi")
-          .select("file").collect().map(_.getString(0))
-          .map(canonical).toIndexedSeq
-      }
+    // with a recorded schema and complete A27 manifest stats (the
+    // steady state) a merge never lists — let alone scans — untouched
+    // files
+    val schemaNow = schemaAt(spark, path, v, live)
+    // ONE action: the key summary answers the duplicate-key refusal
+    // (the CoW union would otherwise land both rows and break the
+    // one-live-row-per-key invariant) AND hands the distinct lead keys
+    // to driver-side file discovery over the manifest ranges
+    val summary = mergeKeys(updates, keyCols, schemaNow, preSummary,
+      if (mor) "mergeVersionedDV" else "merge")
+    val touched = filesByKey(spark, path, v, live, keyCols.head,
+      schemaNow(keyCols.head).dataType, updates, Some(summary))
+    if (mor) return mergeOnRead(spark, path, v, updates, keyCols, schemaNow,
+      summary, touched, marks)
     // readLive, not readUnder: a DV-deleted row in a touched file must
     // not resurrect through the copy-on-write rewrite
     val oldTouched =
-      if (touched.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaNow)
-      else readLive(spark, path, v, touched.toIndexedSeq)
+      if (touched.isEmpty) emptyFrame(spark, schemaNow)
+      else readLive(spark, path, v, touched)
     val kept = oldTouched
       .join(broadcast(updates.select(keyCols.map(c => col(s"`$c`")): _*)),
         keyCols, "left_anti")
@@ -2959,7 +3017,7 @@ object Snapshots {
     val rewritten = kept.unionByName(updates, allowMissingColumns = true)
     // commit schema = the base version's schema (mapping metadata kept)
     // extended by the batch's new columns (physical = logical for new)
-    val outSchema = org.apache.spark.sql.types.StructType(
+    val outSchema = StructType(
       schemaNow.fields ++ rewritten.schema.fields.filterNot(f =>
         schemaNow.fieldNames.contains(f.name)))
 
@@ -2970,23 +3028,17 @@ object Snapshots {
     // null-safe struct compare. Stored so a single-step feed reads
     // exactly these rows instead of the touched files' full pre+post
     // images.
-    val wantCdf = cdfEnabled(path, v)
-    val cdfRows: Option[DataFrame] = if (!wantCdf) None else {
+    val cdfRows: Option[DataFrame] = if (!cdfEnabled(path, v)) None else {
       val cdfPayload =
         outSchema.fieldNames.filterNot(keyCols.contains).toIndexedSeq
-      def cdfNorm(df: DataFrame): DataFrame =
-        df.select(outSchema.fields.toIndexedSeq.map(f =>
-          (if (df.columns.contains(f.name)) col(f.name)
-           else lit(null).cast(f.dataType)).as(f.name)): _*)
       // composite keys ride as ONE struct join key (non-null by the
       // keyed-table contract), then unpack back to columns
-      val cdfPost = cdfNorm(updates).select(
-        struct(keyCols.map(c => col(s"`$c`")): _*).as("__k"),
-        struct(cdfPayload.map(col): _*).as("__post"))
-      val cdfPre = cdfNorm(oldTouched).select(
-        struct(keyCols.map(c => col(s"`$c`")): _*).as("__k"),
-        struct(cdfPayload.map(col): _*).as("__pre"))
-      val changed = cdfPost.join(cdfPre, Seq("__k"), "left_outer")
+      def keyed(df: DataFrame, image: String): DataFrame =
+        df.select(filledTo(df, outSchema): _*).select(
+          struct(keyCols.map(c => col(s"`$c`")): _*).as("__k"),
+          struct(cdfPayload.map(c => col(s"`$c`")): _*).as(image))
+      val changed = keyed(updates, "__post")
+        .join(keyed(oldTouched, "__pre"), Seq("__k"), "left_outer")
         .withColumn("change_type",
           when(col("__pre").isNull, lit("insert"))
             .when(!(col("__pre") <=> col("__post")), lit("update"))
@@ -3010,66 +3062,33 @@ object Snapshots {
     // data files always land under PHYSICAL names so the live set stays
     // uniform across renames (readUnder aliases back to logical); on a
     // bucketed table (A50) kept ∪ updates re-route through the bucket
-    // hash so every staged file stays bucket-tagged.
-    // r16: the data write, its stats scan, and the stored-change write
-    // are independent (all deterministic over the pinned/stable batch +
-    // the touched files' immutable pre-image) — overlapped (guide §2.6)
-    // instead of paying three sequential job latencies per commit.
-    val (staged, stagedStats, cdfStaged) = stageDataAndCdf(spark,
-      rewritten, Some(outSchema), path, v, bucketSpecOf(path, v),
-      "graft_snap", cdfRows)
+    // hash so every staged file stays bucket-tagged
+    val (staged, stagedStats, _, cdfStaged) = stageArtifacts(spark, path, v,
+      rewritten, Some(outSchema), cdf = cdfRows)
     beforeCommit()
     // A41: index the staged files when the bloom property is on
     val bloomStaged = maybeBloom(spark, path, v, staged)
 
-    // OCC commit: try to land on the base we read; if a concurrent
-    // committer won that version, rebase onto the new head — sound iff
-    // (a) every file we rewrote is STILL live (the winner didn't
-    // rewrite it; our kept rows remain valid), and (b) none of our
-    // update keys appear in the files the winner added (no write-write
-    // key conflict — with (a), any key overlap must surface in the
-    // winner's new files, since a winner rewrite of a file covering
-    // our keys would have retired a file we touched). Disjoint keys +
-    // disjoint files commute, so the result equals either serial
-    // order. Bounded retries; a genuine conflict throws instead of
-    // silently losing the winner's update.
+    // OCC: a lost race rebases onto the new head — sound iff (a) every
+    // file we rewrote is STILL live (the winner didn't rewrite it; our
+    // kept rows remain valid), and (b) none of our update keys appear
+    // in the files the winner added (no write-write key conflict —
+    // with (a), any key overlap must surface in the winner's new
+    // files, since a winner rewrite of a file covering our keys would
+    // have retired a file we touched). Disjoint keys + disjoint files
+    // commute, so the result equals either serial order; a genuine
+    // conflict throws instead of silently losing the winner's update.
     val touchedSet = touched.toSet
-    var base = v
-    var baseLive = live
-    var attempt = 0
-    while (true) {
-      val retained = baseLive.filterNot(f => touchedSet.contains(canonical(f)))
-      val newLive = retained ++ staged
-      val schema =
-        if (base == v) outSchema
-        else tableSchema(path, base) match {
-          case Some(w) => org.apache.spark.sql.types.StructType(w.fields ++
-            outSchema.fields.filterNot(f => w.fieldNames.contains(f.name)))
-          case None => outSchema
-        }
-      if (commitAt(path, base + 1, newLive, Some(schema),
-          carriedStats(path, base, retained) ++ stagedStats,
-          dvFiles(path, base), cdf = cdfStaged,
-          bloomExtra = bloomStaged, txnSet = txn)) return base + 1
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new java.util.ConcurrentModificationException(
-          s"merge on $path lost $attempt commit races")
-      val w = currentVersion(path)
-      // A51: if the winner was a concurrent writer of the SAME txn
-      // lineage (two instances of one job racing), the batch is now
-      // applied — rebasing would double-apply it; no-op instead
-      txn.foreach { case (app, ver) =>
-        if (txnVersionOf(path, w, app).exists(_ >= ver)) return w
-      }
+    commitRebasing(path, v, "merge", maxRetries, touchedSet, staged,
+        stagedStats, outSchema, cdfStaged, bloomStaged, marks) { (base, w) =>
       val liveW = liveFiles(path, w)
       val liveWSet = liveW.map(canonical).toSet
       if (!touched.forall(liveWSet.contains))
         throw new java.util.ConcurrentModificationException(
           s"merge on $path conflicts with version $w: a concurrent commit " +
             "rewrote files this merge also rewrote")
-      val winnerNew = liveW.filterNot(f => liveFiles(path, base).map(canonical)
-        .toSet.contains(canonical(f)))
+      val baseSet = liveFiles(path, base).map(canonical).toSet
+      val winnerNew = liveW.filterNot(f => baseSet.contains(canonical(f)))
       if (winnerNew.nonEmpty) {
         val clash = !readFilesAs(spark, tableSchema(path, w), winnerNew)
           .select(keyCols.map(c => col(s"`$c`")): _*)
@@ -3086,20 +3105,11 @@ object Snapshots {
       // THIS merge rewrote (from the pre-DV image), rebasing would
       // resurrect the freshly deleted rows. Conflict, not commute.
       val newDvs = dvFiles(path, w).toSet -- dvFiles(path, v).toSet
-      if (newDvs.nonEmpty) {
-        val dvClash = readDv(spark, newDvs.toSeq)
-          .select("__dv_file").distinct()
-          .collect().map(r => canonical(r.getString(0)))
-          .exists(touchedSet.contains)
-        if (dvClash)
-          throw new java.util.ConcurrentModificationException(
-            s"merge on $path conflicts with version $w: a concurrent DV " +
-              "delete marked rows dead in a file this merge rewrote")
-      }
-      base = w
-      baseLive = liveW
+      if (newDvs.nonEmpty && dvMarks(spark, newDvs.toSeq).keys.exists(touchedSet.contains))
+        throw new java.util.ConcurrentModificationException(
+          s"merge on $path conflicts with version $w: a concurrent DV " +
+            "delete marked rows dead in a file this merge rewrote")
     }
-    -1 // unreachable
   }
 
   /** Versioned DELETE: rows matching `predicate` are removed from the
@@ -3172,71 +3182,25 @@ object Snapshots {
   }
 
   def deleteVersioned(spark: SparkSession, path: String,
-      predicate: org.apache.spark.sql.Column): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
-    val live = liveFiles(path, v)
+      predicate: Column): Int = {
+    val v = headOf(path)
     // discovery reads only the manifest-pruned candidates — cost
     // tracks the predicate's stats footprint, not table size
-    val cands = candidateFiles(spark, path, v, predicate)
-    if (cands.isEmpty)
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty))
-    val target = readUnder(spark, path, v, cands)
-    val touched = target.filter(predicate)
-      .withColumn("file", input_file_name())
-      .select("file").distinct().collect().map(r => canonical(r.getString(0)))
-    if (touched.isEmpty) // no-op version, schema carried forward
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty))
+    val touched = filesMatching(spark, path, v,
+      candidateFiles(spark, path, v, predicate), predicate)
+    if (touched.isEmpty) return commitDml(path, v)() // no-op version
     // SQL DELETE null semantics: NULL predicate keeps the row, but a
     // bare filter(!pred) drops it (NOT(null) is null) — coalesce so
     // null-predicate rows survive the copy-on-write rewrite.
     val liveTouched = readLive(spark, path, v, touched.toIndexedSeq)
-    val keptRows = liveTouched.filter(!coalesce(predicate, lit(false)))
-    // A31 (table property): the deleted pre-images are the change data.
-    // r16: the rewrite write and the change-data write are independent
-    // (both deterministic over the touched files' immutable pre-image)
-    // — overlapped (guide §2.6)
-    val (staged, stagedStats, cdfStaged) = stageDataAndCdf(spark,
-      keptRows, Some(tableSchema(path, v).getOrElse(target.schema)),
-      path, v, bucketSpecOf(path, v), "graft_snap_del",
-      if (!cdfEnabled(path, v)) None
-      else Some(liveTouched
-        .filter(coalesce(predicate, lit(false)))
-        .withColumn("change_type", lit("delete"))))
-    val touchedSet = touched.toSet
-    val retained = live.filterNot(f => touchedSet.contains(canonical(f)))
-    commitNext(path, v, retained ++ staged, tableSchema(path, v),
-      carriedStats(path, v, retained) ++ stagedStats,
-      dvFiles(path, v), cdf = cdfStaged)
-  }
-
-  /** r16 — the shared "stage the rewrite and the change rows
-    * OVERLAPPED" shape of every CoW DML verb: two independent writes
-    * (plus the staged-files stats scan, which rides the data thunk so
-    * it too overlaps the change-data write), two-to-three sequential
-    * job latencies before, ~one after. Returns
-    * (staged data files, their stat lines, cdf refs). */
-  private def stageDataAndCdf(spark: SparkSession, data: DataFrame,
-      outSchema: Option[org.apache.spark.sql.types.StructType],
-      path: String, v: Int, bucket: Option[(String, Int)],
-      tmpPrefix: String, cdfRows: Option[DataFrame])
-      : (Seq[String], Seq[String], Option[Seq[String]]) = {
-    def dataWithStats(): (Seq[String], Seq[String]) = {
-      val staged = stageData(data, outSchema, path, v + 1, bucket, tmpPrefix)
-      (staged, statsLines(spark, staged, stagedFrame(data, outSchema).schema))
-    }
-    cdfRows match {
-      case None =>
-        val (staged, stats) = dataWithStats()
-        (staged, stats, None)
-      case Some(rows) =>
-        val r = Par.map(spark, Seq[() => (Seq[String], Seq[String])](
-          () => dataWithStats(),
-          () => (stageCdf(path, v, rows), Seq.empty)))(_())
-        (r(0)._1, r(0)._2, Some(r(1)._1))
-    }
+    // A31 (table property): the deleted pre-images are the change data
+    val (staged, stagedStats, _, cdfStaged) = stageArtifacts(spark, path, v,
+      liveTouched.filter(!coalesce(predicate, lit(false))),
+      Some(schemaAt(spark, path, v, touched)),
+      cdf = if (!cdfEnabled(path, v)) None
+        else Some(liveTouched.filter(coalesce(predicate, lit(false)))
+          .withColumn("change_type", lit("delete"))))
+    commitDml(path, v)(touched, staged, stagedStats, cdf = cdfStaged)
   }
 
   /** Versioned DELETE BY KEY SET: [[deleteVersioned]] where the doomed
@@ -3259,50 +3223,49 @@ object Snapshots {
     * leading key column's ranges (see [[mergeVersioned]]). */
   def deleteVersionedKeys(spark: SparkSession, path: String,
       keys: DataFrame, keyCols: Seq[String]): Int = {
+    val v = headOf(path)
+    val schemaNow = schemaAt(spark, path, v, liveFiles(path, v))
+    val (k, touched) = doomedKeys(spark, path, v, schemaNow, keys, keyCols,
+      scanLegacy = true)
+    if (touched.isEmpty) return commitDml(path, v)() // no-op version
+    val liveTouched = readLive(spark, path, v, touched)
+    // A31 (table property): the deleted pre-images are the change data
+    val (staged, stagedStats, _, cdfStaged) = stageArtifacts(spark, path, v,
+      liveTouched.join(broadcast(k), keyCols, "left_anti"), Some(schemaNow),
+      cdf = if (!cdfEnabled(path, v)) None
+        else Some(liveTouched.join(broadcast(k), keyCols, "left_semi")
+          .withColumn("change_type", lit("delete"))))
+    commitDml(path, v)(touched, staged, stagedStats, cdf = cdfStaged)
+  }
+
+  /** The key-delete head: the distinct doomed key tuples and the live
+    * files that may hold one (see [[filesByKey]]). */
+  private def doomedKeys(spark: SparkSession, path: String, v: Int,
+      schemaNow: StructType, keys: DataFrame, keyCols: Seq[String],
+      scanLegacy: Boolean): (DataFrame, IndexedSeq[String]) = {
     require(keyCols.nonEmpty, "delete: empty key column list")
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
-    val live = liveFiles(path, v)
-    lazy val target = readUnder(spark, path, v, live) // only pre-A27
-    val schemaNow = tableSchema(path, v).getOrElse(target.schema)
     keyCols.foreach(c => require(schemaNow.fieldNames.contains(c),
       s"delete: no key column '$c' in ${schemaNow.fieldNames.mkString(", ")}"))
     val k = keys.select(keyCols.map(c => col(s"`$c`")): _*).distinct()
-    // prune to files whose [kmin, kmax] contains a doomed key; only
-    // those can hold a row to delete, only those are rewritten — from
-    // A27 manifest stats when complete (no table scan), else the scan
-    val leadKey = keyCols.head
-    val keyType = schemaNow(leadKey).dataType
-    val stats = manifestRanges(path, v, live, leadKey) match {
-      case Some(rows) => keyRangeFrame(spark, rows, keyType)
-      case None => target
-        .withColumn("file", input_file_name())
-        .groupBy("file")
-        .agg(min(col(s"`$leadKey`")).as("kmin"),
-          max(col(s"`$leadKey`")).as("kmax"))
-    }
-    val touched = stats
-      .join(broadcast(k.select(col(s"`$leadKey`").as("__k")).distinct()),
-        keyRangeCond(col("__k")), "left_semi")
-      .select("file").collect().map(r => canonical(r.getString(0)))
-    if (touched.isEmpty) // no-op version, schema carried forward
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty))
-    val liveTouched = readLive(spark, path, v, touched.toIndexedSeq)
-    val keptRows = liveTouched.join(broadcast(k), keyCols, "left_anti")
-    // A31 (table property): the deleted pre-images are the change data
-    val (staged, stagedStats, cdfStaged) = stageDataAndCdf(spark,
-      keptRows, Some(schemaNow), path, v, bucketSpecOf(path, v),
-      "graft_snap_del",
-      if (!cdfEnabled(path, v)) None
-      else Some(liveTouched
-        .join(broadcast(k), keyCols, "left_semi")
-        .withColumn("change_type", lit("delete"))))
-    val touchedSet = touched.toSet
-    val retained = live.filterNot(f => touchedSet.contains(canonical(f)))
-    commitNext(path, v, retained ++ staged, tableSchema(path, v),
-      carriedStats(path, v, retained) ++ stagedStats,
-      dvFiles(path, v), cdf = cdfStaged)
+    (k, filesByKey(spark, path, v, liveFiles(path, v), keyCols.head,
+      schemaNow(keyCols.head).dataType, k, None, scanLegacy))
+  }
+
+  /** The SET list of an UPDATE as the full new row, computed FROM THE
+    * PRE-IMAGE (every SET expression sees the old values); the cast
+    * pins each column's recorded type — parquet physical schemas must
+    * stay uniform. */
+  private def setExprs(verb: String, schemaNow: StructType,
+      set: Seq[(String, Column)]): IndexedSeq[Column] = {
+    require(set.nonEmpty, s"$verb: empty SET clause")
+    require(set.map(_._1).distinct.size == set.size,
+      s"$verb: duplicate SET column in ${set.map(_._1)}")
+    set.foreach { case (c, _) =>
+      require(schemaNow.fieldNames.contains(c),
+        s"$verb: no column '$c' in ${schemaNow.fieldNames.mkString(", ")}") }
+    val setMap = set.toMap
+    schemaNow.fields.toIndexedSeq.map(f => setMap.get(f.name)
+      .fold(col(s"`${f.name}`").as(f.name))(_.cast(f.dataType).as(f.name)))
   }
 
   /** A35 — versioned UPDATE (the missing DML verb between MERGE and
@@ -3321,51 +3284,26 @@ object Snapshots {
     * version.
     */
   def updateVersioned(spark: SparkSession, path: String,
-      predicate: org.apache.spark.sql.Column,
-      set: Seq[(String, org.apache.spark.sql.Column)]): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
-    require(set.nonEmpty, "updateVersioned: empty SET clause")
-    require(set.map(_._1).distinct.size == set.size,
-      s"updateVersioned: duplicate SET column in ${set.map(_._1)}")
-    val live = liveFiles(path, v)
-    lazy val target = readUnder(spark, path, v, live)
-    val schemaNow = tableSchema(path, v).getOrElse(target.schema)
-    set.foreach { case (c, _) =>
-      require(schemaNow.fieldNames.contains(c),
-        s"updateVersioned: no column '$c' in ${schemaNow.fieldNames.mkString(", ")}") }
+      predicate: Column, set: Seq[(String, Column)]): Int = {
+    val v = headOf(path)
+    val schemaNow = schemaAt(spark, path, v, liveFiles(path, v))
+    val newExprs = setExprs("updateVersioned", schemaNow, set)
     val hit = coalesce(predicate, lit(false))
-    // r12: discovery over the manifest-pruned candidates only
-    val cands = candidateFiles(spark, path, v, predicate)
-    val touched =
-      if (cands.isEmpty) Array.empty[String]
-      else readUnder(spark, path, v, cands).filter(hit)
-        .withColumn("file", input_file_name())
-        .select("file").distinct().collect().map(r => canonical(r.getString(0)))
-    if (touched.isEmpty) // no-op version, schema carried forward
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty))
+    val touched = filesMatching(spark, path, v,
+      candidateFiles(spark, path, v, predicate), hit)
+    if (touched.isEmpty) return commitDml(path, v)() // no-op version
     // readLive: a DV-dead row in a touched file must neither be updated
     // nor resurrected by the rewrite
     val liveTouched = readLive(spark, path, v, touched.toIndexedSeq)
-    val setMap = set.toMap
-    // the new row, computed FROM THE PRE-IMAGE in one select (so every
-    // SET expression sees the old values, and the predicate is never
-    // re-evaluated against updated columns); cast pins the column's
-    // recorded type — parquet physical schemas must stay uniform
-    val newExprs = schemaNow.fields.toIndexedSeq.map { f =>
-      setMap.get(f.name) match {
-        case Some(e) => e.cast(f.dataType).as(f.name)
-        case None    => col(s"`${f.name}`").as(f.name)
-      }
-    }
+    // the predicate is evaluated once, on the pre-image, never against
+    // updated columns
     val pre = liveTouched.filter(hit)
     val post = pre.select(newExprs: _*)
     // A34: refuse BEFORE staging if an updated row violates a CHECK
     enforceConstraints(path, v, post)
-    val rewritten = liveTouched.filter(!hit).unionByName(post)
     // A31 (table property): change rows = updated rows whose values
-    // actually changed, post-image, matching the manifest-diff feed
+    // actually changed, post-image plus 'update_preimage' companions
+    // (the Delta CDF form, as the merge path stores it)
     val cdfRows: Option[DataFrame] =
       if (!cdfEnabled(path, v)) None
       else {
@@ -3374,8 +3312,6 @@ object Snapshots {
           struct(allCols.map(c => col(s"`$c`")): _*).as("__pre"),
           struct(newExprs: _*).as("__post"))
           .filter(!(col("__pre") <=> col("__post")))
-        // post-image 'update' rows + 'update_preimage' companions —
-        // same stored-CDF contract as the merge path (Delta CDF form)
         Some(pairs
           .select(allCols.map(c => col(s"__post.`$c`").as(c)): _*)
           .withColumn("change_type", lit("update"))
@@ -3383,15 +3319,10 @@ object Snapshots {
             .select(allCols.map(c => col(s"__pre.`$c`").as(c)): _*)
             .withColumn("change_type", lit("update_preimage"))))
       }
-    val (staged, stagedStats, cdfStaged) = stageDataAndCdf(spark, rewritten,
-      Some(schemaNow), path, v, bucketSpecOf(path, v), "graft_snap_upd",
-      cdfRows)
-    val touchedSet = touched.toSet
-    val retained = live.filterNot(f => touchedSet.contains(canonical(f)))
-    commitNext(path, v, retained ++ staged, tableSchema(path, v),
-      carriedStats(path, v, retained) ++ stagedStats,
-      dvFiles(path, v), cdf = cdfStaged,
-      bloomExtra = maybeBloom(spark, path, v, staged))
+    val (staged, stagedStats, _, cdfStaged) = stageArtifacts(spark, path, v,
+      liveTouched.filter(!hit).unionByName(post), Some(schemaNow), cdf = cdfRows)
+    commitDml(path, v)(touched, staged, stagedStats, cdf = cdfStaged,
+      bloom = maybeBloom(spark, path, v, staged))
   }
 
   /** INSERT OVERWRITE as a commit: the new live set is exactly the
@@ -3417,8 +3348,8 @@ object Snapshots {
     val bspec = bucketSpecOf(path, v)
     bspec.foreach { case (c, _) => require(df.columns.contains(c),
       s"graft: $path is bucketed by '$c' — an overwrite batch must carry it") }
-    val staged = stageData(df, None, path, v + 1, bspec, "graft_snap_ow")
-    commitNext(path, v, staged, Some(df.schema), statsLines(spark, staged, df.schema),
+    val (staged, stats) = stageData(spark, df, None, path, v + 1, bspec)
+    commitNext(path, v, staged, Some(df.schema), stats,
       bloomExtra = maybeBloom(spark, path, v, staged))
   }
 
@@ -3431,27 +3362,16 @@ object Snapshots {
     * widens the recorded schema like a widening merge (missing columns
     * null-fill); A31 stored change data records the batch as inserts;
     * the bloom property indexes the staged files. Bootstraps a fresh
-    * directory. Returns the new version.
+    * directory. A51: under `txn = Some((appId, version))` a replayed
+    * mark no-ops, and the mark commits atomically with the batch (one
+    * manifest CAS — no sidecar-marker crash window). Returns the new
+    * version.
     */
-  def appendVersioned(spark: SparkSession, path: String, df: DataFrame): Int =
-    appendVersionedTxn(spark, path, df, txn = None)
-
-  /** A51 — [[appendVersioned]] under a transaction mark: a replayed
-    * (appId, version) no-ops, and the mark commits atomically with the
-    * batch (one manifest CAS — no sidecar-marker crash window). */
-  def appendVersionedIdempotent(spark: SparkSession, path: String,
-      df: DataFrame, txnAppId: String, txnVersion: Long): Int = {
-    requireTxnApp(txnAppId)
-    appendVersionedTxn(spark, path, df, Some((txnAppId, txnVersion)))
-  }
-
-  private def appendVersionedTxn(spark: SparkSession, path: String,
-      df: DataFrame, txn: Option[(String, Long)]): Int = {
-    val v = currentVersion(path)
-    txn.foreach { case (app, ver) =>
-      if (v >= 0 && txnVersionOf(path, v, app).exists(_ >= ver)) return v
-    }
-    if (v < 0) {
+  def appendVersioned(spark: SparkSession, path: String, df: DataFrame,
+      txn: Option[(String, Long)] = None): Int = {
+    val marks = txn.toSeq
+    marks.foreach(m => requireTxnApp(m._1))
+    if (currentVersion(path) < 0) {
       Files.createDirectories(Paths.get(path))
       txn match {
         case None =>
@@ -3461,8 +3381,8 @@ object Snapshots {
           // Bootstrap WITH the mark (init() would commit v0 without it),
           // CRASH-IDEMPOTENTLY: a previous attempt of this exact
           // (appId, version) may have died between its data write and
-          // the v0 commit — currentVersion is still <0 then, so the mark
-          // check above is skipped on replay, and blindly re-appending
+          // the v0 commit — currentVersion is still <0 then, so no mark
+          // check can catch the replay, and blindly re-appending
           // would commit BOTH copies (doubling every row). The staged
           // files carry a deterministic per-mark tag, so a replay deletes
           // only ITS own orphans; untagged pre-existing parquet is user
@@ -3474,72 +3394,43 @@ object Snapshots {
           }.foreach(Files.deleteIfExists(_))
           val preExisting = listDir(Paths.get(path))
             .map(_.toString).filter(_.endsWith(".parquet"))
-          val staged =
-            stageData(df, None, path, 0, None, "graft_snap_boot", tag)
-          val files = preExisting ++ staged
+          val files = preExisting ++ stageFiles(df, path)(n => s"v0_$tag$n")
           val schema =
             if (files.isEmpty) None
             else Some(spark.read.parquet(files: _*).schema)
           return commit(path, files, schema,
             schema.fold(Seq.empty[String])(statsLines(spark, files, _)),
-            txnSet = txn)
+            txn = marks)
       }
     }
+    val v = headOf(path, marks)
+    if (replayed(path, v, marks)) return v
     enforceConstraints(path, v, df)
-    val live = liveFiles(path, v)
-    val schemaNow = tableSchema(path, v).getOrElse(
-      readUnder(spark, path, v, live).schema)
-    val outSchema = org.apache.spark.sql.types.StructType(
+    val schemaNow = schemaAt(spark, path, v, liveFiles(path, v))
+    val outSchema = StructType(
       schemaNow.fields ++ df.schema.fields.filterNot(f =>
         schemaNow.fieldNames.contains(f.name)))
-    val batch = df.select(outSchema.fields.toIndexedSeq.map(f =>
-      (if (df.columns.contains(f.name)) col(s"`${f.name}`")
-       else lit(null).cast(f.dataType)).as(f.name)): _*)
-    // r16: append write and change-data write overlap (both read the
-    // same deterministic batch; an append's change rows ARE the batch)
-    val (staged, stagedStats, cdfStaged) = stageDataAndCdf(spark, batch,
-      Some(outSchema), path, v, bucketSpecOf(path, v), "graft_snap_app",
-      if (!cdfEnabled(path, v)) None
-      else {
-        val payload = outSchema.fieldNames.toIndexedSeq
-        Some(batch.select(
-          col(s"`${payload.head}`") +: lit("insert").as("change_type") +:
-            payload.tail.map(c => col(s"`$c`")): _*))
-      })
+    val batch = df.select(filledTo(df, outSchema): _*)
+    // the append write and the change-data write overlap (both read
+    // the same deterministic batch; an append's change rows ARE the
+    // batch)
+    val (staged, stagedStats, _, cdfStaged) = stageArtifacts(spark, path, v,
+      batch, Some(outSchema),
+      cdf = if (!cdfEnabled(path, v)) None
+        else {
+          val payload = outSchema.fieldNames.toIndexedSeq
+          Some(batch.select(
+            col(s"`${payload.head}`") +: lit("insert").as("change_type") +:
+              payload.tail.map(c => col(s"`$c`")): _*))
+        })
     // OCC: a blind append retires no files and constrains no keys, so
     // it commutes with ANY concurrent commit — rebase onto the new
     // head unconditionally (Delta's appends-never-conflict rule),
-    // bounded only as a runaway guard
-    val bloomStaged = maybeBloom(spark, path, v, staged)
-    var base = v
-    var attempts = 0
-    while (true) {
-      val baseLive = liveFiles(path, base)
-      // the winner may have ADDED a constraint this batch violates
-      if (base != v) enforceConstraints(path, base, df)
-      val schema =
-        if (base == v) outSchema
-        else tableSchema(path, base) match {
-          case Some(w) => org.apache.spark.sql.types.StructType(w.fields ++
-            outSchema.fields.filterNot(f => w.fieldNames.contains(f.name)))
-          case None => outSchema
-        }
-      if (commitAt(path, base + 1, baseLive ++ staged, Some(schema),
-          carriedStats(path, base, baseLive) ++ stagedStats,
-          dvFiles(path, base), cdf = cdfStaged, bloomExtra = bloomStaged,
-          txnSet = txn))
-        return base + 1
-      attempts += 1
-      if (attempts > 20) throw new java.util.ConcurrentModificationException(
-        s"append on $path lost $attempts commit races")
-      base = currentVersion(path)
-      // A51: a concurrent same-lineage writer applied this batch —
-      // rebasing the append would land it twice
-      txn.foreach { case (app, ver) =>
-        if (txnVersionOf(path, base, app).exists(_ >= ver)) return base
-      }
-    }
-    -1 // unreachable
+    // bounded only as a runaway guard. The winner may have ADDED a
+    // constraint this batch violates.
+    commitRebasing(path, v, "append", 20, Set.empty, staged, stagedStats,
+        outSchema, cdfStaged, maybeBloom(spark, path, v, staged), marks) {
+      (_, w) => enforceConstraints(path, w, df) }
   }
 
   // r16 — which data files does a DV sidecar mark? The set is
@@ -3553,24 +3444,6 @@ object Snapshots {
   // never a result cache.
   private val dvMarkCache =
     new java.util.concurrent.ConcurrentHashMap[String, Set[String]]
-
-  /** Observe the distinct `__dv_file` values on `doomed`'s write and
-    * memoize them for each staged sidecar in `staged`. Best-effort:
-    * a missing observation just skips the memo. */
-  private def recordDvMarks(obs: org.apache.spark.sql.Observation,
-      staged: Seq[String]): Unit = {
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    var m = org.apache.spark.sql.GraftSqlBridge.observedOrEmpty(obs)
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(2)
-      m = org.apache.spark.sql.GraftSqlBridge.observedOrEmpty(obs)
-    }
-    m.get("__dvf").foreach { v =>
-      val files = v.asInstanceOf[scala.collection.Seq[String]]
-        .map(canonical).toSet
-      staged.foreach(f => dvMarkCache.put(canonical(f), files))
-    }
-  }
 
   /** The FOOTER of a local parquet file — pure driver-side metadata
     * I/O, no Spark job. */
@@ -3593,7 +3466,7 @@ object Snapshots {
     * but without the Spark job that inference runs. */
   private def footerSchema(file: String,
       footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
-      : org.apache.spark.sql.types.StructType = {
+      : StructType = {
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetFileFormat, ParquetToSparkSchemaConverter}
     ParquetFileFormat.readSchemaFromFooter(
@@ -3615,72 +3488,50 @@ object Snapshots {
   }
 
   /** Stage `rows` as a commit's stored change-data files (A31);
-    * returns the refs (empty for an empty change set). r16: the
-    * emptiness probe no longer runs as its own Spark action — the
-    * write evaluates the plan anyway, and the "was it empty" answer is
-    * read back from the written parquet footers driver-side (an
-    * all-empty write returns Seq.empty exactly as the old
-    * probe-then-skip did). */
-  private def stageCdf(path: String, v: Int, rows: DataFrame): Seq[String] = {
-    val stage = Files.createTempDirectory("graft_cdf").toString
-    rows.write.mode(SaveMode.Overwrite).parquet(stage)
-    val parts = listDir(Paths.get(stage))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    if (parts.forall(p => parquetRowCount(p.toString) == 0L)) {
-      parts.foreach(Files.deleteIfExists(_))
-      return Seq.empty
-    }
-    val dst = Paths.get(path)
-    parts.map { p =>
-      val name = s"v${v + 1}_cdf_${p.getFileName.toString}"
-      Files.move(p, dst.resolve(name))
-      dst.resolve(name).toString
+    * returns the refs (empty for an empty change set). */
+  private def stageCdf(path: String, v: Int, rows: DataFrame): Seq[String] =
+    stageFiles(rows, path, skipEmpty = true)(n => s"v${v + 1}_cdf_$n")
+
+  /** The rows of `files` as live at `v`, with their DV identity
+    * (`__file`, `__pos`) kept: existing DVs applied, so an
+    * already-dead row is never re-marked and DV files stay disjoint. */
+  private def livePositions(spark: SparkSession, path: String, v: Int,
+      files: Seq[String]): DataFrame = {
+    val withPos = readFilesAsWithPos(spark, tableSchema(path, v), files)
+    val dvs = dvFiles(path, v)
+    if (dvs.isEmpty) withPos
+    else {
+      val dv = readDv(spark, dvs)
+      withPos.join(dv,
+        withPos("__file") === dv("__dv_file") && withPos("__pos") === dv("__dv_pos"),
+        "left_anti")
     }
   }
 
-  /** Stage `doomed` (full pre-image rows + change_type='delete' +
-    * __dv_file/__dv_pos) ONCE and commit head+1 with the same live set
-    * — the merge-on-read commit atom shared by the two DV delete
-    * forms. The single staged file serves as BOTH the deletion vector
-    * (readers join on the two position columns) and the commit's
-    * stored change data (the feed reads the pre-image columns), so a
-    * DV delete costs one scan and one write. An empty doomed set
-    * commits a no-op version (consistent with the copy-on-write
-    * deletes), marked cdf-empty.
-    */
-  private def commitDv(spark: SparkSession, path: String, v: Int,
-      live: Seq[String], doomed: DataFrame,
-      txn: Option[(String, Long)] = None): Int = {
-    // r16: the emptiness probe rode as its own action AND re-ran the
-    // candidate-position scan the write then repeated — write first,
-    // answer emptiness from the written footers (driver-side, no job)
-    val stage = Files.createTempDirectory("graft_dv").toString
-    val dvObs = org.apache.spark.sql.Observation()
-    doomed.observe(dvObs, collect_set(col("__dv_file")).as("__dvf"))
-      .write.mode(SaveMode.Overwrite).parquet(stage)
-    val parts = listDir(Paths.get(stage))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    if (parts.forall(p => parquetRowCount(p.toString) == 0L)) {
-      parts.foreach(Files.deleteIfExists(_))
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty),
-        txnSet = txn)
-    }
-    val dst = Paths.get(path)
-    val staged = parts
-      .map { p =>
-        val name = s"v${v + 1}_dv_${p.getFileName.toString}"
-        Files.move(p, dst.resolve(name))
-        dst.resolve(name).toString
-      }
-    recordDvMarks(dvObs, staged)
-    commitNext(path, v, live, tableSchema(path, v),
-      carriedStats(path, v, live), dvFiles(path, v) ++ staged,
-      // the combined file always carries the pre-images (free — it IS
-      // the deletion vector); advertise it as change data only when
-      // the table property is on, like the other writers
-      cdf = if (cdfEnabled(path, v)) Some(staged) else None,
-      txnSet = txn)
+  /** The merge-on-read delete shared by the two DV delete forms: the
+    * live rows of `files` that `doomedOf` keeps are staged ONCE (full
+    * pre-image + change_type='delete' + __dv_file/__dv_pos) and head+1
+    * commits with the same live set. The single staged file serves as
+    * BOTH the deletion vector (readers join on the two position
+    * columns) and the commit's stored change data (the feed reads the
+    * pre-image columns), so a DV delete costs one scan and one write.
+    * An empty doomed set commits a no-op version (consistent with the
+    * copy-on-write deletes), marked cdf-empty. */
+  private def deleteDV(spark: SparkSession, path: String, v: Int,
+      files: Seq[String], marks: Seq[(String, Long)])(
+      doomedOf: DataFrame => DataFrame): Int = {
+    val staged =
+      if (files.isEmpty) Seq.empty
+      else stageDv(path, v, doomedOf(livePositions(spark, path, v, files))
+        .withColumnRenamed("__file", "__dv_file")
+        .withColumnRenamed("__pos", "__dv_pos")
+        .withColumn("change_type", lit("delete")))
+    if (staged.isEmpty) commitDml(path, v)(marks = marks)
+    // the combined file always carries the pre-images (free — it IS
+    // the deletion vector); advertise it as change data only when the
+    // table property is on, like the other writers
+    else commitDml(path, v)(dv = dvFiles(path, v) ++ staged,
+      cdf = if (cdfEnabled(path, v)) Some(staged) else None, marks = marks)
   }
 
   /** A30 — MERGE-ON-READ DELETE: rows matching `predicate` are marked
@@ -3695,25 +3546,11 @@ object Snapshots {
     * new version.
     */
   def deleteVersionedDV(spark: SparkSession, path: String,
-      predicate: org.apache.spark.sql.Column): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
-    val live = liveFiles(path, v)
-    // r12: position discovery reads only the manifest-pruned candidates
-    val cands = candidateFiles(spark, path, v, predicate)
-    if (cands.isEmpty)
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty))
-    // positions come from the LIVE image (existing DVs applied), so an
-    // already-dead row can never be re-marked — DV files stay disjoint;
-    // the full pre-image rides along as the commit's change data (A31)
-    val doomed = applyDvIfAny(spark, path, v,
-        readFilesAsWithPos(spark, tableSchema(path, v), cands))
-      .filter(coalesce(predicate, lit(false)))
-      .withColumnRenamed("__file", "__dv_file")
-      .withColumnRenamed("__pos", "__dv_pos")
-      .withColumn("change_type", lit("delete"))
-    commitDv(spark, path, v, live, doomed)
+      predicate: Column): Int = {
+    val v = headOf(path)
+    // position discovery reads only the manifest-pruned candidates
+    deleteDV(spark, path, v, candidateFiles(spark, path, v, predicate), Nil)(
+      _.filter(coalesce(predicate, lit(false))))
   }
 
   /** A30 — MERGE-ON-READ DELETE BY KEY SET: the DV analog of
@@ -3721,7 +3558,9 @@ object Snapshots {
     * manifest stats (per-file key range × broadcast keys), so only
     * files that can hold a doomed key are even SCANNED for positions —
     * delete cost tracks the batch's key locality, and the plan holds no
-    * per-key literals. Returns the new version.
+    * per-key literals. `txn` as in [[mergeVersioned]]: a replayed
+    * (app, ver ≤ mark) delete no-ops, atomically with the commit that
+    * recorded the mark. Returns the new version.
     */
   def deleteVersionedKeysDV(spark: SparkSession, path: String,
       keys: DataFrame, keyCol: String,
@@ -3732,38 +3571,13 @@ object Snapshots {
   def deleteVersionedKeysDV(spark: SparkSession, path: String,
       keys: DataFrame, keyCols: Seq[String],
       txn: Option[(String, Long)]): Int = {
-    require(keyCols.nonEmpty, "delete: empty key column list")
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
-    // A51: a replayed (app, ver ≤ mark) delete no-ops, atomically with
-    // the commit that recorded the mark
-    txn.foreach { case (app, ver) =>
-      if (txnVersionOf(path, v, app).exists(_ >= ver)) return v
-    }
-    val live = liveFiles(path, v)
-    val k = keys.select(keyCols.map(c => col(s"`$c`")): _*).distinct()
-    lazy val schemaNow = tableSchema(path, v)
-      .getOrElse(readUnder(spark, path, v, live).schema)
-    val leadKey = keyCols.head
-    val candidates = manifestRanges(path, v, live, leadKey) match {
-      case Some(rows) =>
-        keyRangeFrame(spark, rows, schemaNow(leadKey).dataType)
-          .join(broadcast(k.select(col(s"`$leadKey`").as("__k")).distinct()),
-            keyRangeCond(col("__k")), "left_semi")
-          .select("file").collect().map(r => canonical(r.getString(0))).toSeq
-      case None => live // pre-A27: scan everything for positions
-    }
-    if (candidates.isEmpty) // no file can hold a doomed key: no-op commit
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty),
-        txnSet = txn)
-    val doomed = applyDvIfAny(spark, path, v,
-        readFilesAsWithPos(spark, tableSchema(path, v), candidates))
-      .join(broadcast(k), keyCols, "left_semi")
-      .withColumnRenamed("__file", "__dv_file")
-      .withColumnRenamed("__pos", "__dv_pos")
-      .withColumn("change_type", lit("delete"))
-    commitDv(spark, path, v, live, doomed, txn)
+    val marks = txn.toSeq
+    val v = headOf(path, marks)
+    if (replayed(path, v, marks)) return v
+    val (k, touched) = doomedKeys(spark, path, v,
+      schemaAt(spark, path, v, liveFiles(path, v)), keys, keyCols,
+      scanLegacy = false)
+    deleteDV(spark, path, v, touched, marks)(_.join(broadcast(k), keyCols, "left_semi"))
   }
 
   /** A71 — MERGE-ON-READ UPDATE: the DV twin of [[updateVersioned]].
@@ -3786,101 +3600,42 @@ object Snapshots {
     * match (SQL UPDATE semantics). Returns the new version.
     */
   def updateVersionedDV(spark: SparkSession, path: String,
-      predicate: org.apache.spark.sql.Column,
-      set: Seq[(String, org.apache.spark.sql.Column)]): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
-    require(set.nonEmpty, "updateVersionedDV: empty SET clause")
-    require(set.map(_._1).distinct.size == set.size,
-      s"updateVersionedDV: duplicate SET column in ${set.map(_._1)}")
-    val live = liveFiles(path, v)
-    val schemaNow = tableSchema(path, v)
-      .getOrElse(readUnder(spark, path, v, live).schema)
-    set.foreach { case (c, _) =>
-      require(schemaNow.fieldNames.contains(c),
-        s"updateVersionedDV: no column '$c' in ${schemaNow.fieldNames.mkString(", ")}") }
-    val hit = coalesce(predicate, lit(false))
-    val setMap = set.toMap
-    val newExprs = schemaNow.fields.toIndexedSeq.map { f =>
-      setMap.get(f.name) match {
-        case Some(e) => e.cast(f.dataType).as(f.name)
-        case None    => col(s"`${f.name}`").as(f.name)
-      }
-    }
+      predicate: Column, set: Seq[(String, Column)]): Int = {
+    val v = headOf(path)
+    val schemaNow = schemaAt(spark, path, v, liveFiles(path, v))
+    val newExprs = setExprs("updateVersionedDV", schemaNow, set)
     val allCols = schemaNow.fieldNames.toIndexedSeq
-    // r12: position discovery reads only the manifest-pruned candidates
+    // position discovery reads only the manifest-pruned candidates
     val cands = candidateFiles(spark, path, v, predicate)
-    if (cands.isEmpty) // stats prove no file holds a match: no-op
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty))
-    // positions come from the LIVE image (existing DVs applied) so an
-    // already-dead row can never be re-marked — DV files stay disjoint
-    // Materialized ONCE (r13 advice fix): the emptiness probe, the
-    // appended post-image write, the DV write, and the CDF staging all
-    // read this frame — checkpointing makes the candidate-file
-    // position scan run a single time AND pins one evaluation of a
-    // possibly-non-deterministic SET expression across the commit's
-    // coupled artifacts.
-    val pairs = applyDvIfAny(spark, path, v,
-        readFilesAsWithPos(spark, tableSchema(path, v), cands))
-      .filter(hit)
+    if (cands.isEmpty) return commitDml(path, v)() // stats prove no match
+    // Materialized ONCE: the emptiness probe, the appended post-image
+    // write, the DV write and the CDF staging all read this frame —
+    // the candidate-file position scan runs a single time AND one
+    // evaluation of a possibly-non-deterministic SET expression feeds
+    // every coupled artifact.
+    val pairs = livePositions(spark, path, v, cands)
+      .filter(coalesce(predicate, lit(false)))
       .select(col("__file"), col("__pos"),
         struct(allCols.map(c => col(s"`$c`")): _*).as("__pre"),
         struct(newExprs: _*).as("__post"))
       .filter(!(col("__pre") <=> col("__post")))
       .localCheckpoint()
-    if (pairs.isEmpty) // nothing actually changes: no-op version
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty))
+    if (pairs.isEmpty) return commitDml(path, v)() // nothing changes
     val post = pairs.select(allCols.map(c => col(s"__post.`$c`").as(c)): _*)
     // A34: refuse BEFORE staging anything if an updated row violates
     enforceConstraints(path, v, post)
-    // r16: the three commit artifacts all read the one checkpointed
-    // pairs frame — write them OVERLAPPED (guide §2.6)
-    val dataThunk: () => (Seq[String], Seq[String]) =
-      () => {
-        val st = stageData(post, Some(schemaNow), path, v + 1,
-          bucketSpecOf(path, v), "graft_snap_updmor")
-        // stats scan rides the data thunk
-        (st, statsLines(spark, st, stagedFrame(post, Some(schemaNow)).schema))
-      }
-    val dvThunk: () => Seq[String] = () => {
-      val doomed = pairs.select(
+    val (staged, stagedStats, dvStaged, cdfStaged) = stageArtifacts(spark,
+      path, v, post, Some(schemaNow),
+      dv = Some(pairs.select(
         col("__file").as("__dv_file") +: col("__pos").as("__dv_pos") +:
-          allCols.map(c => col(s"__pre.`$c`").as(c)): _*)
-      val dvObs = org.apache.spark.sql.Observation()
-      val dvStage = Files.createTempDirectory("graft_dv_upd").toString
-      doomed.observe(dvObs, collect_set(col("__dv_file")).as("__dvf"))
-        .write.mode(SaveMode.Overwrite).parquet(dvStage)
-      val dst = Paths.get(path)
-      val staged = listDir(Paths.get(dvStage))
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map { p =>
-          val name = s"v${v + 1}_dv_${p.getFileName.toString}"
-          Files.move(p, dst.resolve(name))
-          dst.resolve(name).toString
-        }
-      recordDvMarks(dvObs, staged)
-      staged
-    }
-    val cdfThunk: Option[() => Seq[String]] =
-      if (!cdfEnabled(path, v)) None
-      else Some(() => stageCdf(path, v,
-        post.withColumn("change_type", lit("update")).unionByName(
+          allCols.map(c => col(s"__pre.`$c`").as(c)): _*)),
+      cdf = if (!cdfEnabled(path, v)) None
+        else Some(post.withColumn("change_type", lit("update")).unionByName(
           pairs.select(allCols.map(c => col(s"__pre.`$c`").as(c)): _*)
             .withColumn("change_type", lit("update_preimage")))))
-    val labelled: Seq[(String, () => (Seq[String], Seq[String]))] =
-      Seq("data" -> dataThunk,
-        "dv" -> (() => (dvThunk(), Seq.empty[String]))) ++
-        cdfThunk.map(t => "cdf" -> (() => (t(), Seq.empty[String])))
-    val arts: Map[String, (Seq[String], Seq[String])] =
-      Par.map(spark, labelled)(j => j._1 -> j._2()).toMap
-    val (staged, stagedStats) = arts("data")
-    commitNext(path, v, live ++ staged, tableSchema(path, v),
-      carriedStats(path, v, live) ++ stagedStats,
-      dvFiles(path, v) ++ arts("dv")._1,
-      cdf = cdfThunk.map(_ => arts("cdf")._1),
-      bloomExtra = maybeBloom(spark, path, v, staged))
+    commitDml(path, v)(staged = staged, stagedStats = stagedStats,
+      dv = dvFiles(path, v) ++ dvStaged, cdf = cdfStaged,
+      bloom = maybeBloom(spark, path, v, staged))
   }
 
   /** A75 — MERGE-ON-READ UPSERT: the DV twin of [[mergeVersioned]].
@@ -3900,7 +3655,9 @@ object Snapshots {
     * anti join until [[reconcileDV]] / OPTIMIZE folds. Assumes the
     * keyed-table invariant every merge maintains (one live row per
     * key); duplicate live rows under one key are all retired when the
-    * key's image changes. Returns the new version.
+    * key's image changes. `txn` as in [[mergeVersioned]] — the
+    * exactly-once contract the merge-on-read streaming sink rides.
+    * Returns the new version.
     */
   def mergeVersionedDV(spark: SparkSession, path: String,
       updates: DataFrame, keyCol: String,
@@ -3913,107 +3670,37 @@ object Snapshots {
   def mergeVersionedDV(spark: SparkSession, path: String,
       updates: DataFrame, keyCols: Seq[String],
       txn: Option[(String, Long)]): Int =
-    mergeVersionedDVPre(spark, path, updates, keyCols, txn, None)
+    mergeVersionedOCC(spark, path, updates, keyCols, maxRetries = 0,
+      beforeCommit = () => (), txn = txn, mor = true)
 
-  /** r16 — [[mergeVersionedDV]] with a router-precomputed key summary
-    * (see [[partitionedKeySummaries]]): the per-dir merge then runs no
-    * summary action of its own. */
-  private[sources] def mergeVersionedDVPre(spark: SparkSession, path: String,
-      updates: DataFrame, keyCols: Seq[String],
-      txn: Option[(String, Long)],
-      preSummary: Option[BatchKeySummary]): Int = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    require(keyCols.nonEmpty, "merge: empty key column list")
-    require(keyCols.distinct.size == keyCols.size,
-      s"merge: duplicate key column in ${keyCols.mkString(", ")}")
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
-    // A51: a replayed transaction no-ops before staging anything
-    txn.foreach { case (app, ver) =>
-      if (txnVersionOf(path, v, app).exists(_ >= ver)) return v
-    }
-    // Materialize the batch ONCE (r13 advice fix): touched-file
-    // discovery, the appended data, the DV marks, and the change rows
-    // must all derive from ONE evaluation of the source. A
-    // non-deterministic updates frame (rand(), sample, a re-executed
-    // shuffle after executor loss) re-evaluated per artifact could
-    // commit mutually inconsistent pieces — worse here than in the CoW
-    // merge because a MoR commit couples TWO artifacts (DV + appends).
-    // r15: a batch that is ALREADY pinned data (the streaming sink's
-    // checkpointed dedup, or a per-partition slice of it) skips the
-    // redundant re-checkpoint — a job per commit on every micro-batch.
-    // r16: stable-snapshot batches skip it too (see mergeVersionedOCC).
-    val ups =
-      if (isPinned(updates) || isStableSnapshot(updates)) updates
-      else updates.localCheckpoint()
-    enforceConstraints(path, v, ups)
-    val live = liveFiles(path, v)
-    lazy val target = readUnder(spark, path, v, live)
-    val schemaNow = tableSchema(path, v).getOrElse(target.schema)
-    keyCols.foreach(k => require(schemaNow.fieldNames.contains(k),
-      s"mergeVersionedDV: no key column '$k' in " +
-        schemaNow.fieldNames.mkString(", ")))
-    // r13 (the r12 verdict's dup-key asymmetry): a duplicate-keyed
-    // source refuses. r16: the refusal rides the batch key summary —
-    // the same single action that feeds driver-side candidate-file
-    // discovery — and is now EXACT about blame (a violated
-    // one-live-row-per-key invariant in the TARGET refuses separately
-    // below, instead of a message wrongly naming the source).
-    val leadKey = keyCols.head
-    val keyType = schemaNow(leadKey).dataType
-    val summary =
-      preSummary.getOrElse(batchKeySummary(ups, keyCols, keyType))
-    require(!summary.hasDupTuples,
-      s"merge: duplicate '${keyCols.mkString(", ")}' keys in the source " +
-        "violate MERGE cardinality on a keyed table")
-    val touched: IndexedSeq[String] = manifestRanges(path, v, live, leadKey)
-      .flatMap(touchedByRanges(_, keyType, summary,
-        plannerTouchedMaxCompares(spark)))
-      .getOrElse {
-        val stats = manifestRanges(path, v, live, leadKey) match {
-          case Some(rows) => keyRangeFrame(spark, rows, keyType)
-          case None => target
-            .withColumn("file", input_file_name())
-            .groupBy("file")
-            .agg(min(col(s"`$leadKey`")).as("kmin"),
-              max(col(s"`$leadKey`")).as("kmax"))
-        }
-        val keys = ups.select(col(s"`$leadKey`").as("__k")).distinct()
-        stats.join(broadcast(keys), keyRangeCond(col("__k")), "left_semi")
-          .select("file").collect().map(_.getString(0))
-          .map(canonical).toIndexedSeq
-      }
+  /** [[mergeVersionedDV]]'s commit, after [[mergeVersionedOCC]]'s shared
+    * head: `ups` is the pinned batch, `touched` the files that may hold
+    * one of its keys. */
+  private def mergeOnRead(spark: SparkSession, path: String, v: Int,
+      ups: DataFrame, keyCols: Seq[String], schemaNow: StructType,
+      summary: BatchKeySummary, touched: IndexedSeq[String],
+      marks: Seq[(String, Long)]): Int = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
     val outSchema = StructType(
       schemaNow.fields ++ ups.schema.fields.filterNot(f =>
         schemaNow.fieldNames.contains(f.name)))
     val payload = outSchema.fieldNames.filterNot(keyCols.contains).toIndexedSeq
-    val payloadType = StructType(payload.map(c => outSchema(c)))
     // composite keys ride as ONE "__k" struct (non-null per the keyed
     // contract), keeping the join/probe shape of the single-key path
-    val keyStructType = StructType(keyCols.map(c => outSchema(c)))
     def keyStruct = struct(keyCols.map(c => col(s"`$c`")): _*)
-    def norm(df: DataFrame): DataFrame =
-      df.select(outSchema.fields.toIndexedSeq.map(f =>
-        (if (df.columns.contains(f.name)) col(s"`${f.name}`")
-         else lit(null).cast(f.dataType)).as(f.name)): _*)
+    def norm(df: DataFrame): DataFrame = df.select(filledTo(df, outSchema): _*)
     // live pre-image rows + positions of every file that can hold a
     // batch key (DVs applied: a dead row never blocks an insert or
     // re-marks)
     val pre =
       if (touched.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("__k", keyStructType),
-            StructField("__pre", payloadType),
-            StructField("__file", StringType),
-            StructField("__pos", LongType))))
+        emptyFrame(spark, StructType(Seq(
+          StructField("__k", StructType(keyCols.map(c => outSchema(c)))),
+          StructField("__pre", StructType(payload.map(c => outSchema(c)))),
+          StructField("__file", StringType), StructField("__pos", LongType))))
       else {
-        val withPos = applyDvIfAny(spark, path, v,
-          readFilesAsWithPos(spark, tableSchema(path, v), touched))
-        withPos.select(
-          outSchema.fields.toIndexedSeq.map(f =>
-            (if (withPos.columns.contains(f.name)) col(s"`${f.name}`")
-             else lit(null).cast(f.dataType)).as(f.name)) ++
+        val withPos = livePositions(spark, path, v, touched)
+        withPos.select(filledTo(withPos, outSchema) ++
             Seq(col("__file"), col("__pos")): _*)
           .select(keyStruct.as("__k"),
             struct(payload.map(c => col(s"`$c`")): _*).as("__pre"),
@@ -4023,12 +3710,11 @@ object Snapshots {
       struct(payload.map(c => col(s"`$c`")): _*).as("__post"))
     // one evaluation of the batch ⋈ touched-pre join feeds the empty
     // probe, the append write, the DV write, and the CDF rows — the
-    // candidate-file position scan runs ONCE, not once per artifact.
-    // r16: the emptiness/changed counts RIDE the checkpoint job itself
-    // (CollectMetrics accumulators — observe()), so the separate
-    // counts aggregate the r15 shape still paid per commit is gone.
+    // candidate-file position scan runs ONCE, not once per artifact;
+    // the emptiness/changed counts RIDE the checkpoint job itself
+    // (CollectMetrics accumulators — observe()), not a job of their own
     val changedCond = col("__file").isNotNull && !(col("__pre") <=> col("__post"))
-    val obs = org.apache.spark.sql.Observation()
+    val obs = Observation()
     val joined = post.join(pre, Seq("__k"), "left_outer")
       .observe(obs,
         count(when(col("__file").isNull, lit(1))).as("__ni"),
@@ -4042,15 +3728,16 @@ object Snapshots {
         Seq(r.getLong(0), r.getLong(1), r.getLong(2))
       })
     val (nIns, nChg, nJoined) = (counts(0), counts(1), counts(2))
-    // the target side of the r13 cardinality contract (r15 advice: the
-    // fused |joined|-vs-distinct probe blamed the SOURCE for this):
-    // source keys are unique (refused above), so extra joined rows can
-    // only mean a batch key matched >1 live pre row — the target's
+    // the target side of the cardinality contract: source keys are
+    // unique (refused in the head), so extra joined rows can only mean
+    // a batch key matched >1 live pre row — the target's
     // one-live-row-per-key invariant was violated upstream (e.g. via
     // appendVersioned on a keyed table)
     require(nJoined == summary.nRows,
       s"merge: target $path holds multiple live rows for a merge key " +
         "(one-live-row-per-key invariant violated; source keys are unique)")
+    if (nIns == 0 && nChg == 0) // pure verbatim batch: no-op version
+      return commitDml(path, v)(marks = marks)
     val inserts = joined.filter(col("__file").isNull)
     val changed = joined.filter(changedCond)
     def asRows(df: DataFrame, src: String): DataFrame =
@@ -4058,101 +3745,25 @@ object Snapshots {
         payload.map(c => col(s"$src.`$c`").as(c)): _*)
     val appended = asRows(inserts, "__post")
       .unionByName(asRows(changed, "__post").distinct())
-    if (nIns == 0 && nChg == 0) // pure verbatim batch: no-op version
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty),
-        txnSet = txn)
-    // r16: the three commit artifacts — appended data, DV marks, CDF
-    // rows — all read the one checkpointed join; their writes are
-    // independent, so they run OVERLAPPED (guide §2.6) instead of
-    // paying three sequential job latencies per commit.
-    // r13 note kept: a pure-insert batch marks nothing — staging its
-    // EMPTY DV parquet anyway would tag the version as DV-carrying,
-    // forcing the row-based compat read path for no reason.
-    val dataThunk: () => (Seq[String], Seq[String]) =
-      () => {
-        val st = stageData(norm(appended), Some(outSchema), path, v + 1,
-          bucketSpecOf(path, v), "graft_snap_mergemor")
-        // stats scan rides the data thunk
-        (st, statsLines(spark, st,
-          stagedFrame(norm(appended), Some(outSchema)).schema))
-      }
-    val dvThunk: Option[() => Seq[String]] =
-      if (nChg == 0) None
-      else Some(() => {
-        val doomed = changed.select(
+    // a pure-insert batch marks nothing — staging its EMPTY DV parquet
+    // anyway would tag the version as DV-carrying, forcing the
+    // row-based compat read path for no reason
+    val (staged, stagedStats, dvStaged, cdfStaged) = stageArtifacts(spark,
+      path, v, norm(appended), Some(outSchema),
+      dv = if (nChg == 0) None
+        else Some(changed.select(
           Seq(col("__file").as("__dv_file"), col("__pos").as("__dv_pos")) ++
             keyCols.map(c => col(s"__k.`$c`").as(c)) ++
-            payload.map(c => col(s"__pre.`$c`").as(c)): _*)
-        val dvObs = org.apache.spark.sql.Observation()
-        val dvStage = Files.createTempDirectory("graft_dv_merge").toString
-        doomed.observe(dvObs, collect_set(col("__dv_file")).as("__dvf"))
-          .write.mode(SaveMode.Overwrite).parquet(dvStage)
-        val dst = Paths.get(path)
-        val staged = listDir(Paths.get(dvStage))
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map { p =>
-            val name = s"v${v + 1}_dv_${p.getFileName.toString}"
-            Files.move(p, dst.resolve(name))
-            dst.resolve(name).toString
-          }
-        recordDvMarks(dvObs, staged)
-        staged
-      })
-    val cdfThunk: Option[() => Seq[String]] =
-      if (!cdfEnabled(path, v)) None
-      else Some(() => stageCdf(path, v,
-        asRows(inserts, "__post").withColumn("change_type", lit("insert"))
+            payload.map(c => col(s"__pre.`$c`").as(c)): _*)),
+      cdf = if (!cdfEnabled(path, v)) None
+        else Some(asRows(inserts, "__post").withColumn("change_type", lit("insert"))
           .unionByName(asRows(changed, "__post").distinct()
             .withColumn("change_type", lit("update")))
           .unionByName(asRows(changed, "__pre")
             .withColumn("change_type", lit("update_preimage")))))
-    val labelled: Seq[(String, () => (Seq[String], Seq[String]))] =
-      Seq("data" -> dataThunk) ++
-        dvThunk.map(t => "dv" -> (() => (t(), Seq.empty[String]))) ++
-        cdfThunk.map(t => "cdf" -> (() => (t(), Seq.empty[String])))
-    val arts: Map[String, (Seq[String], Seq[String])] =
-      Par.map(spark, labelled)(j => j._1 -> j._2()).toMap
-    val (staged, stagedStats) = arts("data")
-    commitNext(path, v, live ++ staged, Some(outSchema),
-      carriedStats(path, v, live) ++ stagedStats,
-      dvFiles(path, v) ++ arts.get("dv").map(_._1).getOrElse(Seq.empty),
-      cdf = cdfThunk.map(_ => arts("cdf")._1),
-      bloomExtra = maybeBloom(spark, path, v, staged),
-      txnSet = txn)
-  }
-
-  /** A51 — [[mergeVersionedDV]] under a transaction mark: a replayed
-    * (appId, version) no-ops without staging a byte, and the mark
-    * commits atomically with the DV + appended files — the
-    * exactly-once contract the merge-on-read streaming sink rides. */
-  def mergeVersionedDVIdempotent(spark: SparkSession, path: String,
-      updates: DataFrame, keyCol: String, txnAppId: String,
-      txnVersion: Long): Int =
-    mergeVersionedDVIdempotent(spark, path, updates, Seq(keyCol), txnAppId,
-      txnVersion)
-
-  /** Composite-key form of [[mergeVersionedDVIdempotent]] (r15). */
-  def mergeVersionedDVIdempotent(spark: SparkSession, path: String,
-      updates: DataFrame, keyCols: Seq[String], txnAppId: String,
-      txnVersion: Long): Int = {
-    requireTxnApp(txnAppId)
-    mergeVersionedDV(spark, path, updates, keyCols,
-      Some((txnAppId, txnVersion)))
-  }
-
-  /** [[applyDv]] when version `v` has DVs, identity otherwise — for
-    * callers that need the __file/__pos columns kept. */
-  private def applyDvIfAny(spark: SparkSession, path: String, v: Int,
-      withPos: DataFrame): DataFrame = {
-    val dvs = dvFiles(path, v)
-    if (dvs.isEmpty) withPos
-    else {
-      val dv = readDv(spark, dvs)
-      withPos.join(dv,
-        withPos("__file") === dv("__dv_file") && withPos("__pos") === dv("__dv_pos"),
-        "left_anti")
-    }
+    commitDml(path, v)(staged = staged, stagedStats = stagedStats,
+      schema = Some(outSchema), dv = dvFiles(path, v) ++ dvStaged,
+      cdf = cdfStaged, bloom = maybeBloom(spark, path, v, staged), marks = marks)
   }
 
   /** A30 — RECONCILE: fold the accumulated deletion vectors back into
@@ -4165,39 +3776,27 @@ object Snapshots {
     * Returns the new version (current if there are no DVs).
     */
   def reconcileDV(spark: SparkSession, path: String): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     val dvs = dvFiles(path, v)
     if (dvs.isEmpty) return v
-    val live = liveFiles(path, v)
-    val liveSet = live.map(canonical).toSet
+    val liveSet = liveFiles(path, v).map(canonical).toSet
     // files with live dead-positions: answered from the dvMarkCache
     // memo when every sidecar was written by THIS driver (the
-    // steady-state auto-reconcile case — zero jobs), else the bounded
-    // collect (∝ distinct files ever DV-touched)
+    // steady-state auto-reconcile case — zero jobs), else the one
+    // shuffle-free probe (∝ distinct files ever DV-touched)
     val cached = dvs.map(f => Option(dvMarkCache.get(canonical(f))))
     val touched =
-      (if (cached.forall(_.isDefined))
-        cached.flatMap(_.get).distinct.map(canonical)
-      else readDv(spark, dvs).select("__dv_file").distinct()
-        .collect().map(r => canonical(r.getString(0))).toSeq)
-        .filter(liveSet.contains).toIndexedSeq
+      (if (cached.forall(_.isDefined)) cached.flatMap(_.get).distinct
+       else dvMarks(spark, dvs).keys.toSeq).filter(liveSet.contains).toIndexedSeq
     if (touched.isEmpty) // all entries inert: drop the refs, move on
-      return commitNext(path, v, live, tableSchema(path, v),
-        carriedStats(path, v, live), cdf = Some(Seq.empty))
-    val keptRows = readLive(spark, path, v, touched)
-    // through the shared bucket-aware staging (r14): a reconcile on a
+      return commitDml(path, v)(dv = Nil)
+    // through the shared bucket-aware staging: a reconcile on a
     // bucketed dir must re-tag the folded files, or the steady-state
     // MoR + auto-reconcile loop on a composed-bucketed root would
     // silently degrade the exchange-free layout it exists to serve
-    val staged = stageData(keptRows, tableSchema(path, v), path, v + 1,
-      bucketSpecOf(path, v), "graft_dv_rec", "dvrec_")
-    val touchedSet = touched.toSet
-    val retained = live.filterNot(f => touchedSet.contains(canonical(f)))
-    commitNext(path, v, retained ++ staged, tableSchema(path, v),
-      carriedStats(path, v, retained) ++ statsLines(spark, staged,
-        stagedFrame(keptRows, tableSchema(path, v)).schema),
-      cdf = Some(Seq.empty))
+    val (staged, stats) = stageData(spark, readLive(spark, path, v, touched),
+      tableSchema(path, v), path, v + 1, bucketSpecOf(path, v), "dvrec_")
+    commitDml(path, v)(touched, staged, stats, dv = Nil)
   }
 
   /** A22 — OPTIMIZE: a rewrite-only commit that bin-packs small live
@@ -4217,8 +3816,7 @@ object Snapshots {
     */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20, minFiles: Int = 2): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     packSmall(spark, path, v, liveFiles(path, v), _ => true,
       targetBytes, minFiles)
   }
@@ -4243,28 +3841,11 @@ object Snapshots {
     // read under the recorded schema: after a widening commit the
     // small set has MIXED physical schemas; packing must null-fill,
     // not silently drop the widened column from pre-widening files
-    val sch = tableSchema(path, v)
     val packed = readLive(spark, path, v, small)
-    val out = stagedFrame(packed, sch)
-    val staged = bspec match {
-      case Some(b) =>
-        stageData(packed, sch, path, v + 1, Some(b), "graft_compact",
-          "compact_")
-      case None =>
-        val stage = Files.createTempDirectory("graft_compact").toString
-        out.coalesce(bins).write.mode(SaveMode.Overwrite).parquet(stage)
-        val dst = Paths.get(path)
-        listDir(Paths.get(stage))
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map { p =>
-            val name = s"v${v + 1}_compact_${p.getFileName.toString}"
-            Files.move(p, dst.resolve(name))
-            dst.resolve(name).toString
-          }
-    }
-    commitNext(path, v, big ++ staged, tableSchema(path, v),
-      carriedStats(path, v, big) ++ statsLines(spark, staged, out.schema),
-      dvFiles(path, v), cdf = Some(Seq.empty))
+    val (staged, stats) = stageData(spark,
+      if (bspec.isEmpty) packed.coalesce(bins) else packed,
+      tableSchema(path, v), path, v + 1, bspec, "compact_")
+    commitDml(path, v)(small, staged, stats)
   }
 
   /** A22 — predicate-scoped OPTIMIZE (the Delta `OPTIMIZE … WHERE`
@@ -4282,8 +3863,7 @@ object Snapshots {
   def compactWhere(spark: SparkSession, path: String, column: String,
       lo: Long, hi: Long, targetBytes: Long = 128L << 20,
       minFiles: Int = 2): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     val live = liveFiles(path, v)
     val inScope: Set[String] = manifestRanges(path, v, live, column) match {
       case Some(rows) => rows.collect { case (f, mn, mx, t)
@@ -4326,8 +3906,7 @@ object Snapshots {
     * same interleave as codegen'd stock bit arithmetic. */
   def compactZOrderCols(spark: SparkSession, path: String,
       cols: Seq[String], numFiles: Int): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     // A50: Z-order's global Morton sort and the hash-bucket layout are
     // mutually exclusive whole-table layout decisions — silently
     // destroying the bucket property (and with it every exchange-free
@@ -4340,21 +3919,10 @@ object Snapshots {
     // readLive + full rewrite: every DV entry becomes inert here, so
     // the commit drops the DV set entirely — ZORDER doubles as the
     // merge-on-read → pure-files reconciliation point
-    val clustered = Sources.zClusteredCols(
-      readLive(spark, path, v, live), cols, numFiles)
-    val stage = Files.createTempDirectory("graft_zorder").toString
-    val out = stagedFrame(clustered, tableSchema(path, v))
-    out.write.mode(SaveMode.Overwrite).parquet(stage)
-    val dst = Paths.get(path)
-    val staged = listDir(Paths.get(stage))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val name = s"v${v + 1}_zorder_${p.getFileName.toString}"
-        Files.move(p, dst.resolve(name))
-        dst.resolve(name).toString
-      }
-    commitNext(path, v, staged, tableSchema(path, v),
-      statsLines(spark, staged, out.schema), cdf = Some(Seq.empty),
+    val (staged, stats) = stageData(spark, Sources.zClusteredCols(
+      readLive(spark, path, v, live), cols, numFiles), tableSchema(path, v),
+      path, v + 1, None, "zorder_")
+    commitNext(path, v, staged, tableSchema(path, v), stats, cdf = Some(Seq.empty),
       clusterOverride = Some((cols, staged)))
   }
 
@@ -4373,8 +3941,7 @@ object Snapshots {
     */
   def compactZOrderIncremental(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20): Int = {
-    val v = currentVersion(path)
-    require(v >= 0, s"$path not initialized (call init)")
+    val v = headOf(path)
     val cols = clusterOf(path, v).getOrElse(throw new IllegalArgumentException(
       s"$path has no clustering columns recorded — run compactZOrder once first"))
     val live = liveFiles(path, v)
@@ -4383,22 +3950,12 @@ object Snapshots {
     if (tail.isEmpty) return v
     val tailBytes = tail.map(f => Files.size(Paths.get(canonical(f)))).sum
     val bins = math.max(1L, (tailBytes + targetBytes - 1) / targetBytes).toInt
-    val reclustered = Sources.zClusteredCols(
-      readLive(spark, path, v, tail), cols, bins)
-    val stage = Files.createTempDirectory("graft_zorder_inc").toString
-    val out = stagedFrame(reclustered, tableSchema(path, v))
-    out.write.mode(SaveMode.Overwrite).parquet(stage)
-    val dst = Paths.get(path)
-    val staged = listDir(Paths.get(stage))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val name = s"v${v + 1}_zinc_${p.getFileName.toString}"
-        Files.move(p, dst.resolve(name))
-        dst.resolve(name).toString
-      }
+    val (staged, stats) = stageData(spark, Sources.zClusteredCols(
+      readLive(spark, path, v, tail), cols, bins), tableSchema(path, v),
+      path, v + 1, None, "zinc_")
     val retained = live.filter(f => clustered.contains(canonical(f)))
     commitNext(path, v, retained ++ staged, tableSchema(path, v),
-      carriedStats(path, v, retained) ++ statsLines(spark, staged, out.schema),
+      carriedStats(path, v, retained) ++ stats,
       dvFiles(path, v), cdf = Some(Seq.empty),
       clusterOverride = Some((cols, retained ++ staged)))
   }
@@ -4516,10 +4073,9 @@ object Snapshots {
       hint: Option[org.apache.spark.sql.types.StructType],
       shared: Set[String], diffDvs: Seq[String]): Option[DataFrame] = {
     if (diffDvs.isEmpty || shared.isEmpty) return None
-    val dv = readDv(spark, diffDvs)
-    val hit = dv.select("__dv_file").distinct().collect()
-      .map(r => canonical(r.getString(0))).filter(shared.contains).toIndexedSeq
+    val hit = dvMarks(spark, diffDvs).keys.filter(shared.contains).toIndexedSeq
     if (hit.isEmpty) return None
+    val dv = readDv(spark, diffDvs)
     val rows = readFilesAsWithPos(spark, hint, hit)
     Some(rows.join(dv,
         rows("__file") === dv("__dv_file") && rows("__pos") === dv("__dv_pos"),

@@ -108,30 +108,15 @@ object UpsertSink {
       // between commit and recordBatch used to re-commit an extra
       // version on replay; now the replayed merge no-ops in the log).
       // The sidecar stays as the cheap pre-check (no manifest read).
-      scope match {
-        case Some(sc) =>
-          val app = s"stream_$sc"
-          if (graft.sources.Snapshots.currentVersion(path) < 0)
-            graft.sources.Snapshots.appendVersionedIdempotent(
-              batch.sparkSession, path, latest, app, batchId)
-          else if (mor)
-            graft.sources.Snapshots.mergeVersionedDVIdempotent(
-              batch.sparkSession, path, latest, keyCols, app, batchId)
-          else
-            graft.sources.Snapshots.mergeVersionedIdempotent(
-              batch.sparkSession, path, latest, keyCols, app, batchId)
-          recordBatch(path, sc, batchId)
-        case None =>
-          if (graft.sources.Snapshots.currentVersion(path) < 0)
-            graft.sources.Snapshots.overwriteVersioned(
-              batch.sparkSession, path, latest)
-          else if (mor)
-            graft.sources.Snapshots.mergeVersionedDV(
-              batch.sparkSession, path, latest, keyCols, None)
-          else
-            graft.sources.Snapshots.mergeVersioned(
-              batch.sparkSession, path, latest, keyCols)
-      }
+      val ss = batch.sparkSession
+      val txn = scope.map(sc => (s"stream_$sc", batchId))
+      if (graft.sources.Snapshots.currentVersion(path) < 0)
+        graft.sources.Snapshots.appendVersioned(ss, path, latest, txn)
+      else if (mor)
+        graft.sources.Snapshots.mergeVersionedDV(ss, path, latest, keyCols, txn)
+      else
+        graft.sources.Snapshots.mergeVersioned(ss, path, latest, keyCols, txn)
+      scope.foreach(recordBatch(path, _, batchId))
     }
   }
 

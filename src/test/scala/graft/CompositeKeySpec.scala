@@ -141,12 +141,12 @@ class CompositeKeySpec extends GraftSuite {
     val dir = initTable()
     val wave = base.filter(col("k") % 23 === 6)
       .withColumn("price", col("price") + 7.0).drop("k")
-    val v1 = Snapshots.mergeVersionedIdempotent(spark, dir, wave, keys,
-      "ckA", 1L)
+    val v1 = Snapshots.mergeVersioned(spark, dir, wave, keys,
+      Some(("ckA", 1L)))
     val sumBefore = spark.read.format("graft").load(dir)
       .agg(sum(col("price").cast("decimal(20,2)"))).head().getDecimal(0)
-    assert(Snapshots.mergeVersionedIdempotent(spark, dir, wave, keys,
-      "ckA", 1L) == v1)
+    assert(Snapshots.mergeVersioned(spark, dir, wave, keys,
+      Some(("ckA", 1L))) == v1)
     assert(Snapshots.currentVersion(dir) == v1)
     assert(spark.read.format("graft").load(dir)
       .agg(sum(col("price").cast("decimal(20,2)"))).head()

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.graft.StreamingFrame
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.{GraftChangeSource, GraftPartitionedChangeSource, PartitionedSnapshots, Snapshots}
+import graft.sources.{GraftChangeSource, GraftPartitionedChangeSource, MergeWhen, PartitionedSnapshots, Snapshots}
 
 /** Planning a lake read or a change-feed batch submits no Spark job:
   * graft's own files are read under schemas graft already holds (DV
@@ -193,6 +193,8 @@ class LakePlanningSpec extends GraftSuite {
     val path = Files.createTempDirectory("lake_plan_jobs").toString + "/t"
     frame(rowsOf(0L until 200L, "v")).repartition(4).write.parquet(path)
     Snapshots.init(spark, path, changeDataFeed = true)
+    import spark.implicits._
+    val upsertAll = Seq("k", "grp", "payload", "n").map(c => c -> col(s"__src_$c"))
     val counts = Seq(
       "mergeVersioned" -> jobsOf(Snapshots.mergeVersioned(spark, path,
         frame(rowsOf((0L until 20L) ++ (200L until 210L), "c")), "k"))._2,
@@ -202,9 +204,58 @@ class LakePlanningSpec extends GraftSuite {
         import spark.implicits._; Seq(100L, 101L, 102L, 5L).toDF("k") }, "k"))._2,
       "appendVersioned" -> jobsOf(Snapshots.appendVersioned(spark, path,
         frame(rowsOf(300L until 320L, "a"))))._2,
-      "compact" -> jobsOf(Snapshots.compact(spark, path, targetBytes = 1L << 20))._2)
+      "compact" -> jobsOf(Snapshots.compact(spark, path, targetBytes = 1L << 20))._2,
+      "mergeVersionedClauses" -> jobsOf(Snapshots.mergeVersionedClauses(spark, path,
+        frame(rowsOf((10L until 15L) ++ (220L until 222L), "q")), "k", Seq(
+          MergeWhen.MatchedUpdate(None, Seq("payload" -> col("__src_payload"))),
+          MergeWhen.NotMatchedInsert(None, upsertAll))))._2,
+      "updateVersioned" -> jobsOf(Snapshots.updateVersioned(spark, path,
+        col("k") < 5L, Seq("payload" -> lit("u"))))._2,
+      "updateVersionedDV" -> jobsOf(Snapshots.updateVersionedDV(spark, path,
+        col("k").between(20L, 25L), Seq("payload" -> lit("ud"))))._2,
+      "deleteVersioned" -> jobsOf(Snapshots.deleteVersioned(spark, path,
+        col("k") === 40L))._2,
+      "deleteVersionedDV" -> jobsOf(Snapshots.deleteVersionedDV(spark, path,
+        col("k") === 41L))._2,
+      "deleteVersionedKeysDV" -> jobsOf(Snapshots.deleteVersionedKeysDV(spark, path,
+        Seq(42L, 43L).toDF("k"), "k"))._2,
+      "reconcileDV" -> jobsOf(Snapshots.reconcileDV(spark, path))._2,
+      "mergeVersioned txn" -> jobsOf(Snapshots.mergeVersioned(spark, path,
+        frame(rowsOf(60L until 65L, "t")), Seq("k"), Some(("app", 1L))))._2,
+      "mergeVersionedDV txn" -> jobsOf(Snapshots.mergeVersionedDV(spark, path,
+        frame(rowsOf(70L until 75L, "d")), Seq("k"), Some(("appd", 1L))))._2,
+      "appendVersioned txn" -> jobsOf(Snapshots.appendVersioned(spark, path,
+        frame(rowsOf(400L until 405L, "a")), Some(("appa", 1L))))._2,
+      "txn replays" -> jobsOf {
+        Snapshots.mergeVersioned(spark, path, frame(rowsOf(60L until 65L, "t")),
+          Seq("k"), Some(("app", 1L)))
+        Snapshots.mergeVersionedDV(spark, path, frame(rowsOf(70L until 75L, "d")),
+          Seq("k"), Some(("appd", 1L)))
+        Snapshots.appendVersioned(spark, path, frame(rowsOf(400L until 405L, "a")),
+          Some(("appa", 1L)))
+      }._2)
     assert(counts == Seq("mergeVersioned" -> 8, "mergeVersionedDV" -> 11,
-      "deleteVersionedKeys" -> 14, "appendVersioned" -> 4, "compact" -> 4))
+      "deleteVersionedKeys" -> 14, "appendVersioned" -> 4, "compact" -> 4,
+      "mergeVersionedClauses" -> 12, "updateVersioned" -> 7,
+      "updateVersionedDV" -> 8, "deleteVersioned" -> 7,
+      "deleteVersionedDV" -> 2, "deleteVersionedKeysDV" -> 7,
+      "reconcileDV" -> 4, "mergeVersioned txn" -> 8,
+      "mergeVersionedDV txn" -> 11, "appendVersioned txn" -> 4,
+      "txn replays" -> 0), counts.mkString(", "))
+    assert(Snapshots.currentVersion(path) == 15)
+  }
+
+  test("rowCount on a DV version runs one job") {
+    val path = Files.createTempDirectory("lake_plan_count").toString + "/t"
+    val base = rowsOf(0L until 200L, "v")
+    frame(base).repartition(4).write.parquet(path)
+    Snapshots.init(spark, path)
+    val mor = rowsOf((50L until 200L by 15L) ++ (210L until 214L), "m")
+    Snapshots.mergeVersionedDV(spark, path, frame(mor), "k")
+    assert(Snapshots.dvFiles(path, 1).nonEmpty)
+    val (n, jobs) = jobsOf(Snapshots.rowCount(spark, path, 1))
+    assert(n.contains(upsert(upsert(Map.empty, base), mor).size.toLong))
+    assert(jobs == 1)
   }
 
   test("a restarted AvailableNow drain lands the model; its re-init getBatch adds no job") {

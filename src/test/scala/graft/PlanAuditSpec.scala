@@ -65,6 +65,16 @@ class PlanAuditSpec extends GraftSuite {
   // StreamingSpec instead.
   private val skip = Set("q_stream_tumble", "q_stream_join")
 
+  // Every audited query's executed plan, built once per run and shared
+  // by every audit below: many lake queries commit tables while they
+  // are built, so each build is the expensive part of an audit.
+  private lazy val executedPlans: Map[String, String] =
+    SparkEntry.queries.keys.filterNot(skip).map { name =>
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+      sources.LakehouseQueries.reclaim() // free eager lake staging copies
+      name -> plan
+    }.toMap
+
   // AUDIT-EXEMPT EAGER QUERIES (documented, not skipped): these run
   // their heavy work at DataFrame-CONSTRUCTION time and return only a
   // local relation or a final aggregate, so the plan asserts below see
@@ -101,10 +111,9 @@ class PlanAuditSpec extends GraftSuite {
 
   test("no unintended cartesian/nested-loop joins anywhere in the inventory") {
     SparkEntry.queries.keys.filterNot(skip).filterNot(allPairsWhitelist).foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+      val plan = executedPlans(name)
       assert(!plan.contains("CartesianProduct"), s"$name has CartesianProduct")
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name has BroadcastNestedLoopJoin")
-      sources.LakehouseQueries.reclaim() // free eager lake staging copies
     }
   }
 
@@ -114,16 +123,15 @@ class PlanAuditSpec extends GraftSuite {
     val fullLineitem = "l_orderkey,l_partkey,l_suppkey,l_linenumber,l_quantity," +
       "l_extendedprice,l_discount,l_tax,l_returnflag,l_linestatus,l_shipdate"
     SparkEntry.queries.keys.filterNot(skip).foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+      val plan = executedPlans(name)
       assert(!plan.replace(" ", "").contains(fullLineitem.replace(" ", "")),
         s"$name reads all lineitem columns")
-      sources.LakehouseQueries.reclaim() // free eager lake staging copies
     }
   }
 
   test("dimension joins broadcast, never shuffle the fact side") {
     Seq("q_bcast_join", "q5_multijoin").foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+      val plan = executedPlans(name)
       assert(plan.contains("BroadcastHashJoin"), s"$name lost its broadcast join")
     }
   }
@@ -166,7 +174,7 @@ class PlanAuditSpec extends GraftSuite {
     // h) — a window straight over the exploded occurrence rows buffers
     // a hot boilerplate hash whole in one WindowExec group
     Seq("q_dup_spans", "q_span_clean").foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+      val plan = executedPlans(name)
       val afterWindow = plan.substring(plan.indexOf("Window"))
       val agg = afterWindow.indexOf("Aggregate")
       val gen = afterWindow.indexOf("Generate")

@@ -29,23 +29,23 @@ class TxnSpec extends GraftSuite {
   test("replayed merge no-ops; marks are monotonic and per-app") {
     val p = tmp()
     Snapshots.overwriteVersioned(spark, p, ordersDf)
-    val v1 = Snapshots.mergeVersionedIdempotent(spark, p, wave(1),
-      "o_orderkey", "jobA", 1L)
+    val v1 = Snapshots.mergeVersioned(spark, p, wave(1),
+      Seq("o_orderkey"), Some(("jobA", 1L)))
     assert(v1 == 1 && Snapshots.txnVersionOf(p, "jobA").contains(1L))
     // exact replay: no new version, no content change
     val before = graftSum(p)
-    assert(Snapshots.mergeVersionedIdempotent(spark, p, wave(1),
-      "o_orderkey", "jobA", 1L) == v1)
+    assert(Snapshots.mergeVersioned(spark, p, wave(1),
+      Seq("o_orderkey"), Some(("jobA", 1L))) == v1)
     assert(Snapshots.currentVersion(p) == v1 && graftSum(p) == before)
     // next batch applies; a LATE lower version also no-ops
-    val v2 = Snapshots.mergeVersionedIdempotent(spark, p, wave(2),
-      "o_orderkey", "jobA", 2L)
+    val v2 = Snapshots.mergeVersioned(spark, p, wave(2),
+      Seq("o_orderkey"), Some(("jobA", 2L)))
     assert(v2 == 2)
-    assert(Snapshots.mergeVersionedIdempotent(spark, p, wave(1),
-      "o_orderkey", "jobA", 1L) == v2)
+    assert(Snapshots.mergeVersioned(spark, p, wave(1),
+      Seq("o_orderkey"), Some(("jobA", 1L))) == v2)
     // a DIFFERENT app with the same numbers is independent
-    val v3 = Snapshots.mergeVersionedIdempotent(spark, p, wave(3),
-      "o_orderkey", "jobB", 1L)
+    val v3 = Snapshots.mergeVersioned(spark, p, wave(3),
+      Seq("o_orderkey"), Some(("jobB", 1L)))
     assert(v3 == 3 && Snapshots.txnVersionOf(p, "jobA").contains(2L) &&
       Snapshots.txnVersionOf(p, "jobB").contains(1L))
     // unrelated untagged commits carry the marks forward
@@ -68,8 +68,8 @@ class TxnSpec extends GraftSuite {
     val vA = Snapshots.mergeVersionedOCC(spark, p, batch, Seq("o_orderkey"),
       maxRetries = 5,
       beforeCommit = () => {
-        Snapshots.mergeVersionedIdempotent(spark, p, batch, "o_orderkey",
-          "racer", 7L); ()
+        Snapshots.mergeVersioned(spark, p, batch, Seq("o_orderkey"),
+          Some(("racer", 7L))); ()
       },
       txn = Some(("racer", 7L)))
     assert(vA == 1, s"A must adopt B's commit, got $vA")
@@ -87,16 +87,16 @@ class TxnSpec extends GraftSuite {
 
   test("idempotent append bootstraps v0 WITH the mark") {
     val p = tmp()
-    val v0 = Snapshots.appendVersionedIdempotent(spark, p,
-      ordersDf.filter(col("o_orderkey") % 5 === 0), "boot", 0L)
+    val v0 = Snapshots.appendVersioned(spark, p,
+      ordersDf.filter(col("o_orderkey") % 5 === 0), Some(("boot", 0L)))
     assert(v0 == 0 && Snapshots.txnVersionOf(p, "boot").contains(0L))
     // crash-replay of batch 0 against the now-existing table: no-op
-    assert(Snapshots.appendVersionedIdempotent(spark, p,
-      ordersDf.filter(col("o_orderkey") % 5 === 0), "boot", 0L) == 0)
+    assert(Snapshots.appendVersioned(spark, p,
+      ordersDf.filter(col("o_orderkey") % 5 === 0), Some(("boot", 0L))) == 0)
     assert(Snapshots.currentVersion(p) == 0)
     val n0 = spark.read.format("graft").load(p).count()
-    val v1 = Snapshots.appendVersionedIdempotent(spark, p,
-      ordersDf.filter(col("o_orderkey") % 5 === 1), "boot", 1L)
+    val v1 = Snapshots.appendVersioned(spark, p,
+      ordersDf.filter(col("o_orderkey") % 5 === 1), Some(("boot", 1L)))
     assert(v1 == 1)
     assert(spark.read.format("graft").load(p).count() ==
       n0 + ordersDf.filter(col("o_orderkey") % 5 === 1).count())
@@ -124,15 +124,15 @@ class TxnSpec extends GraftSuite {
     } finally s.close()
     // the replay: currentVersion is still <0, so the mark check cannot
     // help — the orphan cleanup must prevent the batch landing twice
-    val v0 = Snapshots.appendVersionedIdempotent(spark, p, batch,
-      "boot2", 0L)
+    val v0 = Snapshots.appendVersioned(spark, p, batch,
+      Some(("boot2", 0L)))
     assert(v0 == 0 && Snapshots.txnVersionOf(p, "boot2").contains(0L))
     val got = spark.read.format("graft").load(p).count()
     assert(got == batch.count() + user.count(),
       s"expected exactly one batch copy plus the adopted user rows, got $got")
     // post-commit replay: the mark no-ops as before
-    assert(Snapshots.appendVersionedIdempotent(spark, p, batch,
-      "boot2", 0L) == 0)
+    assert(Snapshots.appendVersioned(spark, p, batch,
+      Some(("boot2", 0L))) == 0)
     assert(spark.read.format("graft").load(p).count() == got)
   }
 
@@ -261,15 +261,15 @@ class TxnSpec extends GraftSuite {
   test("marks survive RESTORE (replays after a rollback still no-op)") {
     val p = tmp()
     Snapshots.overwriteVersioned(spark, p, ordersDf)
-    Snapshots.mergeVersionedIdempotent(spark, p, wave(1), "o_orderkey",
-      "jobR", 1L)
-    Snapshots.mergeVersionedIdempotent(spark, p, wave(2), "o_orderkey",
-      "jobR", 2L)
+    Snapshots.mergeVersioned(spark, p, wave(1), Seq("o_orderkey"),
+      Some(("jobR", 1L)))
+    Snapshots.mergeVersioned(spark, p, wave(2), Seq("o_orderkey"),
+      Some(("jobR", 2L)))
     val vr = Snapshots.restore(p, 1)
     assert(Snapshots.txnVersionOf(p, "jobR").contains(2L),
       "restore must not roll the txn watermark back")
-    assert(Snapshots.mergeVersionedIdempotent(spark, p, wave(2),
-      "o_orderkey", "jobR", 2L) == vr)
+    assert(Snapshots.mergeVersioned(spark, p, wave(2),
+      Seq("o_orderkey"), Some(("jobR", 2L))) == vr)
   }
 
   test("writer options: a replayed append batch commits once; " +
