@@ -34,19 +34,82 @@ object Similarity {
       |  round(sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))), 4) AS l2_norm
       |FROM embeddings""".stripMargin
 
-  /** E1 — exact top-k neighbors for each query vector: broadcast the
-    * (small) query set against the full corpus, rank per query.
-    */
-  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val scored = corpus.as("c")
-      .join(broadcast(queries.as("q")), col("q.vec_id") =!= col("c.vec_id"))
-      .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
-        (round(vec_cosine(col("q.embedding"), col("c.embedding")), 4) + lit(0.0)).as("cos_sim"))
+  // ── The candidate core ─────────────────────────────────────────────
+  // Every search and near-dup method here and in Dedup runs the same
+  // three stages: ASSIGN each vector to buckets (a hyperplane signature
+  // per LSH table, an IVF cell, a minhash band), take CANDIDATES from
+  // an equi-join on the bucket, and VERIFY each candidate exactly (the
+  // rounded cosine, then a top-k or a threshold). The similarity join
+  // of MapReduce Algorithms for Big Data Analysis (VLDB 2012) has this
+  // shape; the methods differ only in their assigner and measure.
+
+  /** The rounded cosine every method verifies with: 4 decimals, and
+    * `+ 0.0` folds IEEE −0.0 into 0.0 as the oracles do. */
+  private[operators] def roundedCos(a: String, b: String): org.apache.spark.sql.Column =
+    round(vec_cosine(col(s"$a.embedding"), col(s"$b.embedding")), 4) + lit(0.0)
+
+  /** The exact-cosine top-k over candidate pairs of aliased sides `q`
+    * (queries) and `c` (corpus): rounded cosine, ranked per query by
+    * (cos_sim desc, neighbor_id asc). `distinctPairs` folds a pair
+    * found in several buckets into one; `maxSim` drops candidates at
+    * or above the band before ranking. */
+  private[operators] def rerank(cand: DataFrame, k: Int,
+      maxSim: Option[Double] = None, distinctPairs: Boolean = false): DataFrame = {
+    val scored = cand.select(col("q.vec_id").as("query_id"),
+      col("c.vec_id").as("neighbor_id"), roundedCos("q", "c").as("cos_sim"))
+    val unique = if (distinctPairs) scored.distinct() else scored
     val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    scored
+    maxSim.fold(unique)(m => unique.filter(col("cos_sim") < m))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
   }
+
+  /** The deterministic quantizer: the `cells` lowest-vec_id vectors. */
+  private[operators] def seedCentroids(e: DataFrame, cells: Long): DataFrame =
+    e.filter(col("vec_id") < cells)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+
+  /** The cell assigner: each vector's argmax-cosine centroid, ties to
+    * the lowest cid. An aggregation, not a window: the struct-max
+    * combines map-side, so the exchange carries one row per vector (-cid
+    * in slot 2 resolves a csim tie to the lowest cid, matching the
+    * oracles' ORDER BY csim DESC, cid ASC). `carry` columns ride the
+    * struct; a wide one (the embedding) makes max-over-struct sort wide
+    * rows, so callers that reuse the result re-join instead. */
+  private[operators] def assignCells(df: DataFrame, centroids: DataFrame,
+      carry: Seq[String] = Nil): DataFrame =
+    df.crossJoin(broadcast(centroids))
+      .withColumn("csim", vec_cosine(col("embedding"), col("cvec")))
+      .groupBy("vec_id")
+      .agg(max(struct(Seq(col("csim"), (-col("cid")).as("ncid"), col("cid")) ++
+        carry.map(col): _*)).as("m"))
+      .select(col("vec_id") +: carry.map(c => col(s"m.$c").as(c)) :+ col("m.cid").as("cid"): _*)
+
+  /** The probe pick: each query's `nprobe` nearest cells (ties to the
+    * lowest cid). The query set is bounded, so a window is cheap. */
+  private[operators] def probeCells(queries: DataFrame, centroids: DataFrame,
+      nprobe: Int): DataFrame = {
+    val wq = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cid").asc)
+    queries.crossJoin(broadcast(centroids))
+      .withColumn("csim", vec_cosine(col("embedding"), col("cvec")))
+      .withColumn("crn", row_number().over(wq))
+      .filter(col("crn") <= nprobe)
+      .select(col("vec_id"), col("embedding"), col("cid"))
+  }
+
+  /** The IVF probe: candidates are the members (vec_id, embedding, cid)
+    * of each query's probed cells, re-ranked by exact cosine. */
+  private def ivfProbe(members: DataFrame, queries: DataFrame,
+      centroids: DataFrame, k: Int, nprobe: Int, maxSim: Option[Double]): DataFrame =
+    rerank(members.as("c").join(broadcast(probeCells(queries, centroids, nprobe).as("q")),
+      col("q.cid") === col("c.cid") && col("q.vec_id") =!= col("c.vec_id")), k, maxSim)
+
+  /** E1 — exact top-k neighbors for each query vector: broadcast the
+    * (small) query set against the full corpus, rank per query.
+    */
+  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    rerank(corpus.as("c")
+      .join(broadcast(queries.as("q")), col("q.vec_id") =!= col("c.vec_id")), k)
 
   def qKnnBrute(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
@@ -89,25 +152,28 @@ object Similarity {
     * sequential double either way, so the sign bits (and the DuckDB
     * replay in Dedup.qEmbedDupSql) are unchanged bit-for-bit.
     */
-  def hyperplaneSig(vecCol: String, table: Int, bits: Int, dim: Int): org.apache.spark.sql.Column =
+  private def hyperplaneSig(table: Int, bits: Int, dim: Int): org.apache.spark.sql.Column =
     (0 until bits).map { b =>
       val hp = typedLit(hyperplane(table, b, dim).map(_.toFloat))
-      when(graft.functions.vec_dot(col(vecCol), hp) > 0, lit(1L << b)).otherwise(lit(0L))
+      when(graft.functions.vec_dot(col("embedding"), hp) > 0, lit(1L << b)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** One-pass embedding-dimension probe. A wrong dim wouldn't error —
-    * zip_with null-pads and the sign bits silently collapse to 0 — so
-    * this asserts the corpus is non-empty AND rectangular (min dim ==
-    * max dim) before any hyperplane is built.
+  /** The hyperplane assigner: one (vec_id, embedding, tbl, bkt) row per
+    * LSH table, bkt the table's `bits` sign bits. */
+  private[operators] def hyperplaneBuckets(df: DataFrame, bits: Int, tables: Int,
+      dim: Int): DataFrame =
+    df.select(col("vec_id"), col("embedding"), explode(array((0 until tables).map(t =>
+        struct(lit(t).as("tbl"), hyperplaneSig(t, bits, dim).as("bkt"))): _*)).as("tb"))
+      .select(col("vec_id"), col("embedding"), col("tb.tbl").as("tbl"), col("tb.bkt").as("bkt"))
+
+  /** Embedding-dimension probe. A wrong dim wouldn't error — zip_with
+    * null-pads and the sign bits silently collapse to 0 — so this
+    * asserts the corpus is non-empty AND rectangular (min dim == max
+    * dim) before any hyperplane is built. Reads the memoized profile
+    * Dedup keeps per corpus plan (one aggregate per corpus).
     */
-  private[operators] def probeDim(corpus: DataFrame): Int = {
-    val row = corpus.agg(
-      min(size(col("embedding"))), max(size(col("embedding")))).head()
-    require(!row.isNullAt(0), "probeDim: empty embedding corpus")
-    val (lo, hi) = (row.getInt(0), row.getInt(1))
-    require(lo == hi, s"probeDim: ragged embedding arrays (dims $lo..$hi)")
-    lo
-  }
+  private[operators] def probeDim(corpus: DataFrame): Int =
+    Dedup.vecProfile(corpus, "probeDim")._1
 
   /** E2 — multi-table LSH approximate KNN: each of `tables` independent
     * hyperplane sets buckets every vector into 2^bits buckets; a
@@ -119,26 +185,11 @@ object Similarity {
   def lshKnn(corpus: DataFrame, queries: DataFrame, k: Int,
       bits: Int = 3, tables: Int = 4): DataFrame = {
     val dim = probeDim(corpus)
-    def withBuckets(df: DataFrame): DataFrame = {
-      val buckets = (0 until tables).map(t =>
-        struct(lit(t).as("tbl"), hyperplaneSig("embedding", t, bits, dim).as("bkt")))
-      df.select(col("vec_id"), col("embedding"), explode(array(buckets: _*)).as("tb"))
-        .select(col("vec_id"), col("embedding"),
-          col("tb.tbl").as("tbl"), col("tb.bkt").as("bkt"))
-    }
-    val cb = withBuckets(corpus)
-    val qb = withBuckets(queries)
-    val scored = cb.as("c")
-      .join(broadcast(qb.as("q")),
+    // the same pair can surface from several tables
+    rerank(hyperplaneBuckets(corpus, bits, tables, dim).as("c")
+      .join(broadcast(hyperplaneBuckets(queries, bits, tables, dim).as("q")),
         col("q.tbl") === col("c.tbl") && col("q.bkt") === col("c.bkt") &&
-          col("q.vec_id") =!= col("c.vec_id"))
-      .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
-        (round(vec_cosine(col("q.embedding"), col("c.embedding")), 4) + lit(0.0)).as("cos_sim"))
-      .distinct() // same pair can surface from several tables
-    val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+          col("q.vec_id") =!= col("c.vec_id")), k, distinctPairs = true)
   }
 
   def qKnnLsh(s: SparkSession, d: String): DataFrame = {
@@ -211,50 +262,21 @@ object Similarity {
     * correctness check, where a trained k-means quantizer would force
     * a weaker rows-only check. Swapping in trained centroids changes
     * only the `centroids` frame, nothing downstream.
-    */
-  /** `maxSim` caps the ranked band: candidates with rounded cosine ≥
+    *
+    * `maxSim` caps the ranked band: candidates with rounded cosine ≥
     * maxSim are excluded BEFORE ranking (default 1.1 = no cap). This
-    * is the hard-negative-mining knob — see [[qHardNegatives]]. */
+    * is the hard-negative-mining knob — see [[qHardNegatives]].
+    * `quantizer` replaces the seed picks with a (cid, cvec) frame: E18
+    * passes the FULL corpus's seeds for a filtered corpus (an index is
+    * built once, filtered per query), r13 a trained codebook.
+    */
   def ivfKnn(corpus: DataFrame, queries: DataFrame, k: Int,
       cells: Int = 16, nprobe: Int = 4, maxSim: Double = 1.1,
-      centroidsFrom: Option[DataFrame] = None,
       quantizer: Option[DataFrame] = None): DataFrame = {
-    // E18 passes a FILTERED corpus with the quantizer still trained on
-    // the full one (an index is built once, filtered per query);
-    // r13 passes a TRAINED quantizer directly as a (cid, cvec) frame
-    val centroids = quantizer.getOrElse(centroidsFrom.getOrElse(corpus)
-      .filter(col("vec_id") < cells)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec")))
-    val scoredCells = (df: DataFrame) => df
-      .crossJoin(broadcast(centroids))
-      .withColumn("csim", vec_cosine(col("embedding"), col("cvec")))
-    // corpus argmax as an aggregation, not a window: the struct-max
-    // combines map-side, so the exchange carries ONE row per vector,
-    // not `cells` of them (ties impossible: cid is unique per group,
-    // and -cid in slot 2 makes a csim tie resolve to the lowest cid,
-    // matching the oracle's ORDER BY csim DESC, cid ASC)
-    val corpusCells = scoredCells(corpus)
-      .groupBy("vec_id")
-      .agg(max(struct(col("csim"), (-col("cid")).as("ncid"),
-        col("cid"), col("embedding"))).as("m"))
-      .select(col("vec_id"), col("m.embedding").as("embedding"), col("m.cid").as("cid"))
-    // the query side needs top-nprobe (not argmax); the query set is
-    // bounded, so a window over it is cheap at any scale
-    val wq = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cid").asc)
-    val queryCells = scoredCells(queries)
-      .withColumn("crn", row_number().over(wq))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id"), col("embedding"), col("cid"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    corpusCells.as("c")
-      .join(broadcast(queryCells.as("q")),
-        col("q.cid") === col("c.cid") && col("q.vec_id") =!= col("c.vec_id"))
-      .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
-        (round(vec_cosine(col("q.embedding"), col("c.embedding")), 4) + lit(0.0)).as("cos_sim"))
-      .filter(col("cos_sim") < maxSim)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    val centroids = quantizer.getOrElse(seedCentroids(corpus, cells))
+    // the embedding rides the argmax: the assignment is read once here
+    ivfProbe(assignCells(corpus, centroids, carry = Seq("embedding")), queries,
+      centroids, k, nprobe, Some(maxSim))
   }
 
   def qKnnIvf(s: SparkSession, d: String): DataFrame = {
@@ -372,7 +394,7 @@ object Similarity {
     val pre = bruteForceKnn(survivors, queries, 5)
       .withColumn("strategy", lit("pre"))
     val ivf = ivfKnn(survivors, queries, 5, nprobe = 8,
-        centroidsFrom = Some(e.select("vec_id", "embedding")))
+        quantizer = Some(seedCentroids(e, 16)))
       .withColumn("strategy", lit("ivf"))
     pre.unionByName(ivf)
   }
@@ -666,31 +688,12 @@ object Similarity {
     * everything upstream map-side.
     */
   def qKnnPq(s: SparkSession, d: String, nQueries: Int = 20, topK: Int = 5,
-      m: Int = 4, k: Int = 8): DataFrame = {
-    import graft.functions.vec_dot
-    val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-    val dsub = probeDim(e) / m
-    val codes = pqAssign(e, m, k, dsub).select("vec_id", "sp", "code")
-    val table = subvectors(e.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("embedding")),
-        "query_id", "embedding", "vs", m, dsub)
-      .join(broadcast(pqCentroids(e, m, k, dsub)), "sp")
-      .select(col("query_id"), col("sp"), col("j"),
-        round((vec_dot(col("vs"), col("vs"))
-          - lit(2.0) * vec_dot(col("vs"), col("cs"))
-          + vec_dot(col("cs"), col("cs"))) * 10000).cast("long").as("ti"))
-    val w = Window.partitionBy("query_id").orderBy(col("di").asc, col("neighbor_id").asc)
-    codes
-      .join(broadcast(table),
-        codes("sp") === table("sp") && codes("code") === table("j") &&
-          codes("vec_id") =!= table("query_id"))
-      .groupBy(col("query_id"), codes("vec_id").as("neighbor_id"))
-      .agg(sum("ti").as("di"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("di") / 10000.0, 4).as("approx_d2"), col("rank"))
-  }
+      m: Int = 4, k: Int = 8): DataFrame =
+    adcApprox(adcRanked(s, d, nQueries, topK, None, m, k))
+
+  private def adcApprox(ranked: DataFrame): DataFrame =
+    ranked.select(col("query_id"), col("neighbor_id"),
+      round(col("di") / 10000.0, 4).as("approx_d2"), col("rank"))
 
   val qKnnPqSql: String = {
     val (m, k, dim, nq, topK) = (4, 8, 64, 20, 5)
@@ -749,56 +752,46 @@ object Similarity {
     */
   def qKnnIvfPq(s: SparkSession, d: String, nQueries: Int = 20, topK: Int = 5,
       cells: Int = 16, nprobe: Int = 4, m: Int = 4, k: Int = 8): DataFrame =
-    ivfPqAdcRanked(s, d, nQueries, topK, cells, nprobe, m, k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("di") / 10000.0, 4).as("approx_d2"), col("rank"))
+    adcApprox(adcRanked(s, d, nQueries, topK, Some((cells, nprobe)), m, k))
 
-  /** The shared E12 core: ADC-ranked candidates per query, cut at
-    * `depth` — consumed at depth=topK by [[qKnnIvfPq]] (the pure ADC
-    * answer) and at depth=rerank by [[qKnnIvfPqRefine]] (the candidate
-    * pool an exact re-rank re-reads floats for). */
-  private def ivfPqAdcRanked(s: SparkSession, d: String, nQueries: Int,
-      depth: Int, cells: Int, nprobe: Int, m: Int, k: Int): DataFrame = {
+  /** The shared ADC core (E10, E12): PQ codes scored through per-query
+    * m×k integer distance tables (1e-4-quantized entries, so summed
+    * rankings are order-free exact across engines), ranked per query
+    * and cut at `depth`. `ivf = Some((cells, nprobe))` first routes each
+    * query to its probed cells' codes only — at scale the cell is the
+    * partition key, so probing is partition pruning. Consumed at
+    * depth=topK by [[qKnnPq]]/[[qKnnIvfPq]] and at depth=rerank by
+    * [[qKnnIvfPqRefine]] (the pool an exact re-rank re-reads floats
+    * for). */
+  private def adcRanked(s: SparkSession, d: String, nQueries: Int,
+      depth: Int, ivf: Option[(Int, Int)], m: Int, k: Int): DataFrame = {
     import graft.functions.vec_dot
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val dsub = probeDim(e) / m
-    val centroids = e.filter(col("vec_id") < cells)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val scored = e.crossJoin(broadcast(centroids))
-      .withColumn("csim", vec_cosine(col("embedding"), col("cvec")))
-    // corpus cell assignment: the E4 argmax-as-aggregation (exchange
-    // carries one row per vector, ties to the lowest cid)
-    val corpusCells = scored.groupBy("vec_id")
-      .agg(max(struct(col("csim"), (-col("cid")).as("ncid"), col("cid"))).as("mx"))
-      .select(col("vec_id"), col("mx.cid").as("cid"))
-    val wq = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cid").asc)
-    val queryCells = scored.filter(col("vec_id") < nQueries)
-      .withColumn("crn", row_number().over(wq))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("cid"))
-    // the index: codes keyed by their coarse cell — at scale this is
-    // the partitioned layout itself, built once
+    val queries = e.filter(col("vec_id") < nQueries)
     val codes = pqAssign(e, m, k, dsub).select("vec_id", "sp", "code")
-      .join(corpusCells, "vec_id")
-    // per-query m×k integer ADC table (the E10 contract: 1e-4-quantized
-    // entries so summed rankings are order-free exact across engines)
-    val table = subvectors(e.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("tq"), col("embedding")),
+    val table = subvectors(queries.select(col("vec_id").as("tq"), col("embedding")),
         "tq", "embedding", "vs", m, dsub)
       .join(broadcast(pqCentroids(e, m, k, dsub)), "sp")
       .select(col("tq"), col("sp").as("tsp"), col("j"),
         round((vec_dot(col("vs"), col("vs"))
           - lit(2.0) * vec_dot(col("vs"), col("cs"))
           + vec_dot(col("cs"), col("cs"))) * 10000).cast("long").as("ti"))
+    val lookup = col("sp") === col("tsp") && col("code") === col("j")
+    val scored = ivf match {
+      case None => codes.join(broadcast(table), lookup && col("vec_id") =!= col("tq"))
+      case Some((cells, nprobe)) =>
+        val centroids = seedCentroids(e, cells)
+        val probed = probeCells(queries, centroids, nprobe)
+          .select(col("vec_id").as("query_id"), col("cid"))
+        codes.join(assignCells(e, centroids), "vec_id")
+          .join(broadcast(probed), Seq("cid"))
+          .filter(col("vec_id") =!= col("query_id"))
+          .join(broadcast(table), col("query_id") === col("tq") && lookup)
+    }
     val w = Window.partitionBy("query_id")
       .orderBy(col("di").asc, col("neighbor_id").asc)
-    codes
-      .join(broadcast(queryCells), Seq("cid")) // the probe: scan ONLY probed cells
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(table),
-        col("query_id") === col("tq") && col("sp") === col("tsp") &&
-          col("code") === col("j"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+    scored.groupBy(col("tq").as("query_id"), col("vec_id").as("neighbor_id"))
       .agg(sum("ti").as("di"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= depth)
@@ -820,20 +813,13 @@ object Similarity {
       topK: Int = 5, cells: Int = 16, nprobe: Int = 4, m: Int = 4,
       k: Int = 8, rerank: Int = 50): DataFrame = {
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-    val cand = ivfPqAdcRanked(s, d, nQueries, rerank, cells, nprobe, m, k)
+    val pool = adcRanked(s, d, nQueries, rerank, Some((cells, nprobe)), m, k)
       .select("query_id", "neighbor_id")
-    val queries = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
     // corpus streams once; the candidate pool and the query vectors are
     // both broadcast (nQueries×R rows and nQueries rows)
-    e.join(broadcast(cand), col("vec_id") === col("neighbor_id"))
-      .join(broadcast(queries), "query_id")
-      .withColumn("cos_sim", round(vec_cosine(col("embedding"), col("qvec")), 4))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rank"))
+    this.rerank(e.as("c").join(broadcast(pool), col("c.vec_id") === col("neighbor_id"))
+      .join(broadcast(e.filter(col("vec_id") < nQueries).as("q")),
+        col("q.vec_id") === col("query_id")), topK)
   }
 
   /** DuckDB replay of [[qKnnIvfPqRefine]]: the E12 CTE chain cut at
@@ -991,92 +977,128 @@ object Similarity {
        |FROM r WHERE rn = 1""".stripMargin
   }
 
+  // ── Feed-driven index refresh (E13, D19) ───────────────────────────
+  // An index is a versioned table keyed like its corpus. Each commit of
+  // the index records the corpus version it covers as a `#txn=` mark
+  // (A51) under one app id, riding the same manifest CAS as the index
+  // rows: a crash can no longer land the rows without the watermark, so
+  // a retried refresh finds its window already applied and runs nothing.
+
+  /** The app id of the `#txn=` mark carrying an index's corpus version. */
+  private val IndexApp = "graft.index.corpus"
+
+  /** The (corpus version, index version) pair an index serves: the mark
+    * at the index head. An index built before the mark existed has
+    * none; its `_graft_log/corpus_version` marker ("corpusV" or
+    * "corpusV\tindexV") answers instead, and is read only here. No
+    * index yet: (−1, −1). */
+  private[operators] def indexedVersions(indexDir: String): (Int, Int) = {
+    import graft.sources.Snapshots
+    val head = Snapshots.currentVersion(indexDir)
+    if (head < 0) (-1, -1)
+    else Snapshots.txnVersionOf(indexDir, head, IndexApp) match {
+      case Some(c) => (c.toInt, head)
+      case None =>
+        val m = java.nio.file.Paths.get(indexDir, "_graft_log", "corpus_version")
+        new String(java.nio.file.Files.readAllBytes(m), "UTF-8").trim.split("\t") match {
+          case Array(c, i) => (c.toInt, i.toInt)
+          case Array(c) => (c.toInt, head)
+          case other => throw new IllegalStateException(
+            s"torn corpus_version marker at $indexDir: ${other.mkString("|")}")
+        }
+    }
+  }
+
+  /** The one refresh behind both indexes: bring the index at `indexDir`
+    * (rows keyed by `key`) up to the corpus head, making exactly one
+    * index commit per feed window, marked with the corpus version it
+    * covers. `derive` maps corpus rows to index rows, one per input row;
+    * a row whose derived columns are all null has no index row (a doc
+    * below one shingle window has no signature). First call = full
+    * build: `prepare` sees the corpus snapshot first (the IVF index pins
+    * its codebook there), and version 0 carries the mark. Later calls
+    * read the change feed since the marked version and apply it as ONE
+    * keyed merge — delete keys the feed deleted or whose derived row is
+    * missing, update the rest, insert new keys — so maintenance cost
+    * tracks change volume, never corpus size. A window already marked
+    * commits nothing and runs no Spark job. Returns the corpus version
+    * now indexed. */
+  private[operators] def refreshIndex(s: SparkSession, corpusDir: String,
+      indexDir: String, key: String, prepare: DataFrame => Unit = _ => ())(
+      derive: DataFrame => DataFrame): Int = {
+    import graft.sources.{MergeWhen, Snapshots}
+    import MergeWhen._
+    val to = Snapshots.currentVersion(corpusDir)
+    require(to >= 0, s"$corpusDir is not a versioned table")
+    val from = indexedVersions(indexDir)._1
+    val mark = (IndexApp, to.toLong)
+    def derived(rows: DataFrame) = rows.columns.filter(_ != key).toSeq
+    def absent(cols: Seq[org.apache.spark.sql.Column]) = cols.map(_.isNull).reduce(_ && _)
+    if (from < 0) {
+      val corpus = Snapshots.read(s, corpusDir, to)
+      prepare(corpus)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
+      val rows = derive(corpus)
+      rows.filter(!absent(derived(rows).map(col))).write.mode("overwrite").parquet(indexDir)
+      val files = Snapshots.listDir(java.nio.file.Paths.get(indexDir))
+        .map(_.toString).filter(_.endsWith(".parquet"))
+      val schema = s.read.parquet(files: _*).schema
+      Snapshots.commit(indexDir, files, Some(schema),
+        Snapshots.statsLines(s, files, schema), txn = Seq(mark))
+    } else if (from < to) {
+      val ch = Snapshots.changesWithPayload(s, corpusDir, from, to, key)
+        .localCheckpoint()
+      val rows = derive(ch.filter(col("change_type") =!= "delete").drop("change_type"))
+      val cols = derived(rows)
+      // deleted keys join the derived rows as all-null rows: one union,
+      // no join, and the merge's one source pass evaluates both
+      val gone = ch.filter(col("change_type") === "delete").select(col(key) +:
+        cols.map(c => lit(null).cast(rows.schema(c).dataType).as(c)): _*)
+      Snapshots.mergeVersionedClauses(s, indexDir, rows.unionByName(gone), key, Seq(
+        MatchedDelete(Some(absent(cols.map(src)))),
+        MatchedUpdate(None, cols.map(c => c -> src(c))),
+        NotMatchedInsert(Some(!absent(cols.map(src))), (key +: cols).map(c => c -> src(c)))),
+        txn = Some(mark))
+    }
+    to
+  }
+
   /** E13 — the IVF cell-assignment index MAINTAINED INCREMENTALLY over
     * a VERSIONED embedding corpus (A18 + A20 + E4 composed — the
     * ANN-index twin of D19's signature index, the loop a production
     * vector store runs as embeddings churn): assignments (vec_id →
-    * cell) live in their own versioned table; a refresh consumes the
-    * corpus's change feed since the last indexed version, re-assigning
-    * ONLY inserted/updated vectors (one changed-rows-sized broadcast
-    * argmax → keyed merge) and deleting removed keys — maintenance
-    * cost tracks CHANGE volume, never corpus size. The quantizer is
-    * PINNED at full build (centroids persisted beside the index, the
-    * train-once contract every real IVF index has): assignments of
-    * untouched vectors stay valid by construction, so incremental
-    * equals full recompute bit-for-bit. The indexed-version marker
-    * commits after the index (at-least-once + content-idempotent apply
-    * = exactly-once index state). At 100 TB: cell = partition key of
-    * the serving layout; a daily refresh is one changed-rows job.
+    * cell) live in their own versioned table, refreshed by
+    * [[refreshIndex]] — only inserted/updated vectors are re-assigned
+    * (one changed-rows-sized broadcast argmax) and the feed window
+    * lands as one keyed merge. The quantizer is PINNED at full build
+    * (centroids persisted beside the index, the train-once contract
+    * every real IVF index has): assignments of untouched vectors stay
+    * valid by construction, so incremental equals full recompute
+    * bit-for-bit. `trained = true` (r13) trains the full build's
+    * quantizer with Lloyd's (E6) instead of the deterministic lowest-id
+    * picks and pins THOSE centroids; re-training is an explicit rebuild
+    * (drop the index dir), as in a production vector store. At 100 TB:
+    * cell = partition key of the serving layout; a daily refresh is one
+    * changed-rows job.
     */
   def refreshIvfIndex(s: SparkSession, corpusDir: String, indexDir: String,
-      cells: Int = 16): Int =
-    refreshIvfIndex(s, corpusDir, indexDir, cells, trained = false)
-
-  /** `trained = true` (r13): the FULL BUILD trains the quantizer with
-    * Lloyd's (E6) instead of the deterministic lowest-id picks and
-    * pins THOSE centroids beside the index — the same train-once
-    * artifact contract, so every later incremental refresh assigns
-    * against the frozen trained codebook and incremental still equals
-    * full recompute bit-for-bit. Re-training is an explicit rebuild
-    * (drop the index dir), exactly as in a production vector store. */
-  def refreshIvfIndex(s: SparkSession, corpusDir: String, indexDir: String,
-      cells: Int, trained: Boolean): Int = {
-    import graft.sources.Snapshots
-    import java.nio.file.{Files, Paths}
-    val to = Snapshots.currentVersion(corpusDir)
-    require(to >= 0, s"$corpusDir is not a versioned table")
-    val marker = Paths.get(indexDir, "_graft_log", "corpus_version")
+      cells: Int = 16, trained: Boolean = false): Int = {
     val centDir = indexDir + "_centroids"
-    // marker = "corpusV\tindexHeadV" (r15 advice fix: the pair lets a
-    // PROBE pin postings to the exact index version the marker names);
-    // legacy single-field markers parse as corpusV alone
-    val from =
-      if (Files.exists(marker))
-        new String(Files.readAllBytes(marker), "UTF-8").trim
-          .split("\t")(0).toInt
-      else -1
-    def assign(df: DataFrame): DataFrame = {
-      val centroids = Snapshots.readParquetDir(s, centDir)
-      df.crossJoin(broadcast(centroids))
-        .withColumn("csim", vec_cosine(col("embedding"), col("cvec")))
-        .groupBy("vec_id")
-        .agg(max(struct(col("csim"), (-col("cid")).as("ncid"), col("cid"))).as("m"))
-        .select(col("vec_id"), col("m.cid").as("cid"))
-    }
-    if (from < 0) {
-      val corpus = Snapshots.read(s, corpusDir, to).select("vec_id", "embedding")
+    refreshIndex(s, corpusDir, indexDir, "vec_id", prepare = { corpus =>
+      val e = corpus.select("vec_id", "embedding")
       val centroids =
         if (trained) {
           import s.implicits._
-          graft.operators.Clustering.lloydCentroids(corpus, cells, 5)
+          graft.operators.Clustering.lloydCentroids(e, cells, 5)
             .zipWithIndex
             .map { case (v, i) => (i.toLong, v.map(_.toFloat).toArray) }
             .toDF("cid", "cvec")
-        } else corpus.filter(col("vec_id") < cells)
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        } else seedCentroids(e, cells)
       centroids.write.mode("overwrite").parquet(centDir)
-      Files.createDirectories(Paths.get(indexDir))
-      assign(corpus).write.mode("overwrite").parquet(indexDir)
-      Snapshots.init(s, indexDir)
-    } else if (from < to) {
-      val ch = Snapshots.changesWithPayload(s, corpusDir, from, to, "vec_id")
-        .localCheckpoint()
-      val ups = ch.filter(col("change_type") =!= "delete")
-        .select("vec_id", "embedding")
-      if (!ups.isEmpty)
-        Snapshots.mergeVersioned(s, indexDir, assign(ups), "vec_id")
-      val dels = ch.filter(col("change_type") === "delete").select("vec_id")
-      if (!dels.isEmpty)
-        Snapshots.deleteVersionedKeys(s, indexDir, dels, "vec_id")
+    }) { rows =>
+      assignCells(rows.select("vec_id", "embedding"),
+        graft.sources.Snapshots.readParquetDir(s, centDir))
     }
-    if (from != to) {
-      val tmp = Files.createTempFile(Paths.get(indexDir, "_graft_log"), "cv", ".tmp")
-      Files.write(tmp,
-        s"$to\t${Snapshots.currentVersion(indexDir)}".getBytes("UTF-8"))
-      Files.move(tmp, marker, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    to
   }
 
   // ── r14 (the r13 verdict's item 6): the SQL-facing vector index ──
@@ -1102,8 +1124,9 @@ object Similarity {
   }
 
   /** CREATE: full-build the IVF index over `corpusDir` (contract
-    * schema `vec_id`, `embedding`) and record the corpus binding.
-    * Refuses an existing index — re-creation is an explicit drop. */
+    * schema `vec_id`, `embedding`) and record the corpus binding; the
+    * build's one commit carries the corpus version it indexed. Refuses
+    * an existing index — re-creation is an explicit drop. */
   def createVectorIndex(s: SparkSession, corpusDir: String,
       indexDir: String, cells: Int = 16, trained: Boolean = false): Int = {
     require(!java.nio.file.Files.exists(vectorMetaPath(indexDir)),
@@ -1115,7 +1138,8 @@ object Similarity {
   }
 
   /** REFRESH: feed-driven incremental refresh against the RECORDED
-    * corpus (cost ∝ change volume; the frozen codebook guarantees
+    * corpus — one marked index commit per feed window, none when the
+    * window is already applied (the frozen codebook guarantees
     * incremental ≡ full rebuild). Returns the corpus version served. */
   def refreshVectorIndex(s: SparkSession, indexDir: String): Int = {
     val (corpusDir, cells, trained) = vectorMeta(indexDir)
@@ -1123,59 +1147,23 @@ object Similarity {
   }
 
   /** PROBE: top-`k` neighbors for the corpus vectors named by `keys`,
-    * served FROM THE STORED INDEX — posting lists read as committed
-    * (never recomputed), queries assigned to their `nprobe` nearest
-    * cells against the PINNED codebook. Semantics identical to
-    * [[ivfKnn]] AT ITS DEFAULTS (same rounding, same tie-breaks; the
-    * library path's optional `maxSim` band cap has no serving-side
-    * mirror), so the serving path and the library path agree
-    * bit-for-bit on the default configuration.
-    *
-    * r15 (advice fix): the marker is ONE atomic file carrying the
-    * (corpus version, index version) PAIR a refresh committed
-    * together, and the probe pins BOTH reads to it — a concurrent
-    * REFRESH can no longer pair new posting lists with the previous
-    * corpus snapshot. A legacy single-field marker falls back to the
-    * index head (the pre-r15 behavior). */
+    * served FROM THE STORED INDEX — the IVF probe of [[ivfKnn]] over the
+    * committed posting lists (never recomputed) and the PINNED codebook,
+    * so at ivfKnn's defaults the serving path and the library path
+    * agree bit-for-bit (the library path's optional `maxSim` band has
+    * no serving-side mirror). Both reads pin to one (corpus, index)
+    * pair: the index head and the corpus version its own commit marks,
+    * so a concurrent REFRESH can never pair new posting lists with the
+    * previous corpus snapshot. */
   def probeVectorIndex(s: SparkSession, indexDir: String,
       keys: Seq[Long], k: Int, nprobe: Int = 4): DataFrame = {
+    import graft.sources.Snapshots
     val (corpusDir, _, _) = vectorMeta(indexDir)
-    val (served, idxV) = {
-      val m = java.nio.file.Paths.get(indexDir, "_graft_log", "corpus_version")
-      new String(java.nio.file.Files.readAllBytes(m), "UTF-8").trim
-        .split("\t") match {
-        case Array(c, i) => (c.toInt, i.toInt)
-        case Array(c) => (c.toInt, -1)
-        case other => throw new IllegalStateException(
-          s"torn corpus_version marker at $indexDir: ${other.mkString("|")}")
-      }
-    }
-    val corpus = graft.sources.Snapshots.read(s, corpusDir, served)
-      .select("vec_id", "embedding")
-    val postings = // vec_id, cid — pinned to the marker's index version
-      graft.sources.Snapshots.read(s, indexDir, idxV)
-    val centroids =
-      graft.sources.Snapshots.readParquetDir(s, indexDir + "_centroids")
-    val queries = corpus.filter(col("vec_id").isin(keys: _*))
-    val wq = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("cid").asc)
-    val queryCells = queries.crossJoin(broadcast(centroids))
-      .withColumn("csim", vec_cosine(col("embedding"), col("cvec")))
-      .withColumn("crn", row_number().over(wq))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id"), col("embedding"), col("cid"))
-    val members = postings.join(corpus, "vec_id")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    members.as("c")
-      .join(broadcast(queryCells.as("q")),
-        col("q.cid") === col("c.cid") && col("q.vec_id") =!= col("c.vec_id"))
-      .select(col("q.vec_id").as("query_id"),
-        col("c.vec_id").as("neighbor_id"),
-        (round(vec_cosine(col("q.embedding"), col("c.embedding")), 4)
-          + lit(0.0)).as("cos_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    val (served, idxV) = indexedVersions(indexDir)
+    val corpus = Snapshots.read(s, corpusDir, served).select("vec_id", "embedding")
+    ivfProbe(Snapshots.read(s, indexDir, idxV).join(corpus, "vec_id"),
+      corpus.filter(col("vec_id").isin(keys: _*)),
+      Snapshots.readParquetDir(s, indexDir + "_centroids"), k, nprobe, None)
   }
 
   /** Driver query for E13: stage the embeddings as a versioned corpus,

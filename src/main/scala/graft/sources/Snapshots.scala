@@ -654,7 +654,7 @@ object Snapshots {
     * commit. `schema` is the files' own schema (the caller just wrote
     * them, or inferred it once for files it did not write): reading
     * under it spares the footer-inference job. */
-  private[sources] def statsLines(spark: SparkSession, files: Seq[String],
+  private[graft] def statsLines(spark: SparkSession, files: Seq[String],
       schema: org.apache.spark.sql.types.StructType): Seq[String] = {
     if (files.isEmpty) return Seq.empty
     val df = spark.read.schema(schema).parquet(files: _*)

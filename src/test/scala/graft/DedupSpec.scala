@@ -83,9 +83,9 @@ class DedupSpec extends GraftSuite {
     Snapshots.deleteVersioned(spark, corpus, col("doc_id") % 50 === 0) // v2
 
     assert(Dedup.refreshSignatureIndex(spark, corpus, index) == 2)
-    // incremental: exactly TWO index commits (the keyed merge of the
-    // changed docs and the keyed delete), not a rebuild
-    assert(Snapshots.currentVersion(index) == idxV0 + 2)
+    // incremental: exactly ONE index commit (one keyed merge applies the
+    // changed docs and the deletes), not a rebuild
+    assert(Snapshots.currentVersion(index) == idxV0 + 1)
 
     // the refreshed index is BIT-IDENTICAL to a full recompute of the
     // corpus head (500 % 50 == 0: one fresh insert died immediately)

@@ -31,9 +31,9 @@ class PrefixJaccardSpec extends GraftSuite {
     val docs = boilerplateCorpus(60)
     val sh = Dedup.shingles(docs)
     for (tau <- Seq(0.3, 0.5, 0.8)) {
-      val direct = Dedup.directJaccard(sh, tau).collect()
+      val direct = Dedup.directJoin(sh, Dedup.Jaccard(tau)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-      val prefix = Dedup.prefixJaccard(sh, tau).collect()
+      val prefix = Dedup.prefixJoin(sh, Dedup.Jaccard(tau)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
       assert(direct.nonEmpty, s"tau=$tau: expected near-dup pairs in the corpus")
       assert(direct === prefix, s"tau=$tau: regimes disagree")
@@ -44,7 +44,7 @@ class PrefixJaccardSpec extends GraftSuite {
     // boilerplate corpus: the preamble shingles appear in all 60 docs
     val heavy = boilerplateCorpus(60)
     val pairsHeavy = Dedup.jaccardPairs(heavy, tau = 0.5, directMaxPosting = 30L)
-    val viaPrefix = Dedup.prefixJaccard(Dedup.shingles(heavy), 0.5)
+    val viaPrefix = Dedup.prefixJoin(Dedup.shingles(heavy), Dedup.Jaccard(0.5))
     assert(pairsHeavy.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       === viaPrefix.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
     // warehouse corpus: postings are bounded -> direct path (same
@@ -67,9 +67,9 @@ class PrefixJaccardSpec extends GraftSuite {
       (1L, common + " " + (1 to 10001).map(k => s"b$k").mkString(" "))
     ).toDF("doc_id", "text")
     val sh = Dedup.shingles(docs)
-    val direct = Dedup.directJaccard(sh, 0.5).collect()
+    val direct = Dedup.directJoin(sh, Dedup.Jaccard(0.5)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    val prefix = Dedup.prefixJaccard(sh, 0.5).collect()
+    val prefix = Dedup.prefixJoin(sh, Dedup.Jaccard(0.5)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     assert(direct === Seq((0L, 1L, 0.5)), s"construction drifted: $direct")
     assert(prefix === direct, "prefix regime pruned the rounding-boundary pair")
@@ -79,10 +79,10 @@ class PrefixJaccardSpec extends GraftSuite {
     val docs = boilerplateCorpus(60)
     val sh = Dedup.shingles(docs)
     for (tau <- Seq(0.5, 0.8)) {
-      val direct = Dedup.directContainment(sh, tau).collect()
+      val direct = Dedup.directJoin(sh, Dedup.Containment(tau)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
         .sorted.toSeq
-      val prefix = Dedup.prefixContainment(sh, tau).collect()
+      val prefix = Dedup.prefixJoin(sh, Dedup.Containment(tau)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
         .sorted.toSeq
       assert(direct.nonEmpty, s"tau=$tau: expected containment pairs in the corpus")
@@ -93,9 +93,9 @@ class PrefixJaccardSpec extends GraftSuite {
   test("positional filter bound is lossless on the warehouse corpus") {
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val sh = Dedup.shingles(docs)
-    val direct = Dedup.directJaccard(sh, 0.5).collect()
+    val direct = Dedup.directJoin(sh, Dedup.Jaccard(0.5)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val prefix = Dedup.prefixJaccard(sh, 0.5).collect()
+    val prefix = Dedup.prefixJoin(sh, Dedup.Jaccard(0.5)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(direct === prefix,
       s"missed: ${(direct -- prefix).take(5)} spurious: ${(prefix -- direct).take(5)}")
