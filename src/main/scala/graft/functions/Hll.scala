@@ -29,7 +29,7 @@ object Hll {
   val P: Int = 7
   val M: Int = 1 << P
 
-  private[functions] def updateRegs(b: Array[Byte], x: Long): Unit = {
+  private[graft] def updateRegs(b: Array[Byte], x: Long): Unit = {
     val j = (x >>> (64 - P)).toInt
     val w = x << P
     val rank =
@@ -38,8 +38,9 @@ object Hll {
   }
 
   /** Spark Aggregator form (test surface): feed `xxhash64(col)` (NULL
-    * for NULL inputs), get the 128-byte register array. The engine's
-    * stats pass uses [[HllSketchAgg]] instead — a
+    * for NULL inputs), get the 128-byte register array. The stats
+    * aggregate over files graft did not write uses [[HllSketchAgg]]
+    * instead (a staging write updates the registers as it writes) — a
     * TypedImperativeAggregate whose buffer stays an OBJECT between
     * updates (the udaf() wrapper round-trips the 128-byte buffer
     * through its encoder on every row, which measurably taxed every

@@ -1037,14 +1037,9 @@ object Similarity {
     if (from < 0) {
       val corpus = Snapshots.read(s, corpusDir, to)
       prepare(corpus)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
       val rows = derive(corpus)
-      rows.filter(!absent(derived(rows).map(col))).write.mode("overwrite").parquet(indexDir)
-      val files = Snapshots.listDir(java.nio.file.Paths.get(indexDir))
-        .map(_.toString).filter(_.endsWith(".parquet"))
-      val schema = s.read.parquet(files: _*).schema
-      Snapshots.commit(indexDir, files, Some(schema),
-        Snapshots.statsLines(s, files, schema), txn = Seq(mark))
+      Snapshots.initWritten(s, indexDir, rows.filter(!absent(derived(rows).map(col))),
+        Seq(mark))
     } else if (from < to) {
       val ch = Snapshots.changesWithPayload(s, corpusDir, from, to, key)
         .localCheckpoint()

@@ -708,25 +708,10 @@ object MaterializedView {
         s"group=${groupCols.mkString(",")}\nsum=${sumCols.mkString(",")}\n" +
         s"minmax=${minMaxCols.mkString(",")}\n")
     // bootstrap v0 WITH both marks (the same reason the A51 idempotent
-    // append bootstraps with its mark: batch 0 must not be replayable)
-    def listParquet(): Seq[String] = {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(Paths.get(mvRoot))
-      try s.iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toIndexedSeq
-      finally s.close()
-    }
-    // a crashed earlier attempt (write succeeded, commit didn't — the
-    // v0 guard above passed) left part files that would double every
-    // row if listed into this commit: clear them first
-    listParquet().foreach(f => Files.deleteIfExists(Paths.get(f)))
-    full.write.mode("append").parquet(mvRoot)
-    val parquets = scala.collection.mutable.ListBuffer.empty[String]
-    parquets ++= listParquet()
-    val schema = spark.read.parquet(parquets.toSeq: _*).schema
-    val v = Snapshots.commit(mvRoot, parquets.toSeq, Some(schema),
-      Snapshots.statsLines(spark, parquets.toSeq, schema),
-      txn = Seq(appL(left) -> vL.toLong, appR(right) -> vR.toLong))
+    // append bootstraps with its mark: batch 0 must not be replayable);
+    // a crashed earlier attempt's part files are cleared first
+    val v = Snapshots.initWritten(spark, mvRoot, full,
+      Seq(appL(left) -> vL.toLong, appR(right) -> vR.toLong))
     Refs.moveTag(left, leaseName(mvRoot), vL)
     Refs.moveTag(right, leaseName(mvRoot), vR)
     v

@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -340,7 +340,7 @@ object Snapshots {
 
   /** `df` as it is staged to disk under `outSchema` (physical names when
     * a mapping is in force); its `.schema` is the staged files' schema,
-    * which [[statsLines]] reads them under. */
+    * which their stats are keyed under. */
   private def stagedFrame(df: DataFrame,
       outSchema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
     outSchema.fold(df)(stagedAsPhysical(df, _))
@@ -352,8 +352,8 @@ object Snapshots {
 
   // A27 — per-FILE column statistics IN THE MANIFEST (the Delta
   // per-file stats pattern): every commit records min/max of each
-  // numeric top-level column for the files it STAGES (one bounded scan
-  // of the staged files — cost ∝ commit, never table) and carries
+  // numeric top-level column for the files it STAGES (taken inside the
+  // write that makes them — cost ∝ commit, never table) and carries
   // retained files' stats forward verbatim. Consumers (merge/keyed-
   // delete file discovery, readPrunedRange) then prune from the
   // MANIFEST ALONE — before r7 every merge scanned the whole live set
@@ -375,27 +375,6 @@ object Snapshots {
       .map { case (f, rows) =>
         f -> rows.map(r => r._2 -> ((r._3, r._4, r._5))).toMap }
       .toMap
-
-  private def statsTypeTag(dt: org.apache.spark.sql.types.DataType): Option[String] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType => Some("L")
-      case FloatType | DoubleType                        => Some("D")
-      // r12: the types a real lake predicate actually filters on —
-      // timestamps (micros), dates (days), decimals (plain string,
-      // exact), strings (truncated prefixes, the Delta convention).
-      // Widening (A59) never crosses tags, so per-file tags stay
-      // uniform per column across mixed-era files. NTZ timestamps
-      // (what pandas/arrow-written parquet reads back as) share the
-      // 'T' micros tag — both internal forms are micros longs, and a
-      // predicate literal always carries the column's own flavor.
-      case TimestampType | TimestampNTZType              => Some("T")
-      case DateType                                      => Some("A")
-      case _: DecimalType                                => Some("C")
-      case StringType                                    => Some("S")
-      case _                                             => None
-    }
-  }
 
   // ── r12: STRING stat bounds — truncated-prefix encoding ────────────
   // A string min/max is stored as base64 of at most [[StringStatMaxBytes]]
@@ -444,15 +423,15 @@ object Snapshots {
     else Some((java.util.Base64.getDecoder.decode(enc), true))
 
   // A33 — per-file ROW COUNTS in the manifest (Delta's numRecords):
-  // recorded by the same one-scan-per-commit aggregate as the column
-  // stats, carried forward with them, so `count(*)` of any retained
+  // recorded with the column stats as each file is written, carried
+  // forward with them, so `count(*)` of any retained
   // version is a manifest sum — zero data files opened on a 100 TB
   // table. DV dead positions subtract via a DV-files-only count.
   private val RowsHeader = "#filerows="
 
   // A42 — per-file NULL COUNTS (the third leg of Delta's
   // min/max/nullCount stats triple), for every atomic top-level
-  // column, from the same one-scan commit aggregate: `IS NULL` prunes
+  // column, recorded with them: `IS NULL` prunes
   // files with zero nulls in the column, `IS NOT NULL` prunes files
   // that are entirely null there — the skipping min/max cannot
   // express. Absence of a line = unknown = keep (legacy manifests
@@ -644,44 +623,25 @@ object Snapshots {
     Some((av, m))
   }
 
-  /** ONE scan of `files` (the staged commit, never the table): per-file
-    * row count plus min/max of every numeric top-level column — and
-    * (r15, the r14 verdict's item 5) of every STRUCT LEAF, keyed by
-    * its dotted path (`meta.width`), so a predicate on typed metadata
-    * (the G1 multimodal shape, a 100 TB media table's main filter)
-    * prunes files exactly like a top-level column — as manifest
-    * lines. The collect is |files| × columns — bounded by the
-    * commit. `schema` is the files' own schema (the caller just wrote
-    * them, or inferred it once for files it did not write): reading
+  /** ONE scan of `files` for their manifest stat lines: per-file row
+    * count, min/max of every ranged column — and (r15) of every STRUCT
+    * LEAF, keyed by its dotted path (`meta.width`), so a predicate on
+    * typed metadata prunes files exactly like a top-level column —
+    * null counts and NDV registers. Files graft writes get the same
+    * lines from their own write ([[stageFiles]]); this aggregate serves
+    * only files graft did not write (an [[init]] over user parquet) and
+    * is the reference the tracked write is checked against. The collect
+    * is |files| × columns. `schema` is the files' own schema: reading
     * under it spares the footer-inference job. */
   private[graft] def statsLines(spark: SparkSession, files: Seq[String],
       schema: org.apache.spark.sql.types.StructType): Seq[String] = {
     if (files.isEmpty) return Seq.empty
     val df = spark.read.schema(schema).parquet(files: _*)
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    // every stats-bearing column: (dotted path, accessor, dataType) —
-    // top-level atomics plus struct leaves (arrays/maps carry no range)
-    def leaves(prefix: String, acc: org.apache.spark.sql.Column,
-        dt: org.apache.spark.sql.types.DataType)
-        : Seq[(String, org.apache.spark.sql.Column,
-            org.apache.spark.sql.types.DataType)] = dt match {
-      case st: StructType => st.fields.toIndexedSeq.flatMap(f =>
-        leaves(s"$prefix.${f.name}", acc.getField(f.name), f.dataType))
-      case _: ArrayType | _: MapType => Seq.empty
-      case other => Seq((prefix, acc, other))
-    }
-    val nestedOn = spark.conf
-      .get("spark.graft.stats.nestedLeaves.enabled", "true") == "true"
+    // every stats-bearing column: (dotted path, accessor, dataType)
     val allCols: Seq[(String, org.apache.spark.sql.Column,
         org.apache.spark.sql.types.DataType)] =
-      df.schema.fields.toIndexedSeq.flatMap { f =>
-        f.dataType match {
-          case st: StructType =>
-            if (nestedOn) leaves(f.name, col(s"`${f.name}`"), st)
-            else Seq.empty
-          case _: ArrayType | _: MapType => Seq.empty
-          case other => Seq((f.name, col(s"`${f.name}`"), other))
-        }
+      FileStats.leaves(spark, df.schema).map { case (c, path, dt) =>
+        (c, path.tail.foldLeft(col(s"`${path.head._1}`"))((a, f) => a.getField(f._1)), dt)
       }
     // FloatType stats are aggregated AS DOUBLE: Float.toString("0.7")
     // re-parsed with toDouble gives 0.7d > (0.7f widened) =
@@ -691,7 +651,7 @@ object Snapshots {
     // Double.toString round-trips, so the double-recorded range is the
     // exact widened range the probe side compares against.
     val numCols = allCols
-      .flatMap { case (c, acc, dt) => statsTypeTag(dt).map(t => (c, acc, dt, t,
+      .flatMap { case (c, acc, dt) => FileStats.typeTag(dt).map(t => (c, acc, dt, t,
         dt == org.apache.spark.sql.types.FloatType)) }
     // r12: per-tag aggregate input — timestamps range as exact micros,
     // dates as days (both monotonic, so min/max commute with the
@@ -709,14 +669,6 @@ object Snapshots {
       case "A" => unix_date(acc)
       case _   => acc
     }
-    def renderStat(tag: String, v: Any, isMax: Boolean): String = (tag, v) match {
-      case ("C", d: java.math.BigDecimal) => d.toPlainString
-      case ("S", s: String) => encodeStringStat(s, isMax)
-      case ("T", ldt: java.time.LocalDateTime) => // NTZ wall-clock micros
-        (ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-          ldt.getNano / 1000L).toString
-      case _   => v.toString
-    }
     // A42: null counts cover every ATOMIC column (strings included) and
     // struct leaf, not just the numeric ones the range stats track. A
     // leaf's null count includes rows whose PARENT struct is null —
@@ -733,13 +685,8 @@ object Snapshots {
         graft.functions.HllSketchAgg(
           org.apache.spark.sql.GraftSqlBridge.toExpression(c))
           .toAggregateExpression())
-    // production knob: a pure-append firehose table that will never be
-    // CBO-joined can shed the sketch cost; everything degrades to the
-    // A46 ANALYZE path exactly as for legacy manifests
     val hllCols: Seq[(String, org.apache.spark.sql.Column)] =
-      if (spark.conf.get("spark.graft.stats.ndvSketch.enabled",
-          "true") != "true") Seq.empty
-      else atomicCols
+      if (FileStats.ndvOn(spark)) atomicCols else Seq.empty
     val aggs = count(lit(1)).as("__nr") +:
       (numCols.toIndexedSeq.zipWithIndex.flatMap {
         case ((_, acc, dt, t, isFloat), i) =>
@@ -784,6 +731,37 @@ object Snapshots {
     val seen = collected.map(r => canonical(r.getString(0))).toSet
     lines ++ files.map(canonical).filterNot(seen).map(f =>
       RowsHeader + Seq(f, "0").mkString(StatsSep))
+  }
+
+  /** A min/max aggregate value as its manifest string: decimals plain,
+    * strings by [[encodeStringStat]], NTZ timestamps as wall-clock
+    * micros, everything else by `toString`. */
+  private[sources] def renderStat(tag: String, v: Any, isMax: Boolean): String = (tag, v) match {
+    case ("C", d: java.math.BigDecimal) => d.toPlainString
+    case ("S", s: String) => encodeStringStat(s, isMax)
+    case ("T", ldt: java.time.LocalDateTime) => // NTZ wall-clock micros
+      (ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
+        ldt.getNano / 1000L).toString
+    case _   => v.toString
+  }
+
+  /** The manifest stat lines of file `f` from what its write recorded
+    * under `spec` — line for line what [[statsLines]] gives the file. A
+    * 0-row file has its row count only. */
+  private[sources] def writtenLines(f: String, spec: StatSpec,
+      w: WrittenFile): Seq[String] = {
+    val rowsLine = RowsHeader + Seq(f, w.rows.toString).mkString(StatsSep)
+    if (w.rows == 0L) return Seq(rowsLine)
+    val cols = spec.cols.zipWithIndex
+    rowsLine +: (cols.flatMap { case (c, i) =>
+      Option(w.ranges(i)).map { case (mn, mx) =>
+        StatsHeader + Seq(f, c.name, c.tag.get, mn, mx).mkString(StatsSep) }
+    } ++ cols.map { case (c, i) =>
+      NullsHeader + Seq(f, c.name, w.nulls(i).toString).mkString(StatsSep)
+    } ++ (if (w.hll == null) Nil else cols.map { case (c, i) =>
+      HllHeader + Seq(f, c.name, graft.functions.Hll.P.toString,
+        graft.functions.Hll.toHex(w.hll(i))).mkString(StatsSep)
+    }))
   }
 
   /** Per-file stat lines (column ranges AND row counts) of `retained`
@@ -1193,8 +1171,9 @@ object Snapshots {
 
   /** Stage `df`'s rows as `v{vNext}_…` data files under `path` and
     * return their paths and stat lines — the one data-staging body every
-    * write path shares. When `bucket` is set, rows are hash-routed into exactly
-    * `n` writer partitions with Spark's bucket-id expression
+    * write path shares. The stat lines come from the write itself
+    * ([[stageFiles]]): no job re-reads the staged files. When `bucket`
+    * is set, rows are hash-routed into exactly `n` writer partitions with Spark's bucket-id expression
     * (`repartition(n, col)` plans HashPartitioning, whose
     * partitionIdExpression is the same pmod(murmur3(col), n) the
     * bucketed READ assumes), sorted within buckets, and each staged
@@ -1210,8 +1189,7 @@ object Snapshots {
         df.repartition(n, col(s"`$c`")).sortWithinPartitions(col(s"`$c`"))
       case None => df
     }
-    val prepared = stagedFrame(routed, outSchema)
-    val staged = stageFiles(prepared, path) { base =>
+    stageWithStats(spark, stagedFrame(routed, outSchema), path) { base =>
       val tagged = bucket match {
         case Some(_) =>
           val tag = org.apache.spark.sql.GraftSqlBridge
@@ -1222,7 +1200,43 @@ object Snapshots {
       }
       s"v${vNext}_$namePart$tagged"
     }
-    (staged, statsLines(spark, staged, prepared.schema))
+  }
+
+  /** Stage `df` as data files under `dst` ([[stageFiles]]); returns
+    * their paths and the stat lines their own write recorded. */
+  private def stageWithStats(spark: SparkSession, df: DataFrame, dst: String)(
+      name: String => String): (Seq[String], Seq[String]) = {
+    val spec = StatSpec.data(spark, df.schema)
+    val staged = stageFiles(df, dst, spec)(name)
+    (staged.map(_._1), staged.flatMap { case (f, w) => writtenLines(canonical(f), spec, w) })
+  }
+
+  /** Version 0 from `df` where `path` holds no table yet: `df` staged
+    * as `v0_{namePart}…` files with the stats of their own write, and
+    * parquet already in `path` adopted as [[init]] adopts it (only
+    * adopted files pay the stats scan), committed with `marks`. */
+  private def bootstrap(spark: SparkSession, path: String, df: DataFrame,
+      namePart: String, marks: Seq[(String, Long)]): Int = {
+    Files.createDirectories(Paths.get(path))
+    val adopted = listDir(Paths.get(path)).map(_.toString).filter(_.endsWith(".parquet"))
+    val (staged, stagedStats) = stageWithStats(spark, df, path)(n => s"v0_$namePart$n")
+    val schema =
+      if (adopted.isEmpty) org.apache.spark.sql.GraftSqlBridge.asNullable(df.schema)
+      else spark.read.parquet(adopted ++ staged: _*).schema
+    commit(path, adopted ++ staged, Some(schema),
+      statsLines(spark, adopted, schema) ++ stagedStats, txn = marks)
+  }
+
+  /** Version 0 of a table graft fills itself ([[bootstrap]]) — parquet
+    * a crashed earlier attempt left in `path` (written, never
+    * committed) is cleared, not adopted. */
+  private[graft] def initWritten(spark: SparkSession, path: String, df: DataFrame,
+      marks: Seq[(String, Long)]): Int = {
+    require(currentVersion(path) < 0, s"$path already versioned")
+    if (Files.isDirectory(Paths.get(path)))
+      listDir(Paths.get(path)).filter(_.getFileName.toString.endsWith(".parquet"))
+        .foreach(Files.deleteIfExists(_))
+    bootstrap(spark, path, df, "", marks)
   }
 
   /** A50 — create a BUCKETED versioned table: the bootstrap routes
@@ -1330,7 +1344,7 @@ object Snapshots {
       }
       .toDF("file", "bits")
       .select(col("file"), lit(column).as("col"), col("bits"))
-    stageFiles(sidecar, path)(n => s"v${vNext}_bloom_$n")
+    stageFiles(sidecar, path, StatSpec.RowsOnly)(n => s"v${vNext}_bloom_$n").map(_._1)
   }
 
   /** Sidecar refs for `staged` when the table's bloom property is on —
@@ -1538,12 +1552,16 @@ object Snapshots {
 
   /** Manifest-only per-file [min, max] of logical `column` at `v`, as
     * (file, minStr, maxStr, typeTag) — None unless EVERY live file has
-    * the stat (partial coverage must not silently unprune). */
+    * the stat (partial coverage must not silently unprune). A file
+    * recorded with 0 rows holds no key: it has no range and needs none
+    * (Spark always writes partition 0's file, so a commit can stage
+    * one). */
   private def manifestRanges(path: String, v: Int, live: Seq[String],
       column: String): Option[Seq[(String, String, String, String)]] = {
     val phys = physicalOf(path, v, column)
     val stats = fileStats(path, v)
-    val rows = live.map(canonical).map { f =>
+    val empty = fileRows(path, v).collect { case (f, 0L) => f }.toSet
+    val rows = live.map(canonical).filterNot(empty).map { f =>
       stats.get(f).flatMap(_.get(phys)).map { case (t, mn, mx) => (f, mn, mx, t) }
     }
     if (rows.forall(_.isDefined)) Some(rows.flatten) else None
@@ -1593,20 +1611,23 @@ object Snapshots {
     col("kmin").isNull || col("kmax").isNull ||
       (k >= col("kmin") && k <= col("kmax"))
 
-  // ── r16: ONE action per merge batch answers the duplicate-key
-  // refusal, the batch row count AND candidate-file discovery ─────────
+  // ── r16: ONE action per merge or key-delete batch answers the
+  // duplicate-key refusal, the batch row count AND candidate-file
+  // discovery ───────────────────────────────────────────────────────
   // The r15 merge paths spent two actions here per commit (a
   // groupBy-count dup probe + a stats semi-join collect); at bench
   // scale each action is ~60–200 ms of fixed driver latency, and at
-  // 100 TB each is a full scheduling round-trip. The summary collects
-  // the distinct LEADING key values — the same driver-memory bound the
-  // broadcast semi-join it replaces already imposed (Spark builds
-  // broadcast relations on the driver) — and file discovery becomes a
-  // driver-side walk of the manifest ranges it already had in hand.
+  // 100 TB each is a full scheduling round-trip. The summary brings
+  // the distinct LEADING key values to the driver, and file discovery
+  // becomes a driver-side walk of the manifest ranges it already had
+  // in hand. The driver holds at most the key budget (the compare
+  // budget over the live file count): past it the keys stay on the
+  // executors (`overBudget`) and discovery takes the distributed join.
 
   private[graft] case class BatchKeySummary(
       nRows: Long, hasDupTuples: Boolean,
-      leadKeys: Array[Any], leadJudgeable: Boolean)
+      leadKeys: Array[Any], leadJudgeable: Boolean,
+      overBudget: Boolean = false)
 
   /** The leading key projected to its INTERNAL stats form (micros/days
     * for T/A — the form [[GraftFileIndex.bounds]] compares), plus
@@ -1627,33 +1648,58 @@ object Snapshots {
     }
   }
 
-  /** One aggregate over the batch: per full key TUPLE counts (max > 1
-    * ⟺ duplicate tuples), re-grouped by the leading key's internal
-    * form. Single-key tables take one groupBy (the internal projection
-    * is injective, so per-group counts ARE the tuple counts). */
+  /** One job over the batch: each partition counts its key TUPLES in
+    * place (float keys normalized as a grouping normalizes them), and
+    * the driver merges the per-partition counts as they arrive — max
+    * count > 1 ⟺ duplicate tuples — so no shuffle stage runs. At most
+    * `maxKeys + 1` tuples are held per partition or in the merge: past
+    * `maxKeys` the counts are dropped, an aggregate answers the
+    * duplicate verdict, and the summary is
+    * [[BatchKeySummary.overBudget]]. Lead keys are the tuples' leading
+    * key in its internal stats form. */
   private def batchKeySummary(ups: DataFrame, keyCols: Seq[String],
-      keyType: org.apache.spark.sql.types.DataType): BatchKeySummary = {
-    val leadKey = keyCols.head
-    val (leadInternal, judgeable) = leadInternalOf(leadKey, keyType)
-    if (keyCols.size == 1) {
-      val g = if (judgeable) leadInternal else col(s"`$leadKey`")
-      val rows = ups.groupBy(g.as("__k"))
-        .agg(count(lit(1)).as("__n")).collect()
-      BatchKeySummary(
-        rows.iterator.map(_.getLong(1)).sum,
-        rows.exists(_.getLong(1) > 1L),
-        if (judgeable) rows.map(_.get(0)) else Array.empty,
-        judgeable)
+      keyType: org.apache.spark.sql.types.DataType, maxKeys: Long): BatchKeySummary = {
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+    val (leadInternal, judgeable) = leadInternalOf(keyCols.head, keyType)
+    val keys = ups.select(leadInternal.as("__k") +: keyCols.map(c => col(s"`$c`")): _*)
+    val attrs = keys.queryExecution.analyzed.output
+    val normalized = attrs.map(org.apache.spark.sql.GraftSqlBridge.normalizeFloats)
+    val cap = math.min(maxKeys, Int.MaxValue - 1L).toInt
+    val counts = new java.util.HashMap[UnsafeRow, java.lang.Long]
+    var nRows = 0L
+    var over = false
+    ups.sparkSession.sparkContext.runJob(keys.queryExecution.toRdd,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        val norm = UnsafeProjection.create(normalized, attrs)
+        val m = new java.util.HashMap[UnsafeRow, java.lang.Long]
+        var n = 0L
+        var full = false
+        it.foreach { r =>
+          n += 1
+          if (!full) {
+            m.merge(norm(r).copy(), 1L, (a, b) => a + b)
+            if (m.size > cap) { full = true; m.clear() }
+          }
+        }
+        (n, full, m.asScala.toArray.map { case (k, c) => (k, c.longValue) })
+      },
+      (_: Int, part: (Long, Boolean, Array[(UnsafeRow, Long)])) => counts.synchronized {
+        nRows += part._1
+        over ||= part._2
+        if (!over) part._3.foreach { case (k, c) => counts.merge(k, c, (a, b) => a + b) }
+        if (over || counts.size > cap) { over = true; counts.clear() }
+      })
+    if (over) {
+      val dup = ups.groupBy(keyCols.map(c => col(s"`$c`")): _*).count()
+        .filter(col("count") > 1L).limit(1).collect().nonEmpty
+      BatchKeySummary(nRows, dup, Array.empty, judgeable, overBudget = true)
     } else {
-      val rows = ups.groupBy(keyCols.map(c => col(s"`$c`")): _*)
-        .agg(count(lit(1)).as("__cnt"))
-        .groupBy(leadInternal.as("__k"))
-        .agg(max(col("__cnt")).as("__mx"), sum(col("__cnt")).as("__n"))
-        .collect()
-      BatchKeySummary(
-        rows.iterator.map(_.getLong(2)).sum,
-        rows.exists(_.getLong(1) > 1L),
-        if (judgeable) rows.map(_.get(0)) else Array.empty,
+      val toLead = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(attrs.head.dataType)
+      BatchKeySummary(nRows, counts.values.asScala.exists(_ > 1L),
+        if (judgeable) counts.keySet.asScala.iterator
+          .map(k => toLead(k.get(0, attrs.head.dataType))).toArray.distinct
+        else Array.empty,
         judgeable)
     }
   }
@@ -1725,8 +1771,8 @@ object Snapshots {
       maxCompares: Long): Option[IndexedSeq[String]] = {
     if (!summary.leadJudgeable)
       return Some(ranges.map(r => canonical(r._1)).toIndexedSeq)
-    if (ranges.length.toLong * math.max(summary.leadKeys.length, 1) >
-        maxCompares) return None
+    if (summary.overBudget || ranges.length.toLong *
+        math.max(summary.leadKeys.length, 1) > maxCompares) return None
     val tags = judgeableTags(keyType)
     Some(ranges.iterator.collect {
       case (f, mn, mx, t)
@@ -1746,16 +1792,26 @@ object Snapshots {
     spark.conf.get("spark.graft.merge.plannerTouched.maxCompares",
       "8000000").toLong
 
+  /** The most lead keys a batch key summary collects for a walk over
+    * `live`'s ranges: the compare budget per live file. */
+  private def keyBudget(spark: SparkSession, live: Seq[String]): Long =
+    plannerTouchedMaxCompares(spark) / math.max(live.size, 1)
+
   /** Counts observed on a materializing action (r16: CollectMetrics
     * accumulators ride the merge checkpoint job via `observe()`, so
     * the emptiness/cardinality probes stop being a job of their own).
-    * The listener publishing them is ASYNC: poll briefly after the
+    * The listener publishing them is ASYNC: poll (up to 10 s) after the
     * action, then fall back to `recompute` — one plain aggregate over
     * the already-materialized frame; never wrong, at worst one extra
     * cheap job on a listener hiccup. */
   private[graft] def observedCounts(obs: Observation,
       names: Seq[String], recompute: () => Seq[Long]): Seq[Long] = {
-    val m = awaitObserved(obs)
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    var m = org.apache.spark.sql.GraftSqlBridge.observedOrEmpty(obs)
+    while (m.isEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(2)
+      m = org.apache.spark.sql.GraftSqlBridge.observedOrEmpty(obs)
+    }
     if (m.nonEmpty) names.map(n => m(n).asInstanceOf[Long]) else recompute()
   }
 
@@ -1837,7 +1893,7 @@ object Snapshots {
       .toDF("file", "col", "bits")
       .localCheckpoint()
     if (rows.isEmpty) return Seq.empty
-    stageFiles(rows, mainPath)(n => s"v${vNext}_bloom_$n")
+    stageFiles(rows, mainPath, StatSpec.RowsOnly)(n => s"v${vNext}_bloom_$n").map(_._1)
   }
 
   private def parseCluster(lines: Seq[String]): Option[Seq[String]] =
@@ -2138,14 +2194,14 @@ object Snapshots {
     * when the partition router computed it already. */
   private def mergeKeys(batch: DataFrame, keyCols: Seq[String],
       schemaNow: StructType, pre: Option[BatchKeySummary],
-      verb: String): BatchKeySummary = {
+      verb: String, maxKeys: Long): BatchKeySummary = {
     require(keyCols.nonEmpty, "merge: empty key column list")
     require(keyCols.distinct.size == keyCols.size,
       s"merge: duplicate key column in ${keyCols.mkString(", ")}")
     keyCols.foreach(k => require(schemaNow.fieldNames.contains(k),
       s"$verb: no key column '$k' in ${schemaNow.fieldNames.mkString(", ")}"))
     val summary = pre.getOrElse(
-      batchKeySummary(batch, keyCols, schemaNow(keyCols.head).dataType))
+      batchKeySummary(batch, keyCols, schemaNow(keyCols.head).dataType, maxKeys))
     require(!summary.hasDupTuples,
       s"merge: duplicate '${keyCols.mkString(", ")}' keys in the source " +
         "violate MERGE cardinality on a keyed table")
@@ -2153,9 +2209,10 @@ object Snapshots {
   }
 
   /** Live files of `v` whose lead-key range may hold a key of `keys`.
-    * With the batch's key summary in hand, a driver-side walk of the
-    * manifest ranges (no job); past the compare budget, or without a
-    * summary, the stats semi-join against the broadcast keys. Composite
+    * From the batch's key summary, a driver-side walk of the manifest
+    * ranges (no job); past the compare budget, a distributed join of
+    * the keys against the broadcast per-file ranges (the keys never
+    * gather on the driver). Composite
     * keys prune on the leading column only — trailing columns refine
     * membership, never discovery. A manifest without complete ranges
     * scans the live files for them, or, with `scanLegacy = false`
@@ -2163,12 +2220,11 @@ object Snapshots {
   private def filesByKey(spark: SparkSession, path: String, v: Int,
       live: Seq[String], leadKey: String,
       keyType: org.apache.spark.sql.types.DataType, keys: DataFrame,
-      summary: Option[BatchKeySummary],
+      summary: BatchKeySummary,
       scanLegacy: Boolean = true): IndexedSeq[String] = {
     val ranges = manifestRanges(path, v, live, leadKey)
     if (ranges.isEmpty && !scanLegacy) return live.toIndexedSeq
-    ranges.flatMap(r => summary.flatMap(
-      touchedByRanges(r, keyType, _, plannerTouchedMaxCompares(spark))))
+    ranges.flatMap(touchedByRanges(_, keyType, summary, plannerTouchedMaxCompares(spark)))
       .getOrElse {
         val stats = ranges match {
           case Some(rows) => keyRangeFrame(spark, rows, keyType)
@@ -2178,10 +2234,10 @@ object Snapshots {
             .agg(min(col(s"`$leadKey`")).as("kmin"),
               max(col(s"`$leadKey`")).as("kmax"))
         }
-        stats.join(broadcast(keys.select(col(s"`$leadKey`").as("__k")).distinct()),
-            keyRangeCond(col("__k")), "left_semi")
-          .select("file").collect().map(r => canonical(r.getString(0)))
-          .toIndexedSeq
+        keys.select(col(s"`$leadKey`").as("__k"))
+          .join(broadcast(stats), keyRangeCond(col("__k")))
+          .select("file").distinct()
+          .collect().map(r => canonical(r.getString(0))).toIndexedSeq
       }
   }
 
@@ -2211,19 +2267,6 @@ object Snapshots {
     else valueCounts(readUnder(spark, path, v, cands).filter(hit)
       .select(input_file_name())).keys.map(canonical).toSeq.distinct
 
-  /** Metrics `obs` collected on an action that already ran. The
-    * listener publishing them is async: poll briefly; empty if none
-    * arrived within 10 s. */
-  private def awaitObserved(obs: Observation): Map[String, Any] = {
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    var m = org.apache.spark.sql.GraftSqlBridge.observedOrEmpty(obs)
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(2)
-      m = org.apache.spark.sql.GraftSqlBridge.observedOrEmpty(obs)
-    }
-    m
-  }
-
   private def deleteTree(dir: java.nio.file.Path): Unit = {
     val walk = Files.walk(dir)
     try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
@@ -2232,44 +2275,46 @@ object Snapshots {
   }
 
   /** The one staging step: write `df` to a fresh temp dir and move its
-    * parquet parts into `dst` under `name(part file name)`. The temp dir
-    * — with the writer's `_SUCCESS` and `.crc` files — is removed
-    * whether the write succeeds or not. With `skipEmpty`, an all-empty
-    * write stages nothing (the emptiness answer comes from the written
-    * footers, driver-side, instead of a probe job). */
-  private def stageFiles(df: DataFrame, dst: String, skipEmpty: Boolean = false)(
-      name: String => String): Seq[String] = {
+    * parquet parts into `dst` under `name(part file name)`, each with
+    * what its write task recorded under `spec` ([[FileStatsTracker]]:
+    * row count, and for data files the manifest stats) — the write is
+    * the only job. The temp dir — with the writer's `_SUCCESS` and
+    * `.crc` files — is removed whether the write succeeds or not. With
+    * `skipEmpty`, an all-empty write stages nothing. */
+  private def stageFiles(df: DataFrame, dst: String, spec: StatSpec,
+      skipEmpty: Boolean = false)(name: String => String): Seq[(String, WrittenFile)] = {
     val stage = Files.createTempDirectory("graft_stage")
     try {
-      df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      val tracker = new FileStatsTracker(spec)
+      org.apache.spark.sql.GraftSqlBridge.writeParquet(df, stage.toString, Seq(tracker))
       val parts = listDir(stage).filter(_.getFileName.toString.endsWith(".parquet"))
-      if (skipEmpty && parts.forall(p => parquetRowCount(p.toString) == 0L)) Seq.empty
-      else parts.map { p =>
+        .map { p =>
+          val n = p.getFileName.toString
+          p -> tracker.written.getOrElse(n, throw new IllegalStateException(
+            s"graft: no write task reported staged file $n"))
+        }
+      if (skipEmpty && parts.forall(_._2.rows == 0L)) Seq.empty
+      else parts.map { case (p, w) =>
         val to = Paths.get(dst).resolve(name(p.getFileName.toString))
         Files.move(p, to)
-        to.toString
+        (to.toString, w)
       }
     } finally deleteTree(stage)
   }
 
   /** Stage `doomed` (`__dv_file`, `__dv_pos` and the dead rows'
     * pre-images) as version `v + 1`'s DV sidecars; an empty set stages
-    * nothing. Which files the sidecars mark is observed on the write
-    * itself and memoized in [[dvMarkCache]]. */
+    * nothing. Which files each sidecar marks is recorded by its own
+    * write and memoized in [[dvMarkCache]]. */
   private def stageDv(path: String, v: Int, doomed: DataFrame): Seq[String] = {
-    val obs = Observation()
-    val staged = stageFiles(
-      doomed.observe(obs, collect_set(col("__dv_file")).as("__dvf")), path,
+    val staged = stageFiles(doomed, path, StatSpec.marking(doomed.schema, "__dv_file"),
       skipEmpty = true)(n => s"v${v + 1}_dv_$n")
-    if (staged.nonEmpty) awaitObserved(obs).get("__dvf").foreach { fs =>
-      val files = fs.asInstanceOf[scala.collection.Seq[String]].map(canonical).toSet
-      staged.foreach(f => dvMarkCache.put(canonical(f), files))
-    }
-    staged
+    staged.foreach { case (f, w) => dvMarkCache.put(canonical(f), w.marks.map(canonical)) }
+    staged.map(_._1)
   }
 
   /** Version `v + 1`'s artifacts, staged overlapped (guide §2.6): the
-    * data rows (their stats scan rides the same thunk), the DV marks
+    * data rows (with the stats their write records), the DV marks
     * and the change rows are independent writes over one evaluation.
     * Returns (data files, their stat lines, DV refs, change-data refs —
     * None when `cdf` is None, i.e. the table records no change data). */
@@ -2420,8 +2465,8 @@ object Snapshots {
     val schema =
       if (files.isEmpty) None
       else Some(spark.read.parquet(files: _*).schema)
-    // the bootstrap pays one full stats scan; every later commit scans
-    // only its staged files
+    // files graft did not write pay one full stats scan; every later
+    // commit takes its staged files' stats from their write
     commit(path, files, schema,
       schema.fold(Seq.empty[String])(statsLines(spark, files, _)),
       cdfFlag = changeDataFeed)
@@ -2606,13 +2651,12 @@ object Snapshots {
         val spark = org.apache.spark.sql.SparkSession.active
         val out = stagedFrame(readLive(spark, src, v, touched.toIndexedSeq),
           tableSchema(src, v))
-        val moved = stageFiles(out, dst) { n =>
+        stageWithStats(spark, out, dst) { n =>
           var name = s"mat_$n"
           var i = 0
           while (!taken.add(name)) { i += 1; name = s"mat${i}_$n" }
           name
         }
-        (moved, statsLines(spark, moved, out.schema))
       }
     commit(dst, linked.map(renames) ++ matFiles, tableSchema(src, v),
       remappedStats(src, v, linked, renames) ++ matStats,
@@ -2779,11 +2823,12 @@ object Snapshots {
     }
     // one action answers the cardinality refusal, and candidate-file
     // discovery runs driver-side from the collected lead keys
-    val summary = mergeKeys(source, keyCols, schemaNow, None, "merge")
+    val summary = mergeKeys(source, keyCols, schemaNow, None, "merge",
+      keyBudget(spark, live))
     val touched: Seq[String] =
       if (bySourceCs.nonEmpty) live.map(canonical)
       else filesByKey(spark, path, v, live, keyCols.head,
-        schemaNow(keyCols.head).dataType, source, Some(summary))
+        schemaNow(keyCols.head).dataType, source, summary)
     if (touched.isEmpty && insertCs.isEmpty) // nothing can fire
       return commitDml(path, v)(marks = marks)
 
@@ -2995,9 +3040,9 @@ object Snapshots {
     // one-live-row-per-key invariant) AND hands the distinct lead keys
     // to driver-side file discovery over the manifest ranges
     val summary = mergeKeys(updates, keyCols, schemaNow, preSummary,
-      if (mor) "mergeVersionedDV" else "merge")
+      if (mor) "mergeVersionedDV" else "merge", keyBudget(spark, live))
     val touched = filesByKey(spark, path, v, live, keyCols.head,
-      schemaNow(keyCols.head).dataType, updates, Some(summary))
+      schemaNow(keyCols.head).dataType, updates, summary)
     if (mor) return mergeOnRead(spark, path, v, updates, keyCols, schemaNow,
       summary, touched, marks)
     // readLive, not readUnder: a DV-deleted row in a touched file must
@@ -3208,9 +3253,9 @@ object Snapshots {
     * change-feed mirror needs. A predicate built from a collected key
     * list (`isin(k1…kN)`) puts one literal per key into the plan: a
     * large delete batch bloats analysis/codegen and caps out entirely
-    * well before the batch does. Here the keys stay distributed: file
-    * discovery is the A15-style stats semi-join (per-file key ranges ×
-    * broadcast keys — same pruning as [[mergeVersioned]]), and the
+    * well before the batch does. Here the keys are pinned once and
+    * summarized in one action, file discovery walks the per-file key
+    * ranges on the driver (same pruning as [[mergeVersioned]]), and the
     * rewrite is one anti join. Plan size is O(1) in the key count.
     * Returns the new version.
     */
@@ -3231,24 +3276,30 @@ object Snapshots {
     val liveTouched = readLive(spark, path, v, touched)
     // A31 (table property): the deleted pre-images are the change data
     val (staged, stagedStats, _, cdfStaged) = stageArtifacts(spark, path, v,
-      liveTouched.join(broadcast(k), keyCols, "left_anti"), Some(schemaNow),
+      liveTouched.join(k, keyCols, "left_anti"), Some(schemaNow),
       cdf = if (!cdfEnabled(path, v)) None
-        else Some(liveTouched.join(broadcast(k), keyCols, "left_semi")
+        else Some(liveTouched.join(k, keyCols, "left_semi")
           .withColumn("change_type", lit("delete"))))
     commitDml(path, v)(touched, staged, stagedStats, cdf = cdfStaged)
   }
 
-  /** The key-delete head: the distinct doomed key tuples and the live
-    * files that may hold one (see [[filesByKey]]). */
+  /** The key-delete head: the doomed key tuples pinned once, as the
+    * side every later join reads (broadcast while the batch key summary
+    * fits its budget), and the live files that may hold one — found
+    * from that one-action summary ([[filesByKey]]). Semi and anti joins
+    * need no `distinct`. */
   private def doomedKeys(spark: SparkSession, path: String, v: Int,
       schemaNow: StructType, keys: DataFrame, keyCols: Seq[String],
       scanLegacy: Boolean): (DataFrame, IndexedSeq[String]) = {
     require(keyCols.nonEmpty, "delete: empty key column list")
     keyCols.foreach(c => require(schemaNow.fieldNames.contains(c),
       s"delete: no key column '$c' in ${schemaNow.fieldNames.mkString(", ")}"))
-    val k = keys.select(keyCols.map(c => col(s"`$c`")): _*).distinct()
-    (k, filesByKey(spark, path, v, liveFiles(path, v), keyCols.head,
-      schemaNow(keyCols.head).dataType, k, None, scanLegacy))
+    val k = pinned(keys.select(keyCols.map(c => col(s"`$c`")): _*))
+    val live = liveFiles(path, v)
+    val keyType = schemaNow(keyCols.head).dataType
+    val summary = batchKeySummary(k, keyCols, keyType, keyBudget(spark, live))
+    (if (summary.overBudget) k else broadcast(k),
+      filesByKey(spark, path, v, live, keyCols.head, keyType, k, summary, scanLegacy))
   }
 
   /** The SET list of an UPDATE as the full new row, computed FROM THE
@@ -3337,11 +3388,7 @@ object Snapshots {
     */
   def overwriteVersioned(spark: SparkSession, path: String, df: DataFrame): Int = {
     val v = currentVersion(path)
-    if (v < 0) {
-      Files.createDirectories(Paths.get(path))
-      df.write.mode(SaveMode.Append).parquet(path)
-      return init(spark, path)
-    }
+    if (v < 0) return bootstrap(spark, path, df, "", Nil)
     enforceConstraints(path, v, df)
     // A50: an overwrite keeps the table's bucket layout — the batch
     // must carry the bucket column (the spec is immutable metadata)
@@ -3373,35 +3420,22 @@ object Snapshots {
     marks.foreach(m => requireTxnApp(m._1))
     if (currentVersion(path) < 0) {
       Files.createDirectories(Paths.get(path))
-      txn match {
-        case None =>
-          df.write.mode(SaveMode.Append).parquet(path)
-          return init(spark, path)
-        case Some((app, ver)) =>
-          // Bootstrap WITH the mark (init() would commit v0 without it),
-          // CRASH-IDEMPOTENTLY: a previous attempt of this exact
-          // (appId, version) may have died between its data write and
-          // the v0 commit — currentVersion is still <0 then, so no mark
-          // check can catch the replay, and blindly re-appending
-          // would commit BOTH copies (doubling every row). The staged
-          // files carry a deterministic per-mark tag, so a replay deletes
-          // only ITS own orphans; untagged pre-existing parquet is user
-          // data the bootstrap ADOPTS (init semantics), never deletes.
-          val tag = "txnb" + Integer.toHexString((app + "@" + ver).##) + "_"
-          listDir(Paths.get(path)).filter { p =>
-            val n = p.getFileName.toString
-            n.endsWith(".parquet") && n.startsWith("v0_" + tag)
-          }.foreach(Files.deleteIfExists(_))
-          val preExisting = listDir(Paths.get(path))
-            .map(_.toString).filter(_.endsWith(".parquet"))
-          val files = preExisting ++ stageFiles(df, path)(n => s"v0_$tag$n")
-          val schema =
-            if (files.isEmpty) None
-            else Some(spark.read.parquet(files: _*).schema)
-          return commit(path, files, schema,
-            schema.fold(Seq.empty[String])(statsLines(spark, files, _)),
-            txn = marks)
-      }
+      // Bootstrap WITH the mark (init() would commit v0 without it),
+      // CRASH-IDEMPOTENTLY: a previous attempt of this exact
+      // (appId, version) may have died between its data write and
+      // the v0 commit — currentVersion is still <0 then, so no mark
+      // check can catch the replay, and blindly re-appending
+      // would commit BOTH copies (doubling every row). The staged
+      // files carry a deterministic per-mark tag, so a replay deletes
+      // only ITS own orphans; untagged pre-existing parquet is user
+      // data the bootstrap ADOPTS (init semantics), never deletes.
+      val tag = txn.fold("") { case (app, ver) =>
+        "txnb" + Integer.toHexString((app + "@" + ver).##) + "_" }
+      if (txn.nonEmpty) listDir(Paths.get(path)).filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && n.startsWith("v0_" + tag)
+      }.foreach(Files.deleteIfExists(_))
+      return bootstrap(spark, path, df, tag, marks)
     }
     val v = headOf(path, marks)
     if (replayed(path, v, marks)) return v
@@ -3435,11 +3469,11 @@ object Snapshots {
 
   // r16 — which data files does a DV sidecar mark? The set is
   // immutable once the sidecar is written; the writers learn it FREE
-  // (collect_set(__dv_file) observed on the DV write job itself) and
+  // (the sidecar's own write records its distinct __dv_file values) and
   // memoize it here, so the auto-reconcile that typically follows in
   // the same driver skips its touched-file discovery job. A sidecar
-  // not in the memo (another process wrote it, or the observation was
-  // lost) falls back to the one small read — the memo is a
+  // not in the memo (another process wrote it) falls back to the one
+  // small read — the memo is a
   // per-immutable-artifact shortcut (the dvRowCountCache pattern),
   // never a result cache.
   private val dvMarkCache =
@@ -3455,10 +3489,6 @@ object Snapshots {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getFooter finally r.close()
   }
-
-  /** Total row count of a local parquet file from its footer. */
-  private[sources] def parquetRowCount(file: String): Long =
-    parquetFooter(file).getBlocks.asScala.map(_.getRowCount).sum
 
   /** The Spark schema of a parquet file from its footer, resolved
     * exactly as a schema-less `spark.read.parquet` infers it (the
@@ -3490,7 +3520,8 @@ object Snapshots {
   /** Stage `rows` as a commit's stored change-data files (A31);
     * returns the refs (empty for an empty change set). */
   private def stageCdf(path: String, v: Int, rows: DataFrame): Seq[String] =
-    stageFiles(rows, path, skipEmpty = true)(n => s"v${v + 1}_cdf_$n")
+    stageFiles(rows, path, StatSpec.RowsOnly, skipEmpty = true)(
+      n => s"v${v + 1}_cdf_$n").map(_._1)
 
   /** The rows of `files` as live at `v`, with their DV identity
     * (`__file`, `__pos`) kept: existing DVs applied, so an
@@ -3577,7 +3608,7 @@ object Snapshots {
     val (k, touched) = doomedKeys(spark, path, v,
       schemaAt(spark, path, v, liveFiles(path, v)), keys, keyCols,
       scanLegacy = false)
-    deleteDV(spark, path, v, touched, marks)(_.join(broadcast(k), keyCols, "left_semi"))
+    deleteDV(spark, path, v, touched, marks)(_.join(k, keyCols, "left_semi"))
   }
 
   /** A71 — MERGE-ON-READ UPDATE: the DV twin of [[updateVersioned]].

@@ -62,8 +62,10 @@ object JobCount {
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy("o_orderstatus").count().count()
     } catch { case _: Throwable => () }
+    val sc = spark.sparkContext
     args.foreach { name =>
-      Thread.sleep(300) // drain listener bus from the previous query
+      // every event of the previous query delivered before the reset
+      org.apache.spark.ListenerBusProbe.drain(sc)
       jobs.set(0); stages.set(0); tasks.set(0); sites.clear()
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, d)
@@ -71,7 +73,7 @@ object JobCount {
       val dt = (System.nanoTime() - t0) / 1e9
       val stage = graft.sources.LakehouseQueries.drainStagingSeconds()
       graft.sources.LakehouseQueries.reclaim()
-      Thread.sleep(500) // listener events are async
+      org.apache.spark.ListenerBusProbe.drain(sc) // listener events are async
       println(f"[jobcount] $name%-28s wall=$dt%7.2f s  stage=$stage%6.2f s" +
         f"  jobs=${jobs.get}%4d stages=${stages.get}%5d tasks=${tasks.get}%6d")
       if (siteDetail) {

@@ -2,7 +2,8 @@ package org.apache.spark
 
 import org.apache.spark.scheduler.StageInfo
 
-/** Test hooks into `private[spark]` scheduler state. */
+/** Hooks into `private[spark]` scheduler state for the job-counting
+  * tools and specs. */
 object ListenerBusProbe {
 
   /** Wait until the listener bus has delivered every event posted so far,

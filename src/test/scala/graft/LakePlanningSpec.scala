@@ -7,7 +7,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusProbe
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1}
 import org.apache.spark.sql.functions.{col, lit, when}
@@ -27,27 +28,39 @@ import graft.sources.{GraftChangeSource, GraftPartitionedChangeSource, MergeWhen
 class LakePlanningSpec extends GraftSuite {
 
   /** Jobs submitted by `body` (and threads it starts) under a fresh job
-    * group. */
-  private def jobsOf[A](body: => A): (A, Int) = {
+    * group, and the input bytes their tasks read. */
+  private def costOf[A](body: => A): (A, Int, Long) = {
     val sc = spark.sparkContext
     val group = s"lake-plan-${java.util.UUID.randomUUID()}"
     val jobs = new AtomicInteger
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    def ours(p: java.util.Properties) =
+      p != null && p.getProperty("spark.jobGroup.id") == group
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
+        if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, group)
     try {
       val a = body
       ListenerBusProbe.drain(sc)
-      (a, jobs.get)
+      (a, jobs.get, bytes.get)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val (a, jobs, _) = costOf(body)
+    (a, jobs)
   }
 
   /** The rows of a `getBatch` frame, read the way a sink reads them
@@ -234,15 +247,81 @@ class LakePlanningSpec extends GraftSuite {
         Snapshots.appendVersioned(spark, path, frame(rowsOf(400L until 405L, "a")),
           Some(("appa", 1L)))
       }._2)
-    assert(counts == Seq("mergeVersioned" -> 8, "mergeVersionedDV" -> 11,
-      "deleteVersionedKeys" -> 14, "appendVersioned" -> 4, "compact" -> 4,
-      "mergeVersionedClauses" -> 12, "updateVersioned" -> 7,
-      "updateVersionedDV" -> 8, "deleteVersioned" -> 7,
-      "deleteVersionedDV" -> 2, "deleteVersionedKeysDV" -> 7,
-      "reconcileDV" -> 4, "mergeVersioned txn" -> 8,
-      "mergeVersionedDV txn" -> 11, "appendVersioned txn" -> 4,
+    assert(counts == Seq("mergeVersioned" -> 5, "mergeVersionedDV" -> 8,
+      "deleteVersionedKeys" -> 7, "appendVersioned" -> 2, "compact" -> 2,
+      "mergeVersionedClauses" -> 9, "updateVersioned" -> 5,
+      "updateVersionedDV" -> 6, "deleteVersioned" -> 5,
+      "deleteVersionedDV" -> 2, "deleteVersionedKeysDV" -> 4,
+      "reconcileDV" -> 2, "mergeVersioned txn" -> 5,
+      "mergeVersionedDV txn" -> 8, "appendVersioned txn" -> 2,
       "txn replays" -> 0), counts.mkString(", "))
     assert(Snapshots.currentVersion(path) == 15)
+  }
+
+  /** A table over keys 0..199 in 4 files; with `emptyFile`, v1 stages
+    * one 0-row data file (an append of an empty batch). */
+  private def keyedTable(emptyFile: Boolean): String = {
+    val path = Files.createTempDirectory("lake_plan_keys").toString + "/t"
+    frame(rowsOf(0L until 200L, "v")).repartition(4).write.parquet(path)
+    Snapshots.init(spark, path)
+    if (emptyFile) {
+      Snapshots.appendVersioned(spark, path, frame(Nil))
+      val v = Snapshots.currentVersion(path)
+      assert(Snapshots.manifestLines(path, v)
+        .count(l => l.startsWith("#filerows=") && l.endsWith("\t0")) == 1)
+    }
+    path
+  }
+
+  private def keys(ks: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    ks.toDF("k")
+  }
+
+  test("a live 0-row file leaves key discovery on the manifest ranges") {
+    val ups = rowsOf((0L until 20L) ++ (200L until 210L), "c")
+    val del = Seq(100L, 101L, 102L, 5L)
+    val costs = Seq(false, true).map { emptyFile =>
+      val path = keyedTable(emptyFile)
+      val (_, mJobs, mBytes) = costOf(Snapshots.mergeVersioned(spark, path, frame(ups), "k"))
+      val (_, dJobs, dBytes) = costOf(Snapshots.deleteVersionedKeys(spark, path, keys(del), "k"))
+      assert(asModel(Snapshots.read(spark, path)) ==
+        upsert(upsert(Map.empty, rowsOf(0L until 200L, "v")), ups) -- del)
+      (mJobs, mBytes, dJobs, dBytes)
+    }
+    // the same jobs reading the same bytes: no discovery scan of the
+    // table's key column
+    assert(costs(1) == costs(0), costs)
+  }
+
+  test("a merge and a key delete past the key budget take the distributed join") {
+    val base = upsert(Map.empty, rowsOf(0L until 200L, "v"))
+    val ups = rowsOf((0L until 20L) ++ (200L until 210L), "c")
+    val del = Seq(100L, 101L, 102L, 5L, 150L)
+    def run(maxCompares: String): (Int, Int, Int, Int) =
+      withConf("spark.graft.merge.plannerTouched.maxCompares" -> maxCompares) {
+        val path = keyedTable(emptyFile = false)
+        val (_, cow) = jobsOf(Snapshots.mergeVersioned(spark, path, frame(ups), "k"))
+        val (_, mor) = jobsOf(Snapshots.mergeVersionedDV(spark, path,
+          frame(rowsOf(Seq(1L, 7L, 300L), "m")), "k"))
+        val (_, delCow) = jobsOf(Snapshots.deleteVersionedKeys(spark, path, keys(del), "k"))
+        val (_, delDv) = jobsOf(Snapshots.deleteVersionedKeysDV(spark, path,
+          keys(Seq(2L, 3L, 8L)), "k"))
+        val want = upsert(upsert(base, ups), rowsOf(Seq(1L, 7L, 300L), "m")) --
+          del -- Seq(2L, 3L, 8L)
+        assert(asModel(Snapshots.read(spark, path)) == want, maxCompares)
+        // duplicate keys still refuse past the budget
+        val dup = intercept[IllegalArgumentException](Snapshots.mergeVersioned(spark, path,
+          frame(rowsOf(Seq(4L, 4L, 9L, 11L), "d")), "k"))
+        assert(dup.getMessage.contains("duplicate"))
+        (cow, mor, delCow, delDv)
+      }
+    val within = run("8000000")
+    // 4 live files: a budget of 8 compares holds 2 keys per batch
+    val past = run("8")
+    Seq(within, past).foreach(c => assert(c.productIterator.forall(_ != 0)))
+    assert(past.productIterator.zip(within.productIterator)
+      .forall { case (p: Int, w: Int) => p > w }, (within, past))
   }
 
   test("rowCount on a DV version runs one job") {
