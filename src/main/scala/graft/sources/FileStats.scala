@@ -18,7 +18,7 @@ private[sources] final case class StatCol(name: String, acc: Expression,
 
 /** What a staging write records per file: the stats columns, whether
   * they carry NDV registers, and the ordinal of a string column whose
-  * distinct values are collected (a DV write's marked files). */
+  * values are counted (a DV write's marked files and their dead rows). */
 private[sources] final case class StatSpec(cols: IndexedSeq[StatCol],
     hll: Boolean, marksOf: Option[Int])
 
@@ -27,7 +27,7 @@ private[sources] object StatSpec {
   /** Row counts only. */
   val RowsOnly: StatSpec = StatSpec(Vector.empty, hll = false, None)
 
-  /** Row counts plus the distinct values of string column `c`. */
+  /** Row counts plus the row count per value of string column `c`. */
   def marking(schema: StructType, c: String): StatSpec =
     RowsOnly.copy(marksOf = Some(schema.fieldIndex(c)))
 
@@ -49,10 +49,11 @@ private[sources] object StatSpec {
 /** What one write task saw of one file it wrote: its rows and, per
   * [[StatSpec]] column, the rendered (min, max) (null when the column
   * holds no value), the null count and the NDV registers (null when
-  * the spec has none); `marks` are the tracked column's distinct values. */
+  * the spec has none); `marks` are the tracked column's values with
+  * their row counts. */
 private[sources] final case class WrittenFile(name: String, rows: Long,
     ranges: Array[(String, String)], nulls: Array[Long],
-    hll: Array[Array[Byte]], marks: Set[String])
+    hll: Array[Array[Byte]], marks: Map[String, Long])
 
 private final case class TaskFiles(files: Seq[WrittenFile]) extends WriteTaskStats
 
@@ -120,7 +121,7 @@ private final class FileAcc(spec: StatSpec) {
   private val maxs = new Array[Any](n)
   private val nonNull = new Array[Long](n)
   private val regs = if (spec.hll) Array.fill(n)(new Array[Byte](graft.functions.Hll.M)) else null
-  private val marks = scala.collection.mutable.HashSet.empty[String]
+  private val marks = scala.collection.mutable.HashMap.empty[String, Long]
 
   def add(row: InternalRow): Unit = {
     rows += 1
@@ -140,7 +141,12 @@ private final class FileAcc(spec: StatSpec) {
       }
       i += 1
     }
-    spec.marksOf.foreach(m => if (!row.isNullAt(m)) marks += row.getUTF8String(m).toString)
+    spec.marksOf.foreach { m =>
+      if (!row.isNullAt(m)) {
+        val k = row.getUTF8String(m).toString
+        marks(k) = marks.getOrElse(k, 0L) + 1L
+      }
+    }
   }
 
   def result(path: String): WrittenFile = {
@@ -158,7 +164,7 @@ private final class FileAcc(spec: StatSpec) {
       }
     }
     WrittenFile(path.substring(path.lastIndexOf('/') + 1), rows, ranges,
-      nonNull.map(rows - _), regs, marks.toSet)
+      nonNull.map(rows - _), regs, marks.toMap)
   }
 }
 

@@ -67,14 +67,6 @@ class GraftStatsRule extends Rule[LogicalPlan] {
 
 object GraftStats {
 
-  /** r13 — DV-adjusted rowCount, memoized per (path, version): the DV
-    * set of a committed version is immutable, so the one small job
-    * over the DV sidecars (O(changed rows) bytes) runs at most once
-    * per version per driver, and every later resolution answers from
-    * the cache. The manifest carries everything else. */
-  private val dvRowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Option[BigInt]]
-
   /** Catalog statistics for a DV-carrying (or column-mapped) version —
     * what [[GraftDvScanRule]] hangs on the substituted vectorized
     * scan: manifest column ranges/null counts/NDV as on the plain
@@ -87,10 +79,8 @@ object GraftStats {
   private[graft] def dvAdjustedStats(spark: org.apache.spark.sql.SparkSession,
       path: String, v: Int): Option[CatalogStatistics] =
     catalogStats(path, v).map { base =>
-      val key = (Snapshots.canonical(path), v)
-      val adjusted = dvRowCountCache.computeIfAbsent(key,
-        _ => Snapshots.rowCount(spark, path, v).map(BigInt(_)))
-      base.copy(rowCount = adjusted.orElse(base.rowCount))
+      base.copy(rowCount =
+        Snapshots.rowCount(spark, path, v).map(BigInt(_)).orElse(base.rowCount))
     }
 
   /** Manifest-derived `CatalogStatistics` for one version of a flat

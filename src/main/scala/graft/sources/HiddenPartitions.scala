@@ -732,8 +732,8 @@ object HiddenPartitions {
       }
     }
     // PASS 2 — genuinely new (or moved) keys route by the current
-    // transform through the shared router (one aggregate for the
-    // touched values and every dir's key summary)
+    // transform through the shared router (one job for the touched
+    // values and, within the key budget, every dir's key summary)
     PartitionedSnapshots.route(spark, remaining, current.valueExpr,
       epochDir(path, currentEpoch, _), None,
       PartitionedSnapshots.bucketOf(path), keyCols, mor, txn)

@@ -193,7 +193,7 @@ object PartitionedSnapshots {
     * (A16 index-pruned copy-on-write + A25 CAS per partition).
     * Partitions the batch does not touch keep their version — and
     * concurrent merges into DIFFERENT partitions never contend.
-    * The touched-value list rides the router's one aggregate over the
+    * The touched-value list rides the router's one job over the
     * batch, bounded by partition cardinality (the hive assumption); a
     * NULL partition value refuses before any partition commits. Rows
     * may MOVE between partitions only via delete+insert, as in
@@ -272,11 +272,12 @@ object PartitionedSnapshots {
       .map { case (v, (_, ver)) => v -> ver }
   }
 
-  /** The router's merge, shared by both layouts. ONE aggregate over the
-    * batch yields the touched values AND every slice's key summary
-    * ([[Snapshots.partitionedKeySummaries]]); a NULL value, or a
-    * txn-marked bootstrap under a bucketed root, refuses before any dir
-    * commits. Each value's slice (minus `dropCol`) then commits into the
+  /** The router's merge, shared by both layouts. ONE shuffle-free job
+    * over the batch yields the touched values AND, within the compare
+    * budget, every slice's key summary ([[Snapshots.keySummaries]]);
+    * past it each slice's merge summarizes itself within its own
+    * bound. A NULL value, or a txn-marked bootstrap under a bucketed
+    * root, refuses before any dir commits. Each value's slice (minus `dropCol`) then commits into the
     * dir `dirOf` names: merged in place (copy-on-write, or merge-on-read
     * with `mor`) when that dir has a log, else bootstrapped — bucketed
     * under a bucketed root, WITH the `txn` mark when one is given
@@ -289,21 +290,21 @@ object PartitionedSnapshots {
       value: Column, dirOf: String => String, dropCol: Option[String],
       bucket: Option[(String, Int)], keyCols: Seq[String], mor: Boolean,
       txn: Option[(String, Long)]): Map[String, (String, Int)] = {
-    val summaries = Snapshots.partitionedKeySummaries(updates, value,
-      keyCols, updates.schema(keyCols.head).dataType)
-    if (summaries.contains(null)) refuseNull(value)
-    val fresh = summaries.keySet.filter(v => Snapshots.currentVersion(dirOf(v)) < 0)
+    val (values, _, summaries) = Snapshots.keySummaries(updates, value, keyCols,
+      updates.schema(keyCols.head).dataType, Snapshots.plannerTouchedMaxCompares(spark))
+    if (values.contains(null)) refuseNull(value)
+    val fresh = values.filter(v => Snapshots.currentVersion(dirOf(v)) < 0)
     require(txn.isEmpty || bucket.isEmpty || fresh.isEmpty,
       "graft: a txn-marked merge cannot bootstrap NEW bucketed partition(s) " +
         s"${fresh.toSeq.sorted.mkString(", ")} — create them first (merge " +
         "without the mark), then merge idempotently")
-    Par.map(spark, summaries.keys.toIndexedSeq.sorted) { v =>
+    Par.map(spark, values.toIndexedSeq.sorted) { v =>
       val slice = updates.filter(value === v).drop(dropCol.toSeq: _*)
       val dir = dirOf(v)
       val version =
         if (!fresh.contains(v))
           Snapshots.mergeVersionedOCC(spark, dir, slice, keyCols, maxRetries = 5,
-            beforeCommit = () => (), txn, summaries.get(v), mor)
+            beforeCommit = () => (), txn, summaries.flatMap(_.get(v)), mor)
         else bucket match {
           case Some((c, n)) => Snapshots.writeBucketedVersioned(spark, dir, slice, c, n)
           case None => Snapshots.appendVersioned(spark, dir, slice, txn)

@@ -802,12 +802,12 @@ object Snapshots {
   }
 
   /** A33 — `count(*)` of version `version` from the MANIFEST alone:
-    * the live files' recorded row counts summed, minus the version's
-    * DV dead positions (counted from the small DV files, restricted to
-    * entries referencing live files — inert entries must not
-    * over-subtract). None when any live file predates row-count
-    * recording (legacy manifests) — the caller falls back to a scan.
-    * No data file is opened either way.
+    * the live files' recorded row counts summed, minus the dead rows the
+    * version's DV descriptors record for live files (entries on files
+    * no longer live are inert and must not over-subtract). None when
+    * any live file predates row-count recording (legacy manifests) —
+    * the caller falls back to a scan. No file is opened and no job
+    * runs, unless a `#dv=` line predates descriptors ([[dvMarks]]).
     */
   def rowCount(spark: SparkSession, path: String, version: Int = -1): Option[Long] = {
     val v = if (version < 0) currentVersion(path) else version
@@ -815,31 +815,42 @@ object Snapshots {
     val live = liveFiles(path, v).map(canonical)
     val rows = fileRows(path, v)
     if (!live.forall(rows.contains)) return None
-    val base = live.map(rows).sum
-    val dvs = dvFiles(path, v)
-    val dead =
-      if (dvs.isEmpty) 0L
-      else {
-        val liveSet = live.toSet
-        dvMarks(spark, dvs).collect { case (f, n) if liveSet.contains(f) => n }.sum
-      }
-    Some(base - dead)
+    val dead = dvMarks(spark, dvEntries(path, v))
+    Some(live.map(f => rows(f) - dead.getOrElse(f, 0L)).sum)
   }
 
   // A30 — DELETION VECTORS (the Delta DV / Iceberg position-delete
   // pattern): a delete may land as a MERGE-ON-READ commit instead of a
-  // copy-on-write rewrite. The manifest carries `#dv=` lines naming DV
-  // parquet files — each a set of (__dv_file, __dv_pos) row positions
-  // that are DEAD at that version — and every read anti-joins them out.
-  // Deleting d rows from a 100 TB table then writes O(d) positions, not
-  // O(touched file bytes); reads pay one (usually broadcast) anti join
-  // until [[reconcileDV]] folds the DVs back into rewritten files.
-  // DV file sets are carried forward whole on every commit; entries
-  // referencing files no longer live are INERT (the anti join cannot
-  // match a file that is not scanned), so carrying them is harmless
-  // garbage that reconcile/OPTIMIZE ZORDER clears. Positions come from
-  // parquet's `_metadata.row_index`, which is stable per file.
+  // copy-on-write rewrite. A DV sidecar is a parquet file of
+  // (__dv_file, __dv_pos) row positions that are DEAD at that version,
+  // and every read anti-joins them out. Deleting d rows from a 100 TB
+  // table then writes O(d) positions, not O(touched file bytes); reads
+  // pay one (usually broadcast) anti join until [[reconcileDV]] folds
+  // the DVs back into rewritten files. Positions come from parquet's
+  // `_metadata.row_index`, which is stable per file.
+  // Each sidecar's `#dv=` line carries its DESCRIPTOR, counted by the
+  // sidecar's own write (Delta's DV `cardinality`, split per file):
+  //   #dv=<sidecar>\t<dead rows>\t<file>\t<n>\t<file>\t<n>…
+  // so which files a DV marks, and how many of their rows, is a
+  // manifest read — row counts, reconcile, deep clone, the merge's OCC
+  // DV-clash check and the change feed open no sidecar for it. A line
+  // written before descriptors names the sidecar alone; [[dvMarks]]
+  // reads just those sidecars. (The total keeps a 0-row sidecar's line
+  // distinct from such a line.) Entries are carried forward whole on
+  // every commit; entries on files no longer live are INERT (the anti
+  // join cannot match a file that is not scanned), so carrying them is
+  // harmless garbage that reconcile/OPTIMIZE ZORDER clears.
   private val DvHeader = "#dv="
+
+  /** One `#dv=` entry: a sidecar and its descriptor — each data file it
+    * marks (canonical) with its dead rows — or None for a line written
+    * before descriptors. */
+  private[sources] final case class DvEntry(sidecar: String,
+      marks: Option[Map[String, Long]]) {
+    def line: String = DvHeader + marks.fold(sidecar)(m =>
+      (Seq(sidecar, m.values.sum.toString) ++ m.toSeq.sorted.flatMap {
+        case (f, n) => Seq(f, n.toString) }).mkString("\t"))
+  }
 
   /** A DV sidecar's position columns. Sidecars may also carry the dead
     * rows' keys and pre-images (the change feed's), but every DV reader
@@ -856,10 +867,21 @@ object Snapshots {
   private[sources] def readDv(spark: SparkSession, dvs: Seq[String]): DataFrame =
     spark.read.schema(DvSchema).parquet(dvs: _*)
 
-  /** DV parquet files in force at version `v` (accumulated). */
+  /** The DV entries in force at version `v` (accumulated) — what every
+    * commit that keeps `v`'s DVs carries. */
+  private[sources] def dvEntries(path: String, v: Int): Seq[DvEntry] =
+    manifestLines(path, v).filter(_.startsWith(DvHeader)).map { l =>
+      val parts = l.stripPrefix(DvHeader).split('\t')
+      DvEntry(parts(0), if (parts.length == 1) None else Some(
+        parts.drop(2).grouped(2).map(p => p(0) -> p(1).toLong).toMap))
+    }
+
+  /** The DV sidecars in force at version `v`: the path view of
+    * [[dvEntries]], for readers that open the sidecars themselves (scans,
+    * vacuum, DETAIL). */
   private[graft] def dvFiles(path: String, v: Int): Seq[String] =
-    manifestLines(path, v)
-      .filter(_.startsWith(DvHeader)).map(_.stripPrefix(DvHeader))
+    manifestLines(path, v).filter(_.startsWith(DvHeader))
+      .map(_.stripPrefix(DvHeader).takeWhile(_ != '\t'))
 
   // A31 — STORED CHANGE DATA (the Delta `_change_data` pattern): a
   // writing commit may also record the change rows it just computed
@@ -897,7 +919,7 @@ object Snapshots {
     val v = headOf(path)
     val live = liveFiles(path, v)
     commitNext(path, v, live, tableSchema(path, v),
-      carriedStats(path, v, live), dvFiles(path, v),
+      carriedStats(path, v, live), dvEntries(path, v),
       cdf = Some(Seq.empty), cdfFlag = true)
   }
 
@@ -964,7 +986,7 @@ object Snapshots {
         s"cannot add constraint '$name' ($exprText): existing row violates it, e.g. ${bad.headOption.getOrElse("")}")
     }
     commitNext(path, v, live, tableSchema(path, v),
-      carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty),
+      carriedStats(path, v, live), dvEntries(path, v), cdf = Some(Seq.empty),
       constraintsOverride = Some(constraintsOf(path, v) :+ (name -> exprText)))
   }
 
@@ -976,7 +998,7 @@ object Snapshots {
     require(cons.exists(_._1 == name), s"no constraint '$name'")
     val live = liveFiles(path, v)
     commitNext(path, v, live, tableSchema(path, v),
-      carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty),
+      carriedStats(path, v, live), dvEntries(path, v), cdf = Some(Seq.empty),
       constraintsOverride = Some(cons.filterNot(_._1 == name)))
   }
 
@@ -1389,7 +1411,7 @@ object Snapshots {
       }
     val refs = stageBloomSidecar(spark, path, v + 1, live, column, bitsPerRow)
     commitNext(path, v, live, tableSchema(path, v),
-      carriedStats(path, v, live), dvFiles(path, v), cdf = Some(Seq.empty),
+      carriedStats(path, v, live), dvEntries(path, v), cdf = Some(Seq.empty),
       bloomColsOverride = Some(bloomColsOf(path, v) :+ (column, bitsPerRow)),
       bloomExtra = refs)
   }
@@ -1519,18 +1541,20 @@ object Snapshots {
     }
   }
 
-  /** Drop from `withPos` (a [[readFilesAsWithPos]] frame) every row a
-    * DV marks dead. Not forced broadcast: a massive accumulated DV must
-    * be allowed to shuffle-anti-join; Spark broadcasts the usual small
-    * case on its own. */
+  /** Drop from `withPos` (a [[readFilesAsWithPos]] frame) every row the
+    * DV sidecars `dvs` mark dead, keeping `__file`/`__pos`. Not forced
+    * broadcast: a massive accumulated DV must be allowed to
+    * shuffle-anti-join; Spark broadcasts the usual small case on its
+    * own. */
   private def applyDv(spark: SparkSession, withPos: DataFrame,
-      dvs: Seq[String]): DataFrame = {
-    val dv = readDv(spark, dvs)
-    withPos.join(dv,
+      dvs: Seq[String]): DataFrame =
+    if (dvs.isEmpty) withPos
+    else {
+      val dv = readDv(spark, dvs)
+      withPos.join(dv,
         withPos("__file") === dv("__dv_file") && withPos("__pos") === dv("__dv_pos"),
         "left_anti")
-      .drop("__file", "__pos")
-  }
+    }
 
   /** Read `files` as LIVE at version `v`: under `v`'s recorded schema,
     * with `v`'s deletion vectors applied. Every consumer that means
@@ -1543,6 +1567,7 @@ object Snapshots {
     val dvs = dvFiles(path, v)
     if (dvs.isEmpty) readUnder(spark, path, v, files)
     else applyDv(spark, readFilesAsWithPos(spark, tableSchema(path, v), files), dvs)
+      .drop("__file", "__pos")
   }
 
   /** The physical name of logical column `name` at version `v`. */
@@ -1648,99 +1673,91 @@ object Snapshots {
     }
   }
 
-  /** One job over the batch: each partition counts its key TUPLES in
-    * place (float keys normalized as a grouping normalizes them), and
-    * the driver merges the per-partition counts as they arrive — max
-    * count > 1 ⟺ duplicate tuples — so no shuffle stage runs. At most
-    * `maxKeys + 1` tuples are held per partition or in the merge: past
-    * `maxKeys` the counts are dropped, an aggregate answers the
-    * duplicate verdict, and the summary is
-    * [[BatchKeySummary.overBudget]]. Lead keys are the tuples' leading
-    * key in its internal stats form. */
+  /** The batch key summary of a flat table's merge or key delete:
+    * [[keySummaries]] under one routing value. Past `maxKeys`, an
+    * aggregate answers the duplicate verdict and the summary is
+    * [[BatchKeySummary.overBudget]]. */
   private def batchKeySummary(ups: DataFrame, keyCols: Seq[String],
       keyType: org.apache.spark.sql.types.DataType, maxKeys: Long): BatchKeySummary = {
+    val judgeable = leadInternalOf(keyCols.head, keyType)._2
+    keySummaries(ups, lit(null).cast("string"), keyCols, keyType, maxKeys) match {
+      case (_, _, Some(m)) => m.getOrElse(null, BatchKeySummary(0L, false, Array.empty, judgeable))
+      case (_, nRows, None) =>
+        val dup = ups.groupBy(keyCols.map(c => col(s"`$c`")): _*).count()
+          .filter(col("count") > 1L).limit(1).collect().nonEmpty
+        BatchKeySummary(nRows, dup, Array.empty, judgeable, overBudget = true)
+    }
+  }
+
+  /** One job over the batch: each partition counts its (routing value,
+    * key TUPLE) pairs in place (float keys normalized as a grouping
+    * normalizes them), and the driver merges the per-partition counts
+    * as they arrive — max count > 1 ⟺ duplicate tuples — so no shuffle
+    * stage runs. `value` is a string column: the partition router's
+    * routing value ([[PartitionedSnapshots.route]]), a NULL literal for
+    * a flat table. At most `maxKeys + 1` pairs are held per partition
+    * or in the merge: past `maxKeys` the counts are dropped and the
+    * summaries are None. Returns the routing values seen (held
+    * whatever the budget: bounded by the layout's partition count), the
+    * batch's rows, and per value its summary; lead keys are the tuples'
+    * leading key in its internal stats form. */
+  private[sources] def keySummaries(ups: DataFrame, value: Column, keyCols: Seq[String],
+      keyType: org.apache.spark.sql.types.DataType, maxKeys: Long)
+      : (Set[String], Long, Option[Map[String, BatchKeySummary]]) = {
     import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+    import org.apache.spark.unsafe.types.UTF8String
+    import scala.collection.mutable
     val (leadInternal, judgeable) = leadInternalOf(keyCols.head, keyType)
-    val keys = ups.select(leadInternal.as("__k") +: keyCols.map(c => col(s"`$c`")): _*)
+    val keys = ups.select(value.as("__p") +: leadInternal.as("__k") +:
+      keyCols.map(c => col(s"`$c`")): _*)
     val attrs = keys.queryExecution.analyzed.output
     val normalized = attrs.map(org.apache.spark.sql.GraftSqlBridge.normalizeFloats)
     val cap = math.min(maxKeys, Int.MaxValue - 1L).toInt
     val counts = new java.util.HashMap[UnsafeRow, java.lang.Long]
+    val values = mutable.HashSet.empty[UTF8String]
     var nRows = 0L
     var over = false
     ups.sparkSession.sparkContext.runJob(keys.queryExecution.toRdd,
       (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
         val norm = UnsafeProjection.create(normalized, attrs)
         val m = new java.util.HashMap[UnsafeRow, java.lang.Long]
+        val vs = mutable.HashSet.empty[UTF8String]
         var n = 0L
         var full = false
         it.foreach { r =>
           n += 1
+          val p = r.getUTF8String(0)
+          if (!vs.contains(p)) vs += (if (p == null) null else p.clone())
           if (!full) {
             m.merge(norm(r).copy(), 1L, (a, b) => a + b)
             if (m.size > cap) { full = true; m.clear() }
           }
         }
-        (n, full, m.asScala.toArray.map { case (k, c) => (k, c.longValue) })
+        (n, full, vs.toArray, m.asScala.toArray.map { case (k, c) => (k, c.longValue) })
       },
-      (_: Int, part: (Long, Boolean, Array[(UnsafeRow, Long)])) => counts.synchronized {
-        nRows += part._1
-        over ||= part._2
-        if (!over) part._3.foreach { case (k, c) => counts.merge(k, c, (a, b) => a + b) }
-        if (over || counts.size > cap) { over = true; counts.clear() }
-      })
-    if (over) {
-      val dup = ups.groupBy(keyCols.map(c => col(s"`$c`")): _*).count()
-        .filter(col("count") > 1L).limit(1).collect().nonEmpty
-      BatchKeySummary(nRows, dup, Array.empty, judgeable, overBudget = true)
-    } else {
-      val toLead = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToScalaConverter(attrs.head.dataType)
-      BatchKeySummary(nRows, counts.values.asScala.exists(_ > 1L),
-        if (judgeable) counts.keySet.asScala.iterator
-          .map(k => toLead(k.get(0, attrs.head.dataType))).toArray.distinct
-        else Array.empty,
-        judgeable)
+      (_: Int, part: (Long, Boolean, Array[UTF8String], Array[(UnsafeRow, Long)])) =>
+        counts.synchronized {
+          nRows += part._1
+          values ++= part._3
+          over ||= part._2
+          if (!over) part._4.foreach { case (k, c) => counts.merge(k, c, (a, b) => a + b) }
+          if (over || counts.size > cap) { over = true; counts.clear() }
+        })
+    val leadType = attrs(1).dataType
+    val toLead = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(leadType)
+    // per value: (rows, max tuple count) and the distinct lead keys
+    val per = mutable.HashMap.empty[String, (Array[Long], mutable.HashSet[Any])]
+    if (!over) counts.forEach { (k, c) =>
+      val (n, leads) = per.getOrElseUpdate(if (k.isNullAt(0)) null
+        else k.getUTF8String(0).toString, (Array(0L, 0L), mutable.HashSet.empty[Any]))
+      n(0) += c; n(1) = math.max(n(1), c)
+      if (judgeable) leads += toLead(k.get(1, leadType))
     }
-  }
-
-  /** r16 — the shared partition router's ONE action
-    * ([[PartitionedSnapshots.route]], hive and hidden layouts alike):
-    * per routing `value` (a string column — the hive partition column or
-    * a hidden transform's value), the batch key summary (dup verdict +
-    * lead keys) — so the touched-value discovery AND every per-dir
-    * merge's own summary ride a single aggregate over the batch instead
-    * of 1 + 2·|dirs| actions. Collected size = Σ per-value distinct lead
-    * keys, exactly the rows the per-dir collects would have fetched
-    * anyway. A NULL value is a NULL key of the result. */
-  private[sources] def partitionedKeySummaries(updates: DataFrame,
-      value: org.apache.spark.sql.Column, keyCols: Seq[String],
-      keyType: org.apache.spark.sql.types.DataType)
-      : Map[String, BatchKeySummary] = {
-    val leadKey = keyCols.head
-    val (leadInternal, judgeable) = leadInternalOf(leadKey, keyType)
-    val part = value.as("__p")
-    val rows =
-      if (keyCols.size == 1) {
-        val g = if (judgeable) leadInternal else col(s"`$leadKey`")
-        updates.groupBy(part, g.as("__k"))
-          .agg(count(lit(1)).as("__n"))
-          .select(col("__p"), col("__k"), col("__n").as("__mx"),
-            col("__n")).collect()
-      } else {
-        updates.groupBy((part +: keyCols.map(c => col(s"`$c`"))): _*)
-          .agg(count(lit(1)).as("__cnt"))
-          .groupBy(col("__p"), leadInternal.as("__k"))
-          .agg(max(col("__cnt")).as("__mx"), sum(col("__cnt")).as("__n"))
-          .collect()
-      }
-    rows.groupBy(_.getString(0)).map { case (p, rs) =>
-      p -> BatchKeySummary(
-        rs.iterator.map(_.getLong(3)).sum,
-        rs.exists(_.getLong(2) > 1L),
-        if (judgeable) rs.map(_.get(1)) else Array.empty,
-        judgeable)
-    }
+    (values.map(v => if (v == null) null else v.toString).toSet, nRows,
+      if (over) None
+      else Some(per.map { case (p, (n, leads)) =>
+        p -> BatchKeySummary(n(0), n(1) > 1L, leads.toArray, judgeable) }.toMap))
   }
 
   /** Stat tags a key of `keyType` can be judged against — exactly the
@@ -1788,7 +1805,7 @@ object Snapshots {
   /** The per-commit compare budget for driver-side file discovery;
     * beyond it the distributed stats semi-join takes over (a huge
     * batch × a huge live set is executor work, not driver work). */
-  private def plannerTouchedMaxCompares(spark: SparkSession): Long =
+  private[sources] def plannerTouchedMaxCompares(spark: SparkSession): Long =
     spark.conf.get("spark.graft.merge.plannerTouched.maxCompares",
       "8000000").toLong
 
@@ -1929,7 +1946,7 @@ object Snapshots {
   private[graft] def commitAt(path: String, v: Int, files: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType],
       stats: Seq[String] = Seq.empty,
-      dv: Seq[String] = Seq.empty,
+      dv: Seq[DvEntry] = Seq.empty,
       cdf: Option[Seq[String]] = None,
       cdfFlag: Boolean = false,
       constraintsOverride: Option[Seq[(String, String)]] = None,
@@ -2040,7 +2057,7 @@ object Snapshots {
         txnLines ++
         cdf.map(fs => Seq(CdfOkHeader) ++
           fs.map(f => CdfHeader + canonical(f)).sorted).getOrElse(Seq.empty) ++
-        dv.map(f => DvHeader + canonical(f)).sorted ++
+        dv.map(_.line).sorted ++
         stats.sorted ++ files.map(canonical).sorted
       // delta-encode when the diff beats the snapshot: a small commit
       // to a huge table writes O(change), not O(live files). Every
@@ -2095,7 +2112,7 @@ object Snapshots {
   private[graft] def commit(path: String, files: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       stats: Seq[String] = Seq.empty,
-      dv: Seq[String] = Seq.empty,
+      dv: Seq[DvEntry] = Seq.empty,
       cdf: Option[Seq[String]] = None,
       cdfFlag: Boolean = false,
       constraintsOverride: Option[Seq[(String, String)]] = None,
@@ -2125,7 +2142,7 @@ object Snapshots {
   private[sources] def commitNext(path: String, base: Int, files: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType],
       stats: Seq[String] = Seq.empty,
-      dv: Seq[String] = Seq.empty,
+      dv: Seq[DvEntry] = Seq.empty,
       cdf: Option[Seq[String]] = None,
       cdfFlag: Boolean = false,
       constraintsOverride: Option[Seq[(String, String)]] = None,
@@ -2253,12 +2270,19 @@ object Snapshots {
     counts.groupMapReduce(_._1)(_._2)(_ + _)
   }
 
-  /** Which data files the DV sidecars `dvs` mark, with their dead-row
-    * counts (canonical paths). Sidecar positions are disjoint, so the
-    * counts are exact. */
-  private def dvMarks(spark: SparkSession, dvs: Seq[String]): Map[String, Long] =
-    valueCounts(readDv(spark, dvs).select("__dv_file"))
-      .groupMapReduce(e => canonical(e._1))(_._2)(_ + _)
+  /** Which data files the DV entries `dvs` mark, with their dead rows
+    * summed over the entries (canonical paths; sidecar positions are
+    * disjoint, so the counts are exact). Descriptors answer from the
+    * manifest; only sidecars written before descriptors are read, in
+    * one shuffle-free job. */
+  private def dvMarks(spark: SparkSession, dvs: Seq[DvEntry]): Map[String, Long] = {
+    val legacy = dvs.collect { case DvEntry(f, None) => f }
+    val read =
+      if (legacy.isEmpty) Nil
+      else valueCounts(readDv(spark, legacy).select("__dv_file")).toSeq
+        .map { case (f, n) => canonical(f) -> n }
+    (dvs.flatMap(_.marks.getOrElse(Map.empty)) ++ read).groupMapReduce(_._1)(_._2)(_ + _)
+  }
 
   /** The files among `cands` holding a row where `hit` is true. */
   private def filesMatching(spark: SparkSession, path: String, v: Int,
@@ -2304,31 +2328,31 @@ object Snapshots {
 
   /** Stage `doomed` (`__dv_file`, `__dv_pos` and the dead rows'
     * pre-images) as version `v + 1`'s DV sidecars; an empty set stages
-    * nothing. Which files each sidecar marks is recorded by its own
-    * write and memoized in [[dvMarkCache]]. */
-  private def stageDv(path: String, v: Int, doomed: DataFrame): Seq[String] = {
-    val staged = stageFiles(doomed, path, StatSpec.marking(doomed.schema, "__dv_file"),
-      skipEmpty = true)(n => s"v${v + 1}_dv_$n")
-    staged.foreach { case (f, w) => dvMarkCache.put(canonical(f), w.marks.map(canonical)) }
-    staged.map(_._1)
-  }
+    * nothing. Each sidecar comes with its descriptor: the files it
+    * marks and their dead rows, as its own write counted them. */
+  private def stageDv(path: String, v: Int, doomed: DataFrame): Seq[DvEntry] =
+    stageFiles(doomed, path, StatSpec.marking(doomed.schema, "__dv_file"),
+        skipEmpty = true)(n => s"v${v + 1}_dv_$n").map { case (f, w) =>
+      DvEntry(canonical(f), Some(w.marks.map { case (m, n) => canonical(m) -> n }))
+    }
 
   /** Version `v + 1`'s artifacts, staged overlapped (guide §2.6): the
     * data rows (with the stats their write records), the DV marks
     * and the change rows are independent writes over one evaluation.
-    * Returns (data files, their stat lines, DV refs, change-data refs —
-    * None when `cdf` is None, i.e. the table records no change data). */
+    * Returns (data files, their stat lines, DV entries, change-data refs
+    * — None when `cdf` is None, i.e. the table records no change data). */
   private def stageArtifacts(spark: SparkSession, path: String, v: Int,
       data: DataFrame, outSchema: Option[StructType],
       dv: Option[DataFrame] = None, cdf: Option[DataFrame] = None)
-      : (Seq[String], Seq[String], Seq[String], Option[Seq[String]]) = {
-    val thunks: Seq[(String, () => (Seq[String], Seq[String]))] =
-      Seq("data" -> (() => stageData(spark, data, outSchema, path, v + 1,
-        bucketSpecOf(path, v)))) ++
-        dv.map(d => "dv" -> (() => (stageDv(path, v, d), Seq.empty[String]))) ++
-        cdf.map(c => "cdf" -> (() => (stageCdf(path, v, c), Seq.empty[String])))
+      : (Seq[String], Seq[String], Seq[DvEntry], Option[Seq[String]]) = {
+    val thunks: Seq[(String, () => (Seq[String], Seq[String], Seq[DvEntry]))] =
+      Seq("data" -> (() => {
+        val (fs, stats) = stageData(spark, data, outSchema, path, v + 1, bucketSpecOf(path, v))
+        (fs, stats, Nil) })) ++
+        dv.map(d => "dv" -> (() => (Nil, Nil, stageDv(path, v, d)))) ++
+        cdf.map(c => "cdf" -> (() => (stageCdf(path, v, c), Nil, Nil)))
     val arts = Par.map(spark, thunks)(t => t._1 -> t._2()).toMap
-    (arts("data")._1, arts("data")._2, arts.get("dv").fold(Seq.empty[String])(_._1),
+    (arts("data")._1, arts("data")._2, arts.get("dv").fold(Seq.empty[DvEntry])(_._3),
       arts.get("cdf").map(_._1))
   }
 
@@ -2341,7 +2365,7 @@ object Snapshots {
   private def commitDml(path: String, v: Int)(touched: Seq[String] = Nil,
       staged: Seq[String] = Nil, stagedStats: Seq[String] = Nil,
       schema: Option[StructType] = tableSchema(path, v),
-      dv: Seq[String] = dvFiles(path, v),
+      dv: Seq[DvEntry] = dvEntries(path, v),
       cdf: Option[Seq[String]] = Some(Seq.empty),
       bloom: Seq[String] = Nil, marks: Seq[(String, Long)] = Nil): Int = {
     val gone = touched.map(canonical).toSet
@@ -2370,7 +2394,7 @@ object Snapshots {
         else tableSchema(path, base).fold(outSchema)(w => StructType(w.fields ++
           outSchema.fields.filterNot(f => w.fieldNames.contains(f.name))))
       if (commitAt(path, base + 1, retained ++ staged, Some(schema),
-          carriedStats(path, base, retained) ++ stagedStats, dvFiles(path, base),
+          carriedStats(path, base, retained) ++ stagedStats, dvEntries(path, base),
           cdf = cdf, bloomExtra = bloom, txn = marks)) return base + 1
       attempt += 1
       if (attempt > maxRetries)
@@ -2541,7 +2565,7 @@ object Snapshots {
       s"restore: no version $toV at $path (vacuumed or never committed)")
     val live = liveFiles(path, toV)
     commitNext(path, v, live, tableSchema(path, toV),
-      carriedStats(path, toV, live), dvFiles(path, toV))
+      carriedStats(path, toV, live), dvEntries(path, toV))
   }
 
   /** A29 — shallow CLONE (the Delta SHALLOW CLONE pattern): `dst`
@@ -2571,7 +2595,7 @@ object Snapshots {
     // then auto-indexes its staged files and keeps incremental ZORDER
     // viable, and publish can remap both back to main
     commit(dst, live, tableSchema(src, v), carriedStats(src, v, live),
-      dvFiles(src, v), cdfFlag = cdfEnabled(src, v),
+      dvEntries(src, v), cdfFlag = cdfEnabled(src, v),
       constraintsOverride = Some(constraintsOf(src, v)),
       clusterOverride = clusterStateOf(src, v),
       bloomColsOverride = Some(bloomColsOf(src, v)),
@@ -2597,8 +2621,9 @@ object Snapshots {
     * property carries, so future commits re-index — sidecars are a
     * rebuildable cache, not state). DV-carrying versions MATERIALIZE
     * during the copy (r13, the r12 verdict's item 5): files with dead
-    * positions fold their deletion vectors into freshly-written clone
-    * files — one distributed pass over exactly the touched files, like
+    * positions (named by the DV descriptors, no probe) fold their
+    * deletion vectors into freshly-written clone files — one
+    * distributed pass over exactly the touched files, like
     * [[reconcileDV]] but landing in the clone — while untouched files
     * still hard-link; the clone's v0 never carries a DV ref. The SOURCE
     * keeps its DVs and its versions untouched. Materialized files get
@@ -2611,12 +2636,10 @@ object Snapshots {
     require(currentVersion(dst) < 0, s"clone: $dst already versioned")
     Files.createDirectories(Paths.get(dst))
     val live = liveFiles(src, v).map(canonical)
-    val dvs = dvFiles(src, v)
-    // files carrying live dead-positions — these cannot share bytes
-    // with the source; everything else links as before
+    // files carrying live dead-positions (the DV descriptors say which)
+    // — these cannot share bytes with the source; everything else links
     val touched: Set[String] =
-      if (dvs.isEmpty) Set.empty
-      else dvMarks(SparkSession.active, dvs).keySet.intersect(live.toSet)
+      dvMarks(SparkSession.active, dvEntries(src, v)).keySet.intersect(live.toSet)
     val taken = scala.collection.mutable.Set.empty[String]
     def copyIn(f: String): String = {
       val srcP = Paths.get(f)
@@ -3013,8 +3036,8 @@ object Snapshots {
     * lands deterministically in the spec), or, with `mor`,
     * [[mergeVersionedDV]]'s merge-on-read commit. `preSummary` is the
     * partition router's key summary for this slice (see
-    * [[partitionedKeySummaries]]): the merge then runs no summary
-    * action of its own. */
+    * [[keySummaries]]): the merge then runs no summary action of its
+    * own. */
   private[graft] def mergeVersionedOCC(spark: SparkSession, path: String,
       updatesIn: DataFrame, keyCols: Seq[String], maxRetries: Int,
       beforeCommit: () => Unit,
@@ -3149,8 +3172,9 @@ object Snapshots {
       // above cannot see it — but if its dead positions fall in a file
       // THIS merge rewrote (from the pre-DV image), rebasing would
       // resurrect the freshly deleted rows. Conflict, not commute.
-      val newDvs = dvFiles(path, w).toSet -- dvFiles(path, v).toSet
-      if (newDvs.nonEmpty && dvMarks(spark, newDvs.toSeq).keys.exists(touchedSet.contains))
+      val readDvs = dvFiles(path, v).toSet
+      val newDvs = dvEntries(path, w).filterNot(e => readDvs.contains(e.sidecar))
+      if (dvMarks(spark, newDvs).keys.exists(touchedSet.contains))
         throw new java.util.ConcurrentModificationException(
           s"merge on $path conflicts with version $w: a concurrent DV " +
             "delete marked rows dead in a file this merge rewrote")
@@ -3467,18 +3491,6 @@ object Snapshots {
       (_, w) => enforceConstraints(path, w, df) }
   }
 
-  // r16 — which data files does a DV sidecar mark? The set is
-  // immutable once the sidecar is written; the writers learn it FREE
-  // (the sidecar's own write records its distinct __dv_file values) and
-  // memoize it here, so the auto-reconcile that typically follows in
-  // the same driver skips its touched-file discovery job. A sidecar
-  // not in the memo (another process wrote it) falls back to the one
-  // small read — the memo is a
-  // per-immutable-artifact shortcut (the dvRowCountCache pattern),
-  // never a result cache.
-  private val dvMarkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Set[String]]
-
   /** The FOOTER of a local parquet file — pure driver-side metadata
     * I/O, no Spark job. */
   private def parquetFooter(file: String)
@@ -3527,17 +3539,8 @@ object Snapshots {
     * (`__file`, `__pos`) kept: existing DVs applied, so an
     * already-dead row is never re-marked and DV files stay disjoint. */
   private def livePositions(spark: SparkSession, path: String, v: Int,
-      files: Seq[String]): DataFrame = {
-    val withPos = readFilesAsWithPos(spark, tableSchema(path, v), files)
-    val dvs = dvFiles(path, v)
-    if (dvs.isEmpty) withPos
-    else {
-      val dv = readDv(spark, dvs)
-      withPos.join(dv,
-        withPos("__file") === dv("__dv_file") && withPos("__pos") === dv("__dv_pos"),
-        "left_anti")
-    }
-  }
+      files: Seq[String]): DataFrame =
+    applyDv(spark, readFilesAsWithPos(spark, tableSchema(path, v), files), dvFiles(path, v))
 
   /** The merge-on-read delete shared by the two DV delete forms: the
     * live rows of `files` that `doomedOf` keeps are staged ONCE (full
@@ -3561,8 +3564,8 @@ object Snapshots {
     // the combined file always carries the pre-images (free — it IS
     // the deletion vector); advertise it as change data only when the
     // table property is on, like the other writers
-    else commitDml(path, v)(dv = dvFiles(path, v) ++ staged,
-      cdf = if (cdfEnabled(path, v)) Some(staged) else None, marks = marks)
+    else commitDml(path, v)(dv = dvEntries(path, v) ++ staged,
+      cdf = if (cdfEnabled(path, v)) Some(staged.map(_.sidecar)) else None, marks = marks)
   }
 
   /** A30 — MERGE-ON-READ DELETE: rows matching `predicate` are marked
@@ -3665,7 +3668,7 @@ object Snapshots {
           pairs.select(allCols.map(c => col(s"__pre.`$c`").as(c)): _*)
             .withColumn("change_type", lit("update_preimage")))))
     commitDml(path, v)(staged = staged, stagedStats = stagedStats,
-      dv = dvFiles(path, v) ++ dvStaged, cdf = cdfStaged,
+      dv = dvEntries(path, v) ++ dvStaged, cdf = cdfStaged,
       bloom = maybeBloom(spark, path, v, staged))
   }
 
@@ -3793,32 +3796,28 @@ object Snapshots {
           .unionByName(asRows(changed, "__pre")
             .withColumn("change_type", lit("update_preimage")))))
     commitDml(path, v)(staged = staged, stagedStats = stagedStats,
-      schema = Some(outSchema), dv = dvFiles(path, v) ++ dvStaged,
+      schema = Some(outSchema), dv = dvEntries(path, v) ++ dvStaged,
       cdf = cdfStaged, bloom = maybeBloom(spark, path, v, staged), marks = marks)
   }
 
   /** A30 — RECONCILE: fold the accumulated deletion vectors back into
     * plain files (the OPTIMIZE step of merge-on-read). Rewrites ONLY
-    * the live files that actually carry dead positions, drops every DV
-    * ref from the manifest (entries for untouched files cannot exist —
-    * they were either rewritten here or already inert), and commits.
+    * the live files that actually carry dead positions — the DV
+    * descriptors name them, so finding them runs no job whichever
+    * driver wrote the sidecars — drops every DV ref from the manifest
+    * (entries for untouched files cannot exist — they were either
+    * rewritten here or already inert), and commits.
     * The live row multiset is unchanged, so the A20 feed across this
     * version is empty and reads simply stop paying the anti join.
     * Returns the new version (current if there are no DVs).
     */
   def reconcileDV(spark: SparkSession, path: String): Int = {
     val v = headOf(path)
-    val dvs = dvFiles(path, v)
+    val dvs = dvEntries(path, v)
     if (dvs.isEmpty) return v
     val liveSet = liveFiles(path, v).map(canonical).toSet
-    // files with live dead-positions: answered from the dvMarkCache
-    // memo when every sidecar was written by THIS driver (the
-    // steady-state auto-reconcile case — zero jobs), else the one
-    // shuffle-free probe (∝ distinct files ever DV-touched)
-    val cached = dvs.map(f => Option(dvMarkCache.get(canonical(f))))
-    val touched =
-      (if (cached.forall(_.isDefined)) cached.flatMap(_.get).distinct
-       else dvMarks(spark, dvs).keys.toSeq).filter(liveSet.contains).toIndexedSeq
+    // files with live dead-positions, from the DV descriptors
+    val touched = dvMarks(spark, dvs).keys.filter(liveSet.contains).toIndexedSeq
     if (touched.isEmpty) // all entries inert: drop the refs, move on
       return commitDml(path, v)(dv = Nil)
     // through the shared bucket-aware staging: a reconcile on a
@@ -3987,7 +3986,7 @@ object Snapshots {
     val retained = live.filter(f => clustered.contains(canonical(f)))
     commitNext(path, v, retained ++ staged, tableSchema(path, v),
       carriedStats(path, v, retained) ++ stats,
-      dvFiles(path, v), cdf = Some(Seq.empty),
+      dvEntries(path, v), cdf = Some(Seq.empty),
       clusterOverride = Some((cols, retained ++ staged)))
   }
 
@@ -4095,18 +4094,18 @@ object Snapshots {
   }
 
   /** Rows of the SHARED files whose positions appear in `diffDvs` (the
-    * DV files one feed endpoint has and the other doesn't): the
+    * DV entries one feed endpoint has and the other doesn't): the
     * merge-on-read rows that changed liveness without any file
-    * changing. Reads ONLY the shared files the diff entries actually
-    * hit — cost tracks the DV delta, preserving the feed's
-    * changed-data-only property. */
+    * changing. Reads ONLY the shared files the diff entries hit, which
+    * their descriptors name — cost tracks the DV delta, preserving the
+    * feed's changed-data-only property. */
   private def dvDiffRows(spark: SparkSession,
       hint: Option[org.apache.spark.sql.types.StructType],
-      shared: Set[String], diffDvs: Seq[String]): Option[DataFrame] = {
+      shared: Set[String], diffDvs: Seq[DvEntry]): Option[DataFrame] = {
     if (diffDvs.isEmpty || shared.isEmpty) return None
     val hit = dvMarks(spark, diffDvs).keys.filter(shared.contains).toIndexedSeq
     if (hit.isEmpty) return None
-    val dv = readDv(spark, diffDvs)
+    val dv = readDv(spark, diffDvs.map(_.sidecar))
     val rows = readFilesAsWithPos(spark, hint, hit)
     Some(rows.join(dv,
         rows("__file") === dv("__dv_file") && rows("__pos") === dv("__dv_pos"),
@@ -4227,21 +4226,24 @@ object Snapshots {
     def readFiles(fs: Set[String], dvs: Seq[String]): Option[DataFrame] =
       if (fs.isEmpty) None
       else if (dvs.isEmpty) Some(readFilesAs(spark, hint, fs.toSeq))
-      else Some(applyDv(spark, readFilesAsWithPos(spark, hint, fs.toSeq), dvs))
-    val dvA = dvFiles(path, fromV)
-    val dvB = dvFiles(path, toV)
+      else Some(applyDv(spark, readFilesAsWithPos(spark, hint, fs.toSeq), dvs)
+        .drop("__file", "__pos"))
+    val dvA = dvEntries(path, fromV)
+    val dvB = dvEntries(path, toV)
+    def minus(x: Seq[DvEntry], y: Seq[DvEntry]): Seq[DvEntry] = {
+      val ys = y.map(_.sidecar).toSet
+      x.filterNot(e => ys.contains(e.sidecar))
+    }
     // merge-on-read changes live in SHARED files the file diff cannot
     // see: DV entries added in the window are deletes (pre-only rows —
     // disjoint from dvA by construction, so they were live at fromV);
     // entries REMOVED (a restore to a pre-DV version) are re-inserts
     val shared = a.intersect(b)
-    val preExtra = dvDiffRows(spark, hint, shared,
-      (dvB.toSet -- dvA.toSet).toSeq)
-    val postExtra = dvDiffRows(spark, hint, shared,
-      (dvA.toSet -- dvB.toSet).toSeq)
-    val preOpt = (readFiles(a -- b, dvA).toSeq ++ preExtra)
+    val preExtra = dvDiffRows(spark, hint, shared, minus(dvB, dvA))
+    val postExtra = dvDiffRows(spark, hint, shared, minus(dvA, dvB))
+    val preOpt = (readFiles(a -- b, dvA.map(_.sidecar)).toSeq ++ preExtra)
       .reduceOption(_.unionByName(_))
-    val postOpt = (readFiles(b -- a, dvB).toSeq ++ postExtra)
+    val postOpt = (readFiles(b -- a, dvB.map(_.sidecar)).toSeq ++ postExtra)
       .reduceOption(_.unionByName(_))
     // schema from the DIFF reads (a full-version read would touch the
     // whole live set and break the changed-files-only cost property);

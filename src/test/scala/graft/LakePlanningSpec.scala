@@ -324,7 +324,9 @@ class LakePlanningSpec extends GraftSuite {
       .forall { case (p: Int, w: Int) => p > w }, (within, past))
   }
 
-  test("rowCount on a DV version runs one job") {
+  /** A table over keys 0..199 in 4 files whose v1 is a MoR merge: its
+    * path and v1's model. */
+  private def dvTable(): (String, Model) = {
     val path = Files.createTempDirectory("lake_plan_count").toString + "/t"
     val base = rowsOf(0L until 200L, "v")
     frame(base).repartition(4).write.parquet(path)
@@ -332,9 +334,63 @@ class LakePlanningSpec extends GraftSuite {
     val mor = rowsOf((50L until 200L by 15L) ++ (210L until 214L), "m")
     Snapshots.mergeVersionedDV(spark, path, frame(mor), "k")
     assert(Snapshots.dvFiles(path, 1).nonEmpty)
+    (path, upsert(upsert(Map.empty, base), mor))
+  }
+
+  test("rowCount and DESCRIBE DETAIL on a DV version run no job") {
+    val (path, model) = dvTable()
     val (n, jobs) = jobsOf(Snapshots.rowCount(spark, path, 1))
-    assert(n.contains(upsert(upsert(Map.empty, base), mor).size.toLong))
-    assert(jobs == 1)
+    assert(n.contains(model.size.toLong))
+    assert(jobs == 0)
+    val (detail, dJobs) = jobsOf(graft.plans.LakeDetailCommand(path).run(spark))
+    assert(detail.head.getLong(3) == model.size.toLong)
+    assert(dJobs == 0)
+  }
+
+  test("a deep clone of a DV version runs 2 jobs and lands the model") {
+    val (path, model) = dvTable()
+    val dst = Files.createTempDirectory("lake_plan_clone").toString + "/t"
+    val (_, jobs) = jobsOf(Snapshots.cloneDeep(path, dst, 1))
+    assert(Snapshots.dvFiles(dst, 0).isEmpty)
+    assert(asModel(Snapshots.read(spark, dst)) == model)
+    assert(jobs == 2)
+  }
+
+  test("a routed merge past the key budget lets each slice summarize itself") {
+    // two partition dirs (grp g0, g1) of one file each; each batch routes
+    // 15 keys to each dir, so a budget of 20 holds one slice's keys but
+    // not the batch's 30 (value, key) pairs
+    val base = rowsOf(0L until 200L, "v")
+    val batch = (0L until 20L) ++ (200L until 210L)
+    def routed(): String = {
+      val path = Files.createTempDirectory("lake_plan_routed").toString + "/t"
+      PartitionedSnapshots.init(spark, path, frame(base).coalesce(1), "grp")
+      PartitionedSnapshots.partitions(path).foreach { g =>
+        val d = PartitionedSnapshots.partitionDir(path, g)
+        assert(Snapshots.liveFiles(d, Snapshots.currentVersion(d)).size == 1) }
+      path
+    }
+    def run(maxCompares: String): (Int, Int) =
+      withConf("spark.graft.merge.plannerTouched.maxCompares" -> maxCompares) {
+        val counts = Seq(false, true).map { mor =>
+          val path = routed()
+          val rows = rowsOf(batch, if (mor) "m" else "c")
+          val (_, jobs) = jobsOf(PartitionedSnapshots.mergePartitioned(spark, path,
+            frame(rows), "k", "grp", mor))
+          assert(asModel(PartitionedSnapshots.read(spark, path, "grp")) ==
+            upsert(upsert(Map.empty, base), rows), (maxCompares, mor))
+          // duplicate keys still refuse past the budget
+          val dup = intercept[IllegalArgumentException](PartitionedSnapshots
+            .mergePartitioned(spark, path, frame(rowsOf(Seq(4L, 4L, 9L, 11L), "d")),
+              "k", "grp", mor))
+          assert(dup.getMessage.contains("duplicate 'k' keys in the source"))
+          jobs
+        }
+        (counts(0), counts(1))
+      }
+    val within = run("8000000")
+    val past = run("20")
+    assert(past._1 > within._1 && past._2 > within._2, (within, past))
   }
 
   test("a restarted AvailableNow drain lands the model; its re-init getBatch adds no job") {

@@ -94,8 +94,8 @@ class MergeActionTrimSpec extends GraftSuite {
     assert(rows.length == 100 && rows(99).getDouble(1) == -1.0)
   }
 
-  test("reconcileDV folds exactly the DV-marked files after an " +
-      "in-session MoR merge (dvMark memo path)") {
+  test("reconcileDV folds exactly the files a MoR merge's DV " +
+      "descriptors name") {
     val dir = tmp("r16_rec")
     Seq.tabulate(50)(i => (i.toLong, i * 1.0)).toDF("k", "x")
       .repartitionByRange(2, col("k"))

@@ -1384,11 +1384,29 @@ class SnapshotsSpec extends GraftSuite {
     // a DV delete kills k=7 in that same file. Rebasing would publish
     // the pre-DV image of the file — refusal is the only sound outcome.
     val up = Seq((5L, "UP5", 1L)).toDF("k", "payload", "gen")
-    intercept[java.util.ConcurrentModificationException] {
-      Snapshots.mergeVersionedOCC(spark, dir, up, Seq("k"), maxRetries = 5,
-        beforeCommit = () =>
-          Snapshots.deleteVersionedDV(spark, dir, col("k") === 7L))
+    // jobs the merge submits once the DV delete has landed: the clash
+    // check reads the winner's DV descriptor, so none
+    val sc = spark.sparkContext
+    val after = s"occ-dv-${java.util.UUID.randomUUID()}"
+    val jobsAfter = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == after)
+          jobsAfter.incrementAndGet()
     }
+    sc.addSparkListener(listener)
+    try intercept[java.util.ConcurrentModificationException] {
+      Snapshots.mergeVersionedOCC(spark, dir, up, Seq("k"), maxRetries = 5,
+        beforeCommit = () => {
+          Snapshots.deleteVersionedDV(spark, dir, col("k") === 7L)
+          sc.setJobGroup(after, after)
+        })
+    } finally {
+      org.apache.spark.ListenerBusProbe.drain(sc)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobsAfter.get == 0)
     // the DV delete won; the merge is absent; k=7 stays dead
     val m = Snapshots.read(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
